@@ -127,7 +127,7 @@ object Verify {
     spark.conf.set("graft.lsh.oracleGated", "true")
     // Probe passthrough (r15): -Dgraft.* JVM flags land in the session
     // conf so paired probes can flip query-shape toggles
-    // (graft.zipf.sliced, graft.knn.rebind) from jrun without code
+    // (e.g. graft.zipf.sliced) from jrun without code
     // edits. The driver passes no such flags, so the official gate is
     // unaffected; a probe that overrides oracleGated does so knowingly.
     sys.props.toSeq.filter(_._1.startsWith("graft."))

@@ -1,33 +1,29 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.ImperativeAggregate
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
-/** `topk_by(id, score, k)` — per-group top-k as a native distributive
+/** `topk_by(id, score, k)` — per-group top-k as a distributive
   * aggregate: keeps the k best (id, score) entries under the ordering
   * (score DESC, id ASC) and returns them rank-ordered as
-  * array<struct<id bigint, score double>>.
+  * array<struct<id bigint, score double>>. Ties past position k are
+  * dropped by id, so the result equals row_number over
+  * (score desc, id asc) filtered to rn <= k.
   *
-  * The scale story (SURVEY §8.4, round 14 verdict task 3): d54's
-  * per-node top-5 was a row_number Window, and a Window — even with
-  * Spark's partial WindowGroupLimit truncating to k before the
-  * exchange — must SORT every partition by (group, score, id) first.
-  * An aggregate needs no sort at all: map-side partials fold each
-  * input row into an O(k) buffer (linear pass, k tiny), the exchange
-  * moves ≤k entries per (group, partition), and the final merge is a
-  * k-way list merge. Same output, sort deleted — IF the probe agrees
-  * (ObjectHashAggregate falls back to sort-based past
-  * spark.sql.objectHashAggregate.sortBased.fallbackThreshold in-memory
-  * groups, where the fallback sorts by GROUP KEY only — still cheaper
-  * rows than the Window's full sort, but measured, not assumed).
-  *
-  * Tie semantics replicate row_number over (score desc, id asc)
-  * exactly: ties past position k are dropped deterministically by id.
+  * Buffer layout (2k + 1 fixed-width fields from the buffer offset):
+  * `n: int` (entries held, <= k), then `id[0..k)` longs, then
+  * `score[0..k)` doubles. Slots [0, n) are held rank-ordered; slots
+  * past n are unread. Every field is a mutable fixed-width type, so
+  * Spark plans this as a HashAggregate over UnsafeRow buffers: map-side
+  * partials fold each row into O(k) slots, the shuffle moves the
+  * buffers as plain UnsafeRow bytes, and the final merge is a k-way
+  * sorted insert. HashAggregate has no group-count fallback (only a
+  * memory-pressure spill), so no sort is planned at any group count.
   */
 case class TopKByScore(
     id: Expression,
@@ -35,7 +31,7 @@ case class TopKByScore(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKByScore.Buf] {
+  extends ImperativeAggregate {
 
   require(k > 0 && k <= 1024, "topk_by: k must be in [1, 1024]")
 
@@ -46,68 +42,85 @@ case class TopKByScore(
     StructField("score", DoubleType, nullable = false))), containsNull = false)
   override def prettyName: String = "topk_by"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     if (id.dataType == LongType && score.dataType == DoubleType) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      TypeCheckResult.TypeCheckSuccess
     } else {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      TypeCheckResult.TypeCheckFailure(
         s"topk_by requires (bigint id, double score), got " +
           s"(${id.dataType.catalogString}, ${score.dataType.catalogString})")
     }
 
-  override def createAggregationBuffer(): TopKByScore.Buf = new TopKByScore.Buf(k)
+  override val aggBufferAttributes: Seq[AttributeReference] =
+    AttributeReference("n", IntegerType, nullable = false)() +:
+      (Seq.tabulate(k)(j => AttributeReference(s"id[$j]", LongType, nullable = false)()) ++
+        Seq.tabulate(k)(j => AttributeReference(s"score[$j]", DoubleType, nullable = false)()))
+  override def aggBufferSchema: StructType = DataTypeUtils.fromAttributes(aggBufferAttributes)
+  override val inputAggBufferAttributes: Seq[AttributeReference] =
+    aggBufferAttributes.map(_.newInstance())
 
-  override def update(buf: TopKByScore.Buf, input: InternalRow): TopKByScore.Buf = {
+  override def initialize(buf: InternalRow): Unit = {
+    val o = mutableAggBufferOffset
+    buf.setInt(o, 0)
+    var j = 0
+    while (j < k) {
+      buf.setLong(o + 1 + j, 0L)
+      buf.setDouble(o + 1 + k + j, 0.0)
+      j += 1
+    }
+  }
+
+  override def update(buf: InternalRow, input: InternalRow): Unit = {
     val i = id.eval(input)
     val s = score.eval(input)
     if (i != null && s != null)
-      buf.insert(i.asInstanceOf[Long], s.asInstanceOf[Double])
-    buf
+      insert(buf, mutableAggBufferOffset, i.asInstanceOf[Long], s.asInstanceOf[Double])
   }
 
-  override def merge(buf: TopKByScore.Buf, other: TopKByScore.Buf): TopKByScore.Buf = {
+  override def merge(buf: InternalRow, other: InternalRow): Unit = {
+    val o = inputAggBufferOffset
+    val n = other.getInt(o)
     var j = 0
-    while (j < other.size) {
-      buf.insert(other.ids(j), other.scores(j))
+    while (j < n) {
+      insert(buf, mutableAggBufferOffset, other.getLong(o + 1 + j), other.getDouble(o + 1 + k + j))
       j += 1
     }
-    buf
   }
 
-  override def eval(buf: TopKByScore.Buf): Any = {
-    val out = new Array[Any](buf.size)
+  override def eval(buf: InternalRow): Any = {
+    val o = mutableAggBufferOffset
+    val n = buf.getInt(o)
+    val out = new Array[Any](n)
     var j = 0
-    while (j < buf.size) {
-      out(j) = new GenericInternalRow(Array[Any](buf.ids(j), buf.scores(j)))
+    while (j < n) {
+      out(j) = new GenericInternalRow(Array[Any](buf.getLong(o + 1 + j), buf.getDouble(o + 1 + k + j)))
       j += 1
     }
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: TopKByScore.Buf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    var j = 0
-    while (j < buf.size) {
-      out.writeLong(buf.ids(j))
-      out.writeDouble(buf.scores(j))
-      j += 1
-    }
-    out.flush()
-    bos.toByteArray
-  }
+  /** true iff (s1, i1) ranks strictly better than (s2, i2). */
+  @inline private def better(i1: Long, s1: Double, i2: Long, s2: Double): Boolean =
+    s1 > s2 || (s1 == s2 && i1 < i2)
 
-  override def deserialize(bytes: Array[Byte]): TopKByScore.Buf = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new TopKByScore.Buf(k)
-    var j = 0
-    while (j < n) {
-      buf.insert(in.readLong(), in.readDouble())
-      j += 1
+  /** Sorted insert into the slots at offset `o`. k is tiny (5 for
+    * d54), so a linear shift beats heap bookkeeping, and a row worse
+    * than the current k-th exits after one comparison with the tail.
+    * Duplicate (id, score) entries are kept, as row_number keeps them. */
+  private def insert(buf: InternalRow, o: Int, i: Long, s: Double): Unit = {
+    val n = buf.getInt(o)
+    val ids = o + 1
+    val scores = o + 1 + k
+    if (n == k && !better(i, s, buf.getLong(ids + k - 1), buf.getDouble(scores + k - 1))) return
+    var p = if (n == k) k - 1 else n
+    while (p > 0 && better(i, s, buf.getLong(ids + p - 1), buf.getDouble(scores + p - 1))) {
+      buf.setLong(ids + p, buf.getLong(ids + p - 1))
+      buf.setDouble(scores + p, buf.getDouble(scores + p - 1))
+      p -= 1
     }
-    buf
+    buf.setLong(ids + p, i)
+    buf.setDouble(scores + p, s)
+    if (n < k) buf.setInt(o, n + 1)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKByScore =
@@ -117,34 +130,4 @@ case class TopKByScore(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TopKByScore =
     copy(id = newChildren(0), score = newChildren(1))
-}
-
-object TopKByScore {
-  /** Sorted-insert buffer: entries held rank-ordered (score desc, id
-    * asc), capped at k. k is tiny (5 for d54), so the linear
-    * shift-insert beats any heap bookkeeping; a row worse than the
-    * current k-th exits after ONE comparison against the tail. */
-  final class Buf(k: Int) {
-    val ids = new Array[Long](k)
-    val scores = new Array[Double](k)
-    var size = 0
-
-    /** true iff (s1, i1) ranks strictly better than (s2, i2). */
-    @inline private def better(i1: Long, s1: Double, i2: Long, s2: Double): Boolean =
-      s1 > s2 || (s1 == s2 && i1 < i2)
-
-    def insert(i: Long, s: Double): Unit = {
-      if (size == k && !better(i, s, ids(size - 1), scores(size - 1))) return
-      var p = if (size == k) size - 1 else size
-      // shift worse entries right; duplicates of an existing (id,
-      // score) entry are kept (the Window counted duplicates too —
-      // callers feed distinct pair streams, so none arise in practice)
-      while (p > 0 && better(i, s, ids(p - 1), scores(p - 1))) {
-        if (p < k) { ids(p) = ids(p - 1); scores(p) = scores(p - 1) }
-        p -= 1
-      }
-      if (p < k) { ids(p) = i; scores(p) = s }
-      if (size < k) size += 1
-    }
-  }
 }

@@ -50,19 +50,9 @@ object Pipeline {
       df.repartition(s.sparkContext.defaultParallelism)
     else df
 
-  /** The documents-with-words frame every text operator starts from.
-    * `graft.words.shared=true` (probe toggle, r15 verdict task 7)
-    * routes it through the session helper registry so a multi-query
-    * session tokenizes the corpus ONCE (persisted) instead of once per
-    * query; default false = byte-identical plans to the historical
-    * per-query derivation, because Verify/Bench clearCache() between
-    * queries makes a persisted frame recompute-on-read there anyway —
-    * the sharing only pays inside one session's query stream.
-    * Ship-or-reject decided by the ProbeWordsFam paired probe. */
+  /** The documents-with-words frame every text operator starts from. */
   private def wordsOf(s: SparkSession, dir: String): DataFrame =
-    if (s.conf.get("graft.words.shared", "false").toBoolean)
-      cachedHelper(s, dir, "docWords")(withWords(T(s, dir, "documents")))
-    else withWords(T(s, dir, "documents"))
+    withWords(T(s, dir, "documents"))
 
   /** [[wordsOf]] with the unsplittable-scan fix ([[parallelScan]])
     * under the tokenize projection. NOT the default: the blanket wrap
@@ -74,12 +64,9 @@ object Pipeline {
     * scale-right default — at 100 TB scans split naturally and
     * parallelScan is a no-op anyway). */
   private def wideWordsOf(s: SparkSession, dir: String): DataFrame =
-    if (s.conf.get("graft.words.shared", "false").toBoolean)
-      cachedHelper(s, dir, "docWordsWide")(
-        withWords(parallelScan(s, T(s, dir, "documents"))))
-    else withWords(parallelScan(s, T(s, dir, "documents")))
+    withWords(parallelScan(s, T(s, dir, "documents")))
 
-  /** [[withShingles]] over the (possibly session-shared) words frame. */
+  /** [[withShingles]] over the words frame. */
   private def shinglesOf(s: SparkSession, dir: String): DataFrame =
     withShinglesFromWords(wordsOf(s, dir))
 
@@ -707,94 +694,19 @@ object Pipeline {
     }
   }
 
-  /** Per-node top-5 neighbors (rank-ordered, ties by nid asc) over a
-    * symmetric (vec_id, nid, cos_sim) edge stream — the ONE spelling
-    * d54 and [[lshKnnEdges]] share, switchable between two plans with
-    * identical output (round 14, verdict task 3):
-    *  - topk_by aggregate (default): map-side partials fold each edge
-    *    into an O(5) buffer, the exchange moves ≤5 entries per
-    *    (node, partition), final merge is a 5-way list merge — NO sort
-    *    anywhere. This is SURVEY §8.4's fix for d54's cold-path
-    *    per-partition sort ahead of the partial WindowGroupLimit.
-    *  - row_number Window (graft.knn.topkAgg=false): the r13 shape,
-    *    kept for paired probing.
-    * Tie order (cos_sim desc, nid asc) is identical in both, so the
-    * emitted rows and ranks are bit-equal (spec-pinned). */
-  private def knnTop5(s: SparkSession, bi: DataFrame): DataFrame =
-    if (knnTopkAgg(s)) {
-      val top = knnTop5Child(s, bi)
-      // re-bind the n×5-row result to the CALLER's session (r14
-      // advisor: d54 handed callers an s2-bound frame, which cannot
-      // join caller-session frames and pinned the throwaway session
-      // alive) — every knnTop5 caller now gets s-bound frames, the
-      // lshKnnEdges treatment hoisted to the one shared spelling.
-      // This OUTPUT hop must stay an .rdd round-trip, NEVER a plan
-      // transplant: a lazy plan executes under whichever session the
-      // caller finally actions it on, so transplanting back to s would
-      // silently run the agg under s's DEFAULT fallbackThreshold — the
-      // exact degradation the child session exists to prevent. The
-      // .rdd boundary pins the agg's execution under s2, and only n×5
-      // id rows pay the conversion.
-      s.createDataFrame(top.rdd, top.schema)
-    } else {
-      val wk = Window.partitionBy("vec_id").orderBy(col("cos_sim").desc, col("nid"))
-      bi.withColumn("rn", row_number().over(wk)).filter(col("rn") <= 5)
-    }
-
-  /** The CHILD-SESSION half of [[knnTop5]]'s agg path, returning the
-    * still-s2-bound top-k frame (package-visible so specs can audit
-    * the plan that actually executes — the caller-facing frame sits
-    * behind the .rdd re-bind's ExistingRDD boundary). */
-  private[graft] def knnTop5Child(s: SparkSession, bi: DataFrame): DataFrame = {
-      // CHILD session (the d147/d55 idiom): topk_by plans as
-      // ObjectHashAggregate, whose default sortBased.fallbackThreshold
-      // (128 in-memory groups!) silently degrades the whole point —
-      // the first interleaved sf10 probe measured the fallback at
-      // {117.5, 209.3 s} vs the Window's {81.8, 91.0}; with the
-      // threshold raised the agg wins {49.4, 52.7} (BENCH_NOTES r14).
-      // The raise is scoped to THIS plan's session: a global raise
-      // would let every collect_list-style agg grow 5M untracked
-      // object buffers, and a set/restore window on the shared session
-      // is the bleed task 5 just closed. Buffers here are bounded: 5
-      // (long, double) slots per group, ~10⁶ groups ≈ tens of MB.
-      val s2 = s.newSession()
-      // newSession() builds its state from the SparkConf, NOT the
-      // caller's runtime conf (r14 advisor) — carry the runtime knobs
-      // that shape THIS stage's plan (parallelism + AQE) across, so a
-      // Verify/Sweep `spark.conf.set` tune applies to the child stage
-      // the same as to the surrounding query.
-      Seq("spark.sql.shuffle.partitions",
-          "spark.sql.adaptive.enabled",
-          "spark.sql.adaptive.coalescePartitions.enabled")
-        .foreach(k => s2.conf.set(k, s.conf.get(k)))
-      s2.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "5000000")
-      GraftExtensions.install(s2)
-      // Cross-session carriage, probe-switchable (graft.knn.rebind):
-      //  - "transplant": SessionRebind moves the ANALYZED plan onto s2
-      //    keeping InternalRow — no row conversion at all. The
-      //    upstream pair build re-plans under s2, which is inert here:
-      //    it contains no object-hash aggregates (the only conf s2
-      //    changes beyond the carried-over runtime knobs), and its
-      //    registry-persisted helpers hit the context-wide
-      //    CacheManager by plan equality either way.
-      //  - "rdd": the r14 shape — bi.rdd round-trips every edge row
-      //    through external Row objects.
-      // Default decided by the r15 paired sf10 probe (BENCH_NOTES).
-      val transplant = s.conf.get("graft.knn.rebind", "transplant") == "transplant"
-      val in2 =
-        if (transplant) org.apache.spark.sql.graft.SessionRebind.transplant(s2, bi)
-        else s2.createDataFrame(bi.rdd, bi.schema)
-      in2
-        .groupBy(col("vec_id"))
-        .agg(expr("topk_by(nid, cos_sim, 5)").as("top"))
-        .select(col("vec_id"), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("vec_id"), col("t.id").as("nid"),
-          col("t.score").as("cos_sim"), (col("pos") + 1).as("rn"))
-  }
-
-  private def knnTopkAgg(s: SparkSession): Boolean =
-    s.conf.get("graft.knn.topkAgg",
-      sys.env.getOrElse("GRAFT_KNN_TOPK_AGG", "true")).toBoolean
+  /** Per-node top-5 neighbors over a symmetric (vec_id, nid, cos_sim)
+    * edge stream, as (vec_id, nid, cos_sim, rn) with rn in 1..5 — the
+    * one spelling d54 and [[lshKnnEdges]] share. Rank order is
+    * (cos_sim desc, nid asc), so the rows equal row_number over that
+    * order filtered to rn <= 5. topk_by plans as a HashAggregate with
+    * map-side partials (see [[graft.expressions.TopKByScore]]): no sort
+    * and no Window anywhere, at any node count. */
+  private[graft] def knnTop5(bi: DataFrame): DataFrame =
+    bi.groupBy(col("vec_id"))
+      .agg(expr("topk_by(nid, cos_sim, 5)").as("top"))
+      .select(col("vec_id"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("vec_id"), col("t.id").as("nid"),
+        col("t.score").as("cos_sim"), (col("pos") + 1).as("rn"))
 
   /** Corpus kNN edge list — top-5 by (cos desc, nid) per node over the
     * symmetric [[lshScoredPairs]] stream; d54's graph contract as a
@@ -805,15 +717,13 @@ object Pipeline {
     * spec suite's last CacheManager "already cached" warning (round
     * 12). Ids and one double only — vectors never enter the frame. */
   private def lshKnnEdges(s: SparkSession, dir: String): DataFrame =
-    cachedHelper(s, dir, s"lshKnnEdges:${knnTopkAgg(s)}") {
+    cachedHelper(s, dir, "lshKnnEdges") {
       val sc0 = lshScoredPairs(s, dir)
       val bi = sc0.select(col("id_a").as("vec_id"), col("id_b").as("nid"),
           col("cos_sim"))
         .union(sc0.select(col("id_b").as("vec_id"), col("id_a").as("nid"),
           col("cos_sim")))
-      // knnTop5 returns caller-session frames on both paths (r15), so
-      // d97/d99 can join this edge list with s-bound frames directly.
-      knnTop5(s, bi).select("vec_id", "nid")
+      knnTop5(bi).select("vec_id", "nid")
     }
 
   /** One alternating round of Kiveris et al.'s star-contraction
@@ -1915,11 +1825,10 @@ object Pipeline {
     // from the same sign-LSH self-join as d13 ([[lshScoredPairs]]):
     // each unordered pair is scored ONCE, then mirrored into both
     // directions before the per-node top-k — half the kernel work of
-    // scoring a directed candidate set. The top-k itself is a
-    // row_number Window over LSH candidates only: per-node candidate
-    // count is occupancy-bounded by [[adaptiveBits]] (no n×k
-    // expansion — the r5 VERDICT's crossJoin+Window hazard does not
-    // apply; the Window input IS the bounded candidate set). Recall
+    // scoring a directed candidate set. The top-k itself is the
+    // topk_by aggregate ([[knnTop5]]) over LSH candidates only:
+    // per-node candidate count is occupancy-bounded by
+    // [[adaptiveBits]], so there is no n×k expansion. Recall
     // on planted clusters is spec-verified (DedupSpec); the graph is
     // hash-checked against a full sign-LSH replay oracle (d13's
     // idiom).
@@ -1927,9 +1836,7 @@ object Pipeline {
       val sc = lshScoredPairs(s, dir)
       val bi = sc.select(col("id_a").as("vec_id"), col("id_b").as("nid"), col("cos_sim"))
         .union(sc.select(col("id_b").as("vec_id"), col("id_a").as("nid"), col("cos_sim")))
-      // top-5 via the sort-free topk_by aggregate (round 14 — see
-      // [[knnTop5]] for the plan trade and the probe numbers)
-      knnTop5(s, bi).orderBy("vec_id", "rn")
+      knnTop5(bi).orderBy("vec_id", "rn")
     },
 
     // ---- d55: globally-exact SEMANTIC-DEDUP COMPONENTS — connected
@@ -2666,8 +2573,7 @@ object Pipeline {
         .select(explode(col("words")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
       // graft.zipf.sliced=false: the pre-r15 vocabulary-wide single-
-      // partition window, kept for paired probing only (the
-      // graft.knn.topkAgg precedent).
+      // partition window, kept for paired probing only.
       val ranked = if (!s.conf.get("graft.zipf.sliced", "true").toBoolean) {
         freq.withColumn("r",
           row_number().over(Window.orderBy(desc("n"), asc("word"))).cast("long"))

@@ -21,9 +21,12 @@ object Sources {
   private def T(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
-  /** Scratch area for write-roundtrip demos (overridable for clusters). */
-  def scratchDir: String =
-    sys.env.getOrElse("GRAFT_SCRATCH_DIR", "/root/repo/target/scratch")
+  /** Scratch area for write-roundtrip demos and streaming staging:
+    * `GRAFT_SCRATCH_DIR` if set, else `graft-scratch` under the JVM's
+    * temp directory. Staged inputs are reused only while their source
+    * fingerprint matches, and entries clear or overwrite their outputs. */
+  def scratchDir: String = sys.env.getOrElse("GRAFT_SCRATCH_DIR",
+    new java.io.File(sys.props("java.io.tmpdir"), "graft-scratch").getAbsolutePath)
 
   /** a15's merge plan, shared with PlanAuditSpec so the audited plan IS
     * the production path: matched keys take the upsert row, unmatched

@@ -423,6 +423,10 @@ object StreamingOps {
         expr("bit_xor(h32)").as("content_xor"))
       .write.mode("overwrite").parquet(s"$state/batch=$batchId")
 
+  /** s17's gate output: one `batch=<id>` directory per micro-batch. */
+  private[graft] def s17GateDir: String =
+    s"${graft.queries.Sources.scratchDir}/s17_gate"
+
   /** Shared by s11 (AvailableNow backfill) and s12 (checkpoint
     * recovery): the rate-limited file-stream source over a staged
     * landing zone plus the integer-cents daily-window aggregate. ONE
@@ -682,19 +686,12 @@ object StreamingOps {
     // must converge to exactly the one-shot batch aggregate. Integer
     // cents, since cross-batch state accumulation reorders a double sum.
     "s11_stream_available_now" -> { (s, dir) =>
-      val base = s"${graft.queries.Sources.scratchDir}/s11_${Integer.toHexString(dir.hashCode)}"
       // three-file landing zone: the drain MUST span multiple batches.
-      // Staged once per source dir (streamEvents' recipe) — the backfill
-      // under test is the DRAIN, not the staging write.
-      val events = graft.Tables.load(s, dir, "events")
-      val staged = try {
-        val d = s.read.parquet(s"$base/in")
-        d.inputFiles.length >= 3 && d.count() == events.count()
-      } catch { case _: Throwable => false }
-      if (!staged)
-        stageLanding(events, 3, s"$base/in")
-      val schema = s.read.parquet(s"$base/in").schema
-      val agg = centsDailyWindowAgg(s, s"$base/in", schema)
+      // Staged once per source fingerprint — the backfill under test is
+      // the DRAIN, not the staging write.
+      val in = stagedTableDir(s, dir, "events", 3, "s11")
+      val schema = s.read.parquet(in).schema
+      val agg = centsDailyWindowAgg(s, in, schema)
       // state-store count = partitions × batches here; the aggregate
       // state is ~150 window rows, so run the drain at few partitions
       // (s5's recipe) and restore the session default after
@@ -735,17 +732,11 @@ object StreamingOps {
       val base = s"${graft.queries.Sources.scratchDir}/s12_${Integer.toHexString(dir.hashCode)}"
       val conf = s.sparkContext.hadoopConfiguration
       val fs = new Path(base).getFileSystem(conf)
-      val events = graft.Tables.load(s, dir, "events")
-      // stage a stable 2-file split once per source dir (one file per
-      // session: multi-batch-per-session is s11's property; what s12
-      // pins is recovery ACROSS sessions, so keep the drains minimal)
-      val allDir = s"$base/all"
-      val stagedOk = try {
-        val d = s.read.parquet(allDir)
-        d.inputFiles.length == 2 && d.count() == events.count()
-      } catch { case _: Throwable => false }
-      if (!stagedOk)
-        stageLanding(events, 2, allDir)
+      // stage a stable 2-file split once per source fingerprint (one
+      // file per session: multi-batch-per-session is s11's property;
+      // what s12 pins is recovery ACROSS sessions, so keep the drains
+      // minimal). Its own tag: this entry clears $base/in below.
+      val allDir = stagedTableDir(s, dir, "events", 2, "s12_all")
       val parts = fs.listStatus(new Path(allDir)).map(_.getPath)
         .filter(p => p.getName.startsWith("part-")).sortBy(_.getName)
       require(parts.length == 2, s"expected 2 staged files, got ${parts.length}")
@@ -1045,7 +1036,7 @@ object StreamingOps {
       // full-corpus landing write was pure setup); the GATE tree is this
       // run's output and starts empty every time
       val in = stagedTableDir(s, dir, "documents", 2, "s17")
-      val gate = s"${graft.queries.Sources.scratchDir}/s17_gate"
+      val gate = s17GateDir
       graft.sources.GraftWriter.removeDirectory(s, gate)
       val docs = graft.Tables.load(s, dir, "documents")
       // persisted: each micro-batch broadcasts this frame, and without

@@ -571,49 +571,44 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("d54: topk_by aggregate and row_number Window plans emit identical graphs") {
-    // round 14 (verdict task 3): the sort-free topk_by plan must be
-    // bit-equal to the Window shape — rows, ranks, and tie order
-    // (cos_sim desc, nid asc) — on a corpus with real ties (an
-    // identical-vector clique scores 1.0 against every member).
+    // knnTop5's topk_by aggregate must be bit-equal to a row_number
+    // Window over (cos_sim desc, nid asc) — rows, ranks and tie order —
+    // on a corpus with real ties (an identical-vector clique scores 1.0
+    // against every member). The reference Window is computed here,
+    // over the same all-pairs edge stream, spread over 4 partitions so
+    // the aggregate's partial buffers merge.
     val dir = scratch("topk-agg-emb")
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(53)
     val dup = Array.fill(64)(rnd.nextGaussian().toFloat)
     val rows = (0 until 12).map(i => (i.toLong, dup)) ++
       (0 until 120).map(i => (1000L + i, Array.fill(64)(rnd.nextGaussian().toFloat)))
     GraftWriter.write(rows.toDF("vec_id", "embedding").withColumn("label", lit(0)),
       s"$dir/embeddings.parquet")
-    def run(): Array[(Long, Long, Double, Int)] =
-      Pipeline.queries("d54_knn_graph")(spark, dir).collect()
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+    val bi = emb.as("a").join(emb.as("b"), col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nid"),
+        round(expr("cosine_sim(a.vec, b.vec)"), 4).as("cos_sim"))
+      .repartition(4)
+    def collectEdges(df: DataFrame): Array[(Long, Long, Double, Int)] =
+      df.select("vec_id", "nid", "cos_sim", "rn").orderBy("vec_id", "rn").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val viaAgg = run() // default: topk_by
-    // the caller-facing d54 frame sits behind the .rdd re-bind's
-    // ExistingRDD boundary (r15: knnTop5 re-binds to the caller's
-    // session on BOTH paths), so audit the child-session plan that
-    // actually executes via the package-visible half
-    import spark.implicits._
-    val biSmall = Seq((1L, 2L, 0.9), (1L, 3L, 0.8), (2L, 1L, 0.9))
-      .toDF("vec_id", "nid", "cos_sim")
-    val pChild = Pipeline.knnTop5Child(spark, biSmall)
-      .queryExecution.executedPlan.toString
-    assert(pChild.contains("topk_by"), s"agg path must plan topk_by:\n$pChild")
-    assert(!pChild.contains("WindowGroupLimit"),
-      s"agg path must not fall back to the Window:\n$pChild")
-    val viaWindow = try {
-      spark.conf.set("graft.knn.topkAgg", "false")
-      run()
-    } finally spark.conf.unset("graft.knn.topkAgg")
-    assert(viaAgg.nonEmpty && viaAgg.sameElements(viaWindow),
+    val viaAgg = collectEdges(Pipeline.knnTop5(bi))
+    val wk = Window.partitionBy("vec_id").orderBy(col("cos_sim").desc, col("nid"))
+    val viaWindow = collectEdges(
+      bi.withColumn("rn", row_number().over(wk)).filter(col("rn") <= 5))
+    assert(viaAgg.length == 132 * 5 && viaAgg.sameElements(viaWindow),
       s"topk_by diverged from the Window: ${viaAgg.length} vs ${viaWindow.length} rows")
-    // round 15 (verdict task 8): the two cross-session carriages —
-    // analyzed-plan transplant (InternalRow end to end) and the r14
-    // .rdd row round-trip — must emit the identical graph too
-    val viaRdd = try {
-      spark.conf.set("graft.knn.rebind", "rdd")
-      run()
-    } finally spark.conf.unset("graft.knn.rebind")
-    assert(viaAgg.sameElements(viaRdd),
-      s"transplant diverged from rdd re-bind: ${viaAgg.length} vs ${viaRdd.length} rows")
+    // the entry itself: identical vectors always share LSH buckets, so
+    // each clique member's top-5 is the 5 smallest other clique ids at 1.0
+    val d54 = collectEdges(Pipeline.queries("d54_knn_graph")(spark, dir))
+    (0L until 12L).foreach { v =>
+      val want = (0L until 12L).filter(_ != v).take(5).zipWithIndex
+        .map { case (n, j) => (v, n, 1.0, j + 1) }
+      assert(d54.filter(_._1 == v).toSeq == want, s"clique node $v: ${d54.filter(_._1 == v).toSeq}")
+    }
   }
 
   test("registry: nested helper builds run (d99 as the FIRST family query on a fresh corpus)") {

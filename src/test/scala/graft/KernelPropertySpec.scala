@@ -301,13 +301,15 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("topk_by: any partition split + merge order + serde roundtrip equals the sorted reference") {
+  test("topk_by: any partition split + merge order of buffer rows equals the sort") {
     // d54's aggregate top-k must replicate row_number over
     // (score desc, id asc) exactly for ANY map-side partial layout —
-    // the distributivity the sort-free plan rests on.
+    // the distributivity the sort-free plan rests on. Partials and the
+    // final buffer are UnsafeRows (the HashAggregate buffer format), at
+    // random offsets inside wider rows as in a multi-aggregate plan.
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    import org.apache.spark.sql.types.{DoubleType, LongType}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
+    import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
     import graft.expressions.TopKByScore
     val r = rng(31)
     (1 to 200).foreach { _ =>
@@ -319,15 +321,26 @@ class KernelPropertySpec extends AnyFunSuite {
       val agg = TopKByScore(
         BoundReference(0, LongType, nullable = true),
         BoundReference(1, DoubleType, nullable = true), k)
+      def bufferRow(offset: Int): InternalRow = {
+        val types: Array[DataType] =
+          (Seq.fill(offset)(LongType) ++ agg.aggBufferSchema.map(_.dataType)).toArray
+        UnsafeProjection.create(types).apply(new GenericInternalRow(types.length)).copy()
+      }
+      val (partOff, finalOff) = (r.nextInt(3), r.nextInt(3))
+      val partial = agg.withNewMutableAggBufferOffset(partOff)
       val nParts = 1 + r.nextInt(5)
       val partials = rows.groupBy(_ => r.nextInt(nParts)).values.map { part =>
-        val buf = agg.createAggregationBuffer()
-        part.foreach { case (i, s) => agg.update(buf, InternalRow(i, s)) }
-        agg.deserialize(agg.serialize(buf)) // the shuffle path
+        val buf = bufferRow(partOff)
+        partial.initialize(buf)
+        part.foreach { case (i, s) => partial.update(buf, InternalRow(i, s)) }
+        buf
       }.toSeq
-      val merged = r.shuffle(partials)
-        .foldLeft(agg.createAggregationBuffer())((a, b) => agg.merge(a, b))
-      val out = agg.eval(merged).asInstanceOf[ArrayData]
+      val fin = agg.withNewMutableAggBufferOffset(finalOff)
+        .withNewInputAggBufferOffset(partOff)
+      val merged = bufferRow(finalOff)
+      fin.initialize(merged)
+      r.shuffle(partials).foreach(p => fin.merge(merged, p))
+      val out = fin.eval(merged).asInstanceOf[ArrayData]
       val got = (0 until out.numElements()).map { j =>
         val row = out.getStruct(j, 2); (row.getLong(0), row.getDouble(1))
       }

@@ -362,31 +362,21 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("d54 knn graph: sort-free topk_by aggregate, no Window, joins stay equi") {
-    // round 14: the per-node top-k is the topk_by AGGREGATE (O(k)
-    // map-side buffers, no per-partition sort), not a Window — the
-    // interleaved sf10 probe measured the agg at {49.5, 44.4 s} vs
-    // the Window's {72.1-100.7 s} once the ObjectHashAggregate
-    // fallback threshold was scoped to the plan's child session.
-    // r15: the caller-facing frame sits behind the output re-bind's
-    // ExistingRDD boundary (callers get s-bound frames now), so the
-    // agg plan is audited on the CHILD-session half the entry
-    // actually executes (knnTop5Child — same bi carriage).
-    import spark.implicits._
-    val bi = Seq((1L, 2L, 0.9), (1L, 3L, 0.8), (2L, 1L, 0.9))
-      .toDF("vec_id", "nid", "cos_sim")
-    val child = Pipeline.knnTop5Child(spark, bi)
-    val opt = child.queryExecution.optimizedPlan.toString
-    assert(opt.contains("topk_by"), s"d54: want the topk_by aggregate:\n$opt")
-    assert("""\bWindow\b""".r.findAllIn(opt).isEmpty,
-      s"d54: the Window top-k should be gone:\n$opt")
-    // the agg must plan hash-based (the child-session fallback raise
-    // holds — the whole point of the child session)
-    val cp = child.queryExecution.executedPlan.toString
-    assert(cp.contains("ObjectHashAggregate"),
-      s"d54: topk_by should plan as ObjectHashAggregate:\n$cp")
-    // the full entry still never falls off the equi-join path
+    // the per-node top-k is the topk_by aggregate over fixed-width
+    // UnsafeRow buffers, so it plans as a plain HashAggregate (map-side
+    // partial + final), never the ObjectHashAggregate whose group-count
+    // fallback sorts, a SortAggregate, or a row_number Window
     val p = Pipeline.queries("d54_knn_graph")(spark, sfTiny)
       .queryExecution.executedPlan.toString
+    assert("""(?<!Object)HashAggregate\(keys=\[vec_id#\d+L?\], functions=\[partial_topk_by""".r
+        .findFirstIn(p).nonEmpty &&
+      """(?<!Object)HashAggregate\(keys=\[vec_id#\d+L?\], functions=\[topk_by""".r
+        .findFirstIn(p).nonEmpty,
+      s"d54: topk_by should plan as a partial + final HashAggregate:\n$p")
+    Seq("ObjectHashAggregate", "SortAggregate", "Window").foreach { op =>
+      assert(!p.contains(op), s"d54: unexpected $op in the plan:\n$p")
+    }
+    // candidate generation never falls off the equi-join path
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"d54 candidate generation fell off the equi-join path:\n$p")
   }

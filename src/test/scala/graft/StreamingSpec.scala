@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -474,6 +475,34 @@ class StreamingSpec extends SparkSpecBase {
       s"checkpoint restart lost state or reprocessed: $fin")
   }
 
+  test("s11/s12: an in-place rewrite with the same row count is restaged, never served stale") {
+    // a land/expire cycle can keep the row count while changing every
+    // value; the staged landing zones must follow the new table
+    val dir = scratch("s11-s12-restage")
+    val raw = spark.read.parquet(s"$sfTiny/events.parquet")
+    def land(df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    def batchAgg(): Seq[Row] = graft.Tables.load(spark, dir, "events")
+      .withColumn("cents", round(col("value") * 100).cast("long"))
+      .groupBy(window(col("ts"), "1 day").as("win"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
+      .select(col("win.start").cast("date").as("day"), col("event_type"),
+        col("n"), col("total_cents"))
+      .orderBy("day", "event_type").collect().toSeq
+    def check(): Unit = Seq("s11_stream_available_now", "s12_stream_checkpoint_recovery")
+      .foreach { e =>
+        val fresh = StreamingOps.queries(e)(spark, dir).collect().toSeq == batchAgg()
+        assert(fresh, s"$e served a stale landing zone")
+      }
+    land(raw)
+    check()
+    val before = batchAgg()
+    land(raw.withColumn("value", col("value") * 2 + 1))
+    assert(spark.read.parquet(s"$dir/events.parquet").count() == raw.count())
+    assert(batchAgg() != before, "the rewrite must change the aggregate")
+    check()
+  }
+
   test("s16: MG state survives adversarial batch cuts; counters stay bounded") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -525,7 +554,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(got === want, s"got $got")
   }
 
-  test("s17: the streamed gate matches the batch verdicts across four-file replay") {
+  test("s17: the streamed gate matches the batch verdicts across a two-file replay") {
     import spark.implicits._
     val dir = scratch("s17-plant")
     // bench doc 0 (id % 97 = 0) owns the eval shingles; id 1 copies its
@@ -554,8 +583,8 @@ class StreamingSpec extends SparkSpecBase {
       ("s1", 2L, 2L, 0L, 1000L),
       ("s2", 2L, 0L, 2L, 0L)), s"got $got")
     // the staging really replayed multiple batches (one per file)
-    val gate = s"${graft.queries.Sources.scratchDir}/s17/gate"
-    val batches = new java.io.File(gate).list().count(_.startsWith("batch="))
+    val batches = new java.io.File(StreamingOps.s17GateDir).list()
+      .count(_.startsWith("batch="))
     assert(batches >= 2, s"expected a multi-batch replay, got $batches")
   }
 
