@@ -18,9 +18,10 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
   *    entries;
   *  - target/bench.json is rewritten after EVERY query, so even an
   *    outer kill mid-run leaves parseable partial results on disk;
-  *  - the final act is: write file, print the bare JSON line, flush,
-  *    Runtime.halt(0). No spark.stop()/shutdown-hook can hang after the
-  *    measurements are done or emit noise after the JSON line.
+  *  - the final act is: write file, stop the session (capped at
+  *    15 s), print the bare JSON line, flush, exit through `MainExit`
+  *    (shutdown hooks log to stderr only, and a watchdog halts the JVM
+  *    if they hang).
   * Per-query progress goes to stderr; stdout carries only the JSON line.
   */
 object Bench {
@@ -265,18 +266,12 @@ object Bench {
     // failure mode: an unbounded quiesce hanging past the outer wall
     // budget): stop() normally silences executor logging and cleans the
     // shuffle temp dirs in ~1 s; if a stuck task blocks it, the daemon
-    // thread is abandoned after 15 s and we print anyway. halt() then
-    // guarantees no shutdown hook can emit anything after the line.
+    // thread is abandoned after 15 s and we print anyway.
     try spark.sparkContext.cancelAllJobs() catch { case _: Throwable => }
-    val stopper = new Thread(new Runnable {
-      override def run(): Unit = try spark.stop() catch { case _: Throwable => }
-    })
-    stopper.setDaemon(true)
-    stopper.start()
-    stopper.join(15000)
+    MainExit.stop(spark)
     pool.shutdownNow()
     println(renderCompactJson(results.toSeq, shed.toSet))
     System.out.flush()
-    Runtime.getRuntime.halt(0)
+    MainExit.exit(0)
   }
 }

@@ -140,8 +140,9 @@ object Sweep {
     pool.shutdownNow()
     import scala.jdk.CollectionConverters._
     failed.asScala.foreach { case (n, m) => System.err.println(s"[sweep] FAILED $n: $m") }
+    MainExit.stop(spark)
     println(s"""{"seed":$seed,"n":${order.size},"threads":$threads,"failed":${failed.size}}""")
     System.out.flush()
-    Runtime.getRuntime.halt(if (failed.isEmpty) 0 else 1)
+    MainExit.exit(if (failed.isEmpty) 0 else 1)
   }
 }

@@ -17,7 +17,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+    normalizeTs(graft.sources.GraftReader.parquet(spark, s"$sfDir/$name.parquet"))
 
   /** events.ts arrives in whatever physical form the driver's generator
     * used this round; normalize every variant to session-tz TimestampType

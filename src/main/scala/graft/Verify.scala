@@ -218,12 +218,7 @@ object Verify {
     // way Bench does: a stuck task can block spark.stop() indefinitely,
     // and an rc=124 outer kill here would waste an otherwise-complete
     // round of correctness output.
-    val stopper = new Thread(new Runnable {
-      override def run(): Unit = try spark.stop() catch { case _: Throwable => }
-    })
-    stopper.setDaemon(true)
-    stopper.start()
-    stopper.join(15000)
-    Runtime.getRuntime.halt(0)
+    MainExit.stop(spark)
+    MainExit.exit(0)
   }
 }

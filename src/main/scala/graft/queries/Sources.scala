@@ -281,7 +281,7 @@ object Sources {
           round(col("o_totalprice"), 2).as("o_totalprice"))
       GraftWriter.removeDirectory(s, base)
       orders.write.parquet(s"$base/t")
-      val snapshot = s.read.parquet(s"$base/t")
+      val snapshot = GraftReader.parquet(s, s"$base/t")
       // the day's merge batch: price corrections on every 100th order,
       // plus brand-new orders derived from every 500th. The corrected
       // price is computed in integer CENTS (cents*11 div 10) — a
@@ -301,7 +301,7 @@ object Sources {
         .withColumn("o_orderstatus", lit("N"))
       val merged = upsertMerge(snapshot, updates.unionByName(inserts), "o_orderkey")
       merged.write.parquet(s"$base/t_next") // next snapshot; swap = rename
-      s.read.parquet(s"$base/t_next")
+      GraftReader.parquet(s, s"$base/t_next")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           sum(expr("cast(round(o_totalprice * 100) as bigint)")).as("total_cents"))

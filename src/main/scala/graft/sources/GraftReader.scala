@@ -1,8 +1,16 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.util.control.NonFatal
 
 /** Unified multi-format reader over any Hadoop FileSystem scheme —
   * the Spark-first re-expression of the reference's capability of
@@ -51,8 +59,88 @@ object GraftReader {
       case "json" => r.json(url)
       case "orc" => r.orc(url)
       case "text" => r.text(url)
-      case _ => r.parquet(url)
+      case _ => parquet(spark, url, options)
     }
+  }
+
+  /** `spark.read.parquet(url)` without Spark's schema-inference job.
+    * Spark infers a parquet schema by reading one footer inside a
+    * one-task job (`mergeSchemasInParallel` runs even with mergeSchema
+    * off). Here the driver reads that same footer itself (the
+    * reference reads footers client-side too, hadoopfs.hpp:143-252) and
+    * hands Spark the schema, so the read plans with no job; Spark still
+    * lists the files and discovers partition columns.
+    */
+  def parquet(spark: SparkSession, url: String,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val r = spark.read.options(options)
+    footerSchema(spark, url, options).fold(r.parquet(url))(r.schema(_).parquet(url))
+  }
+
+  /** Options that change which files Spark lists or merges. */
+  private val listingOptions =
+    Set("mergeschema", "basepath", "pathglobfilter", "recursivefilelookup",
+      "modifiedbefore", "modifiedafter")
+
+  /** The data schema Spark's parquet inference gives `url`, from the
+    * footer of the lexicographically first data file, the file
+    * `ParquetUtils.inferSchema` reads. None wherever Spark's answer
+    * could differ, so the caller lets Spark infer (and gets Spark's
+    * schema or Spark's error): a glob, schema merging, listing options,
+    * a summary or other `_` file, a data column that is also a
+    * partition directory key, no data file, or any failure to list or
+    * read.
+    */
+  private[graft] def footerSchema(spark: SparkSession, url: String,
+      options: Map[String, String]): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    if (url.exists("{}[]*?\\".contains(_)) || sqlConf.isParquetSchemaMergingEnabled ||
+        options.keys.exists(k => listingOptions(k.toLowerCase))) return None
+    try {
+      val conf = spark.sessionState.newHadoopConfWithOptions(options)
+      val files = leafFiles(conf, url)
+      if (files.isEmpty || files.exists(_.getPath.getName.startsWith("_"))) None
+      else {
+        val first = files.head
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(first, conf), SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(first.getPath, footer), new ParquetToSparkSchemaConverter(sqlConf))
+        val root = new Path(url)
+        val rootDir = root.getFileSystem(conf).makeQualified(root).toUri.getPath
+        val partKeys = files.flatMap(f => partitionKeys(rootDir, f.getPath)).toSet
+        if (schema.fieldNames.exists(n => partKeys(n.toLowerCase))) None else Some(schema)
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Lower-cased `k` of every `k=v` directory between `rootDir` and `file`. */
+  private def partitionKeys(rootDir: String, file: Path): Seq[String] = {
+    val rel = file.toUri.getPath.stripPrefix(rootDir).split('/').toSeq.dropRight(1)
+    rel.filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase)
+  }
+
+  /** Names Spark's file index skips (`HadoopFSUtils
+    * .shouldFilterOutPathName`): a leading `.`, a leading `_` unless the
+    * name holds `=`, and in-flight `._COPYING_` files; the parquet
+    * summary files are kept. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+
+  /** Leaf files under `url` as Spark's file index lists them, on the
+    * driver: recursive, hidden names (files and directories) skipped,
+    * sorted by path. A file url lists as itself; a missing one throws
+    * `FileNotFoundException`. */
+  private[graft] def leafFiles(conf: Configuration, url: String): Seq[FileStatus] = {
+    val root = new Path(url)
+    val fs = root.getFileSystem(conf)
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) walk(st.getPath) else Seq(st)
+      }
+    walk(root).sortBy(_.getPath.toString)
   }
 
   /** Multi-path scan with schema union-by-name and a `_file` provenance

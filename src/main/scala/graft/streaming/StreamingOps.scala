@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.GraftReader
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,32 +46,33 @@ object StreamingOps {
     * staging; an in-place rewrite always moves length or mtime.
     */
   private def sourceStamp(s: SparkSession, dir: String, table: String): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    val parts = graft.Tables.load(s, dir, table).inputFiles.sorted.map { f =>
-      val p = new Path(f)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      s"$f:${st.getLen}:${st.getModificationTime}"
-    }
+    val parts = GraftReader.leafFiles(s.sparkContext.hadoopConfiguration,
+        s"$dir/$table.parquet")
+      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
     java.util.UUID.nameUUIDFromBytes(parts.mkString("|").getBytes("UTF-8")).toString
   }
 
-  private def readStamp(s: SparkSession, path: org.apache.hadoop.fs.Path): Option[String] =
+  /** The landing zone staged under `base` (files in `$base/in`) is
+    * current when its stamp file holds `stamp` and `in` holds exactly
+    * `nFiles` files: one stamp read and one Hadoop listing, no Spark
+    * read. `markStaged` writes the stamp after a (re)stage. */
+  private def stagingCurrent(s: SparkSession, base: String, stamp: String,
+      nFiles: Int): Boolean =
     try {
-      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(path)) None
-      else {
+      val conf = s.sparkContext.hadoopConfiguration
+      val path = new org.apache.hadoop.fs.Path(s"$base/_source_stamp")
+      val fs = path.getFileSystem(conf)
+      fs.exists(path) && {
         val buf = new Array[Byte](fs.getFileStatus(path).getLen.toInt)
         val is = fs.open(path)
-        try { is.readFully(0, buf); Some(new String(buf, "UTF-8")) }
-        finally is.close()
-      }
-    } catch { case _: Throwable => None }
+        try is.readFully(0, buf) finally is.close()
+        new String(buf, "UTF-8") == stamp
+      } && GraftReader.leafFiles(conf, s"$base/in").length == nFiles
+    } catch { case _: Throwable => false }
 
-  private def writeStamp(s: SparkSession, path: org.apache.hadoop.fs.Path,
-      stamp: String): Unit = {
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val os = fs.create(path, true)
+  private def markStaged(s: SparkSession, base: String, stamp: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(s"$base/_source_stamp")
+    val os = path.getFileSystem(s.sparkContext.hadoopConfiguration).create(path, true)
     try os.write(stamp.getBytes("UTF-8")) finally os.close()
   }
 
@@ -87,17 +89,12 @@ object StreamingOps {
     */
   private def stagedTableDir(s: SparkSession, dir: String, table: String,
       nFiles: Int, tag: String): String = {
-    import org.apache.hadoop.fs.Path
     val base = s"${graft.queries.Sources.scratchDir}/${tag}_${Integer.toHexString(dir.hashCode)}"
     val in = s"$base/in"
-    val stampFile = new Path(s"$base/_source_stamp")
     val stamp = s"${sourceStamp(s, dir, table)}:$nFiles"
-    val stagedOk = readStamp(s, stampFile).contains(stamp) &&
-      (try s.read.parquet(in).inputFiles.length == nFiles
-       catch { case _: Throwable => false })
-    if (!stagedOk) {
+    if (!stagingCurrent(s, base, stamp, nFiles)) {
       stageLanding(graft.Tables.load(s, dir, table), nFiles, in)
-      writeStamp(s, stampFile, stamp)
+      markStaged(s, base, stamp)
     }
     in
   }
@@ -119,7 +116,7 @@ object StreamingOps {
     // Spark-written table, e.g. the sf1 stress set) stage identically;
     // the r5 single-file FileUtil.copy broke on directory layouts.
     val stageDir = stagedTableDir(s, dir, "events", 1, "stream_events")
-    val schema = s.read.parquet(stageDir).schema
+    val schema = GraftReader.parquet(s, stageDir).schema
     val raw = s.readStream.schema(schema).parquet(stageDir)
     graft.Tables.normalizeTs(raw)
   }
@@ -152,9 +149,10 @@ object StreamingOps {
     try body finally s.conf.set(key, prev)
   }
 
-  /** State-store chooser for the stateful entries (round 15): the
-    * ProbeS13 long-lived-replay matrix (BENCH_NOTES r15 — partitions x
-    * {HDFSBacked, RocksDB} at sf1 and sf10, 26 micro-batches) REFUTED
+  /** State-store chooser for the stateful entries (round 15): the s13
+    * long-lived-replay matrix (BENCH_NOTES, "s13 state-store matrix on
+    * a LONG-LIVED replay" — partitions x {HDFSBacked, RocksDB} at sf1
+    * and sf10, 26 micro-batches) REFUTED
     * the r9 assumption that RocksDB is the right default here: with
     * watermark-BOUNDED state (every stateful entry in this block
     * guarantees eviction structurally) the per-batch per-store fixed
@@ -210,12 +208,8 @@ object StreamingOps {
     // Witness: source-file fingerprint (see stagedTableDir) — an
     // in-place source rewrite restages; a layout version bump in the
     // stamp retires the old 3-file staging.
-    val stampFile = new Path(s"$base/_source_stamp")
     val stamp = s"${sourceStamp(s, dir, "events")}:v2-2file"
-    val stagedOk = readStamp(s, stampFile).contains(stamp) &&
-      (try s.read.parquet(inDir).inputFiles.length == 2
-       catch { case _: Throwable => false })
-    if (!stagedOk) {
+    if (!stagingCurrent(s, base, stamp, 2)) {
       graft.sources.GraftWriter.removeDirectory(s, inDir)
       fs.mkdirs(new Path(inDir))
       val events = graft.Tables.load(s, dir, "events")
@@ -241,7 +235,7 @@ object StreamingOps {
       }
       land(events.unionByName(sentinel(30)), "00-data-close.parquet", t0)
       land(sentinel(32), "01-flush.parquet", t0 + 60000)
-      writeStamp(s, stampFile, stamp)
+      markStaged(s, base, stamp)
     }
     inDir
   }
@@ -621,7 +615,7 @@ object StreamingOps {
         }
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(out)
+      GraftReader.parquet(s, out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
         .orderBy("event_type")
@@ -660,7 +654,7 @@ object StreamingOps {
       // the PRODUCTION behavior and is spec-verified in StreamingSpec.)
       val dataFiles = fs.listStatus(in).count(st => !st.getPath.getName.startsWith("_"))
       require(dataFiles == 1, s"s10 oracle requires a single-file batch, found $dataFiles")
-      val schema = s.read.parquet(in.toString).schema
+      val schema = GraftReader.parquet(s, in.toString).schema
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1000000")
         .parquet(in.toString)
@@ -668,7 +662,7 @@ object StreamingOps {
         .foreachBatch(dedupIngestBatch(admitted) _)
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(admitted).select(col("doc_id"), col("thash"))
+      GraftReader.parquet(s, admitted).select(col("doc_id"), col("thash"))
         .orderBy("doc_id")
     },
 
@@ -690,7 +684,7 @@ object StreamingOps {
       // Staged once per source fingerprint — the backfill under test is
       // the DRAIN, not the staging write.
       val in = stagedTableDir(s, dir, "events", 3, "s11")
-      val schema = s.read.parquet(in).schema
+      val schema = GraftReader.parquet(s, in).schema
       val agg = centsDailyWindowAgg(s, in, schema)
       // state-store count = partitions × batches here; the aggregate
       // state is ~150 window rows, so run the drain at few partitions
@@ -749,7 +743,7 @@ object StreamingOps {
       def land(ps: Seq[Path]): Unit = ps.foreach { p =>
         FileUtil.copy(fs, p, fs, new Path(s"$base/in", p.getName), false, true, conf)
       }
-      val schema = s.read.parquet(allDir).schema
+      val schema = GraftReader.parquet(s, allDir).schema
       def drain(): Unit = {
         val agg = centsDailyWindowAgg(s, s"$base/in", schema)
         val q = agg.writeStream.format("memory").queryName("graft_s12")
@@ -791,7 +785,7 @@ object StreamingOps {
     // corpus behind the watermark and drop it).
     "s13_stream_outer_join" -> { (s, dir) =>
       val inDir = sentinelClosedEventsDir(s, dir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = GraftReader.parquet(s, inDir).schema
       val src = graft.Tables.normalizeTs(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir))
       val views = src.filter(col("event_type") === "view")
@@ -849,7 +843,7 @@ object StreamingOps {
     "s14_stream_timeout_session" -> { (s, dir) =>
       import s.implicits._
       val inDir = sentinelClosedEventsDir(s, dir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = GraftReader.parquet(s, inDir).schema
       val evs = graft.Tables.normalizeTs(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir))
         .selectExpr("cast(user_id as long) user_id", "ts",
@@ -904,13 +898,13 @@ object StreamingOps {
       val in = stagedTableDir(s, dir, "documents", 1, "s15")
       val state = s"${graft.queries.Sources.scratchDir}/s15_manifest"
       graft.sources.GraftWriter.removeDirectory(s, state)
-      val schema = s.read.parquet(in).schema
+      val schema = GraftReader.parquet(s, in).schema
       val q = s.readStream.schema(schema).parquet(in)
         .writeStream
         .foreachBatch(manifestIngestBatch(state) _)
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(state)
+      GraftReader.parquet(s, state)
         .groupBy("shard").agg(
           sum("n_docs").as("n_docs"),
           sum("bytes_total").as("bytes_total"),
@@ -944,7 +938,7 @@ object StreamingOps {
       // stay spec-driven (StreamingSpec, MemoryStream). Staging is
       // witness-gated and shared across invocations (pure setup).
       val in = stagedTableDir(s, dir, "documents", 2, "s16")
-      val schema = s.read.parquet(in).schema
+      val schema = GraftReader.parquet(s, in).schema
       val toks = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
         .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
@@ -1050,7 +1044,7 @@ object StreamingOps {
       // (2 MB row groups on the staged landing files — round 13 sf10
       // probe — come from stageLanding via stagedTableDir: small row
       // groups let the per-batch shingle explode split across cores.)
-      val schema = s.read.parquet(in).schema
+      val schema = GraftReader.parquet(s, in).schema
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
         .writeStream
@@ -1089,7 +1083,7 @@ object StreamingOps {
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable()
       finally { q.stop(); bench.unpersist(blocking = false) }
-      s.read.parquet(gate)
+      GraftReader.parquet(s, gate)
         .groupBy("source").agg(
           count(lit(1)).as("n_train"),
           sum(expr("CASE WHEN contaminated THEN 1 ELSE 0 END"))

@@ -3,7 +3,9 @@
 # startup + its project lock so probes can run beside an sbt Verify.
 # Usage: JMEM=24g tools/jrun.sh graft.ScaleData <args...>
 set -euo pipefail
-CLS=/root/repo/target/scala-2.13/classes
+# Classes of the checkout this script lives in; the caller's working
+# directory is kept, so relative arguments resolve as typed.
+CLS="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
