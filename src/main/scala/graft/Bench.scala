@@ -1,14 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
-
 /** Benchmark main: runs every SparkEntry.queries entry against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line on stdout.
   *
   * Hang-proofing (hardened after three rounds of lost perf signal):
-  *  - each query is timeboxed (job-group cancel on expiry);
+  *  - each query runs through `GraftSession.runEntry`, which cancels
+  *    it at its timeout and waits for it to stop before cleaning up;
   *  - a global wall budget *well below* the driver's outer timeout —
   *    round 3 proved the driver host can run 3-10x slower than this box
   *    (rc=124 outer kill with the internal 450 s guard never firing), so
@@ -103,46 +100,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Round 16: InferFiltersFromGenerate (SPARK-32295) copies the
-      // generator's WHOLE input expression into an inferred
-      // size(e)>0 filter, which predicate pushdown then moves below
-      // exchanges — the engine's expensive generators (shingle, gram,
-      // band, lane-unpack arrays) were being computed twice per row,
-      // once serially below the repartition. Every generated array
-      // here is non-empty by construction, so the inferred filter
-      // never prunes a row: excluding the rule is result-identical
-      // and deletes the duplicated kernel pass (plan evidence in
-      // OPTIMIZATION_r16.md).
-      .config("spark.sql.optimizer.excludedRules",
-        sys.env.getOrElse("GRAFT_EXCLUDED_RULES",
-          "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"))
-      // 256 KB scan-split floor — see the Verify builder's note: the
-      // 4 MB default under-splits dense single-file corpora and starves
-      // compute-heavy text scans of cores at probe scale.
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Warm up the JVM/codegen/parquet paths once so the first measured
-    // query doesn't absorb ~5 s of session startup in its timing.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
-    // Round 16: the first measured query (d13) was still absorbing the
-    // FIRST-USE compilation of the shuffle/aggregate/join/window
-    // machinery (interpreter + codegen infrastructure JIT), ~1-2 s no
-    // other query pays. Exercise those paths once on SYNTHETIC rows —
-    // no benched table is touched, and the per-query cleanup below
-    // (clearCache + resetScalarCaches) runs before timing starts, so
-    // nothing data-dependent survives into any measured window.
-    locally {
+    // Untimed warm-up: the JVM, codegen and parquet paths, then the
+    // first-use compilation of the shuffle/aggregate/join/window
+    // machinery on synthetic rows (no benched table is touched), so the
+    // first measured query does not pay ~5 s the others never pay. It
+    // runs as an entry, so the entry cleanup leaves nothing of it behind.
+    GraftSession.runEntry(spark, "warmup", PerQueryTimeoutSec) {
       import org.apache.spark.sql.functions._
+      spark.range(1_000_000).selectExpr("sum(id)").collect()
+      spark.read.parquet(s"$sfDir/nation.parquet").count()
       val w = spark.range(2000).selectExpr("id",
         "concat('w', cast(id % 97 as string), ' x y z') as text")
       val toks = w.selectExpr("id", "explode(split(text, ' ')) tok")
@@ -152,11 +122,8 @@ object Bench {
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("tok")).orderBy(col("n"))))
         .filter(col("r") === 1).count()
-      spark.catalog.clearCache()
-      graft.queries.Pipeline.resetScalarCaches()
     }
 
-    val pool = Executors.newCachedThreadPool()
     val start = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - start) / 1e9
 
@@ -223,37 +190,15 @@ object Bench {
         shed += name
       } else {
         val budget = math.min(PerQueryTimeoutSec, remaining.toLong + 1)
-        val t0 = System.nanoTime()
-        val fut = pool.submit(new Runnable {
-          override def run(): Unit = {
-            spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-            try fn(spark, sfDir).count()
-            finally spark.sparkContext.clearJobGroup()
-          }
-        })
-        val sec =
-          try { fut.get(budget, TimeUnit.SECONDS); (System.nanoTime() - t0) / 1e9 }
-          catch {
-            case _: TimeoutException =>
-              spark.sparkContext.cancelJobGroup(name)
-              fut.cancel(true)
-              System.err.println(s"[bench] $name TIMED OUT after ${budget}s")
-              -1.0
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${Option(e.getCause).getOrElse(e).getMessage}")
-              -1.0
-          }
-        if (sec >= 0) System.err.println(f"[bench] $name%-24s $sec%8.2fs")
-        spark.catalog.clearCache() // release any per-query persist()s
-        // round 16 (verdict #7): drop memoized adaptive-path scalars too,
-        // so no cross-query state survives — every query pays its own
-        // count() actions inside its timed window
-        graft.queries.Pipeline.resetScalarCaches()
-        // A timed-out query may have died inside a set/restore of a
-        // session conf (s5/d20 lower shuffle partitions around tiny
-        // stateful stages) — re-pin the critical confs every iteration
-        // so later queries never plan with a leaked value.
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
+        val outcome = GraftSession.runEntry(spark, name, budget)(fn(spark, sfDir).count())
+        val sec = outcome match {
+          case GraftSession.Outcome.Done(sec) =>
+            System.err.println(f"[bench] $name%-24s $sec%8.2fs")
+            sec
+          case _ =>
+            System.err.println(s"[bench] $name ${outcome.describe}")
+            -1.0
+        }
         results += name -> sec
         writeFallback(renderJson(results.toSeq)) // partial results survive an outer kill
       }
@@ -267,9 +212,7 @@ object Bench {
     // budget): stop() normally silences executor logging and cleans the
     // shuffle temp dirs in ~1 s; if a stuck task blocks it, the daemon
     // thread is abandoned after 15 s and we print anyway.
-    try spark.sparkContext.cancelAllJobs() catch { case _: Throwable => }
     MainExit.stop(spark)
-    pool.shutdownNow()
     println(renderCompactJson(results.toSeq, shed.toSet))
     System.out.flush()
     MainExit.exit(0)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: `runMain graft.Explain <sfDir> <queryName>...` prints
   * each query's formatted physical plan plus the files an actual scan
   * touches — used to audit pushdown / pruning / broadcast / codegen
@@ -11,25 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Round 16: InferFiltersFromGenerate (SPARK-32295) copies the
-      // generator's WHOLE input expression into an inferred
-      // size(e)>0 filter, which predicate pushdown then moves below
-      // exchanges — the engine's expensive generators (shingle, gram,
-      // band, lane-unpack arrays) were being computed twice per row,
-      // once serially below the repartition. Every generated array
-      // here is non-empty by construction, so the inferred filter
-      // never prunes a row: excluding the rule is result-identical
-      // and deletes the duplicated kernel pass (plan evidence in
-      // OPTIMIZATION_r16.md).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val raw = SparkEntry.queries(name)(spark, sfDir)

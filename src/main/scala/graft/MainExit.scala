@@ -18,10 +18,16 @@ object MainExit {
     t
   }
 
-  /** Stops the session, giving up after 15 s: a stuck task can block
-    * `spark.stop()` indefinitely, and every result is already out. */
+  /** Cancels whatever still runs and stops the session, giving up after
+    * 15 s: a stuck task can block `spark.stop()` indefinitely, and every
+    * result is already out. */
   def stop(spark: SparkSession): Unit =
-    daemon(try spark.stop() catch { case _: Throwable => }).join(CapMs)
+    daemon {
+      try {
+        spark.sparkContext.cancelAllJobs()
+        spark.stop()
+      } catch { case _: Throwable => }
+    }.join(CapMs)
 
   /** Exits with `code`; a daemon watchdog halts the JVM if the shutdown
     * hooks have not finished within 15 s. */

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -12,9 +11,8 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
   * Hang-proofing (a single runaway query must never zero the round):
   *  - oracle_sql.json is written BEFORE the query loop, so already-dumped
   *    results stay scoreable even if the process is killed mid-loop;
-  *  - every query runs in its own thread under a Spark job group with a
-  *    hard timeout — on expiry the job group is cancelled and the loop
-  *    moves on;
+  *  - every query runs through `GraftSession.runEntry` with a hard
+  *    timeout — on expiry it is cancelled and the loop moves on;
   *  - repartition(1) (a shuffle into one output file), NOT coalesce(1)
   *    (which would collapse the whole upstream computation to one task).
   */
@@ -89,35 +87,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Round 16: InferFiltersFromGenerate (SPARK-32295) copies the
-      // generator's WHOLE input expression into an inferred
-      // size(e)>0 filter, which predicate pushdown then moves below
-      // exchanges — the engine's expensive generators (shingle, gram,
-      // band, lane-unpack arrays) were being computed twice per row,
-      // once serially below the repartition. Every generated array
-      // here is non-empty by construction, so the inferred filter
-      // never prunes a row: excluding the rule is result-identical
-      // and deletes the duplicated kernel pass (plan evidence in
-      // OPTIMIZATION_r16.md).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // Scan-split floor (round 12): the default 4 MB openCostInBytes
-      // caps a dense single-file corpus at bytes/4MB input tasks — the
-      // sf10 probe's 55 MB documents file fed d112's gram-explode map
-      // stage only 14 of 32 cores (215 s of its 318 s wall; event-log
-      // evidence, BENCH_NOTES r12). Compute-dense text scans want the
-      // split floor well below the byte heuristic; 256 KB still packs
-      // small files sanely. At 100 TB corpora arrive as many files and
-      // this knob is moot — it exists for the single-file probe shape.
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Oracle-gated marker (advisor r13): if the LSH capacity pre-gate
     // ever escalates signature width under this session (budget knob
@@ -125,13 +96,6 @@ object Verify {
     // diagnosed error instead of dumping results the count(*)-derived
     // replay oracle cannot match.
     spark.conf.set("graft.lsh.oracleGated", "true")
-    // Probe passthrough (r15): -Dgraft.* JVM flags land in the session
-    // conf so paired probes can flip query-shape toggles
-    // (e.g. graft.zipf.sliced) from jrun without code
-    // edits. The driver passes no such flags, so the official gate is
-    // unaffected; a probe that overrides oracleGated does so knowingly.
-    sys.props.toSeq.filter(_._1.startsWith("graft."))
-      .foreach { case (k, v) => spark.conf.set(k, v) }
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -171,7 +135,6 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql_cached.json"),
       cached.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
 
-    val pool = Executors.newCachedThreadPool()
     // Dev-only filter: SPARK_GRAFT_ONLY=d30,q1 runs just those entries.
     // The driver never sets it, so the official gate is unaffected.
     val only: Set[String] = sys.env.get("SPARK_GRAFT_ONLY")
@@ -180,39 +143,16 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
     selected.foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val fut = pool.submit(new Runnable {
-        override def run(): Unit = {
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          try {
-            val raw = fn(spark, sfDir)
-            val out =
-              if (contractMode == "clusters" && pairContractSim.contains(name))
-                pairClusterContract(raw, pairContractSim(name))
-              else raw
-            out.repartition(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-          } finally spark.sparkContext.clearJobGroup()
-        }
-      })
-      try {
-        fut.get(PerQueryTimeoutSec, TimeUnit.SECONDS)
-        System.err.println(f"[verify] $name done in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch {
-        case _: TimeoutException =>
-          System.err.println(s"[verify] $name TIMED OUT after ${PerQueryTimeoutSec}s — cancelling")
-          spark.sparkContext.cancelJobGroup(name)
-          fut.cancel(true)
-        case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${Option(e.getCause).getOrElse(e).getMessage}")
+      val outcome = GraftSession.runEntry(spark, name, PerQueryTimeoutSec) {
+        val raw = fn(spark, sfDir)
+        val out =
+          if (contractMode == "clusters" && pairContractSim.contains(name))
+            pairClusterContract(raw, pairContractSim(name))
+          else raw
+        out.repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      spark.catalog.clearCache() // release any per-query persist()s
-      // A timed-out query may have died inside a set/restore of a session
-      // conf (s5/d20 lower shuffle partitions around tiny stateful
-      // stages) — re-pin so later queries never plan with a leaked value.
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      System.err.println(s"[verify] $name ${outcome.describe}")
     }
-    pool.shutdownNow()
     // Every result is already on disk (one parquet dir per query,
     // oracle_sql.json first) — nothing left to lose. Cap the quiesce the
     // way Bench does: a stuck task can block spark.stop() indefinitely,

@@ -51,7 +51,7 @@ object Pipeline {
     else df
 
   /** The documents-with-words frame every text operator starts from. */
-  private def wordsOf(s: SparkSession, dir: String): DataFrame =
+  private[graft] def wordsOf(s: SparkSession, dir: String): DataFrame =
     withWords(T(s, dir, "documents"))
 
   /** [[wordsOf]] with the unsplittable-scan fix ([[parallelScan]])
@@ -2572,28 +2572,21 @@ object Pipeline {
       val freq = wordsOf(s, dir)
         .select(explode(col("words")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      // graft.zipf.sliced=false: the pre-r15 vocabulary-wide single-
-      // partition window, kept for paired probing only.
-      val ranked = if (!s.conf.get("graft.zipf.sliced", "true").toBoolean) {
-        freq.withColumn("r",
-          row_number().over(Window.orderBy(desc("n"), asc("word"))).cast("long"))
-      } else {
-        val sliced = freq
-          .repartitionByRange(zipfSlices(s), desc("n"), asc("word"))
-          .withColumn("slice", spark_partition_id())
-          .transform(pinOnce)
-        val local = sliced.withColumn("lr", row_number().over(
-          Window.partitionBy("slice").orderBy(desc("n"), asc("word"))).cast("long"))
-        // ≤ zipfSlices rows: the one intentionally single-partition
-        // window here — it runs over the slice-COUNT table, never vocab
-        val offs = sliced.groupBy("slice").agg(count(lit(1)).as("cnt"))
-          .withColumn("off", coalesce(sum("cnt").over(
-            Window.orderBy("slice").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)))
-          .select("slice", "off")
-        local.join(broadcast(offs), Seq("slice"))
-          .withColumn("r", col("off") + col("lr"))
-      }
+      val sliced = freq
+        .repartitionByRange(zipfSlices(s), desc("n"), asc("word"))
+        .withColumn("slice", spark_partition_id())
+        .transform(pinOnce)
+      val local = sliced.withColumn("lr", row_number().over(
+        Window.partitionBy("slice").orderBy(desc("n"), asc("word"))).cast("long"))
+      // ≤ zipfSlices rows: the one intentionally single-partition
+      // window here — it runs over the slice-COUNT table, never vocab
+      val offs = sliced.groupBy("slice").agg(count(lit(1)).as("cnt"))
+        .withColumn("off", coalesce(sum("cnt").over(
+          Window.orderBy("slice").rowsBetween(Window.unboundedPreceding, -1)),
+          lit(0L)))
+        .select("slice", "off")
+      val ranked = local.join(broadcast(offs), Seq("slice"))
+        .withColumn("r", col("off") + col("lr"))
       // GROUPED (constant-key) aggregate, not a global one: a global agg
       // returns one all-null row on an empty corpus; grouped returns
       // zero rows — the EmptyCorpusSpec contract every d-op upholds.

@@ -484,13 +484,22 @@ class PlanAuditSpec extends SparkSpecBase {
     // bit-parity: the decomposition must reproduce the plain-window
     // rank EXACTLY (the oracle states the single-window semantics —
     // equality IS the decomposition claim); ranks feed ln(r) sums, so
-    // compare the full output rows of both shapes
-    val qs = SparkEntry.queries
-    val sliced = qs("d33_zipf")(spark, sfTiny).collect().map(_.toSeq)
-    val plain = try {
-      spark.conf.set("graft.zipf.sliced", "false")
-      qs("d33_zipf")(spark, sfTiny).collect().map(_.toSeq)
-    } finally spark.conf.unset("graft.zipf.sliced")
+    // compare the full output rows against the vocabulary-wide
+    // row_number computed here
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{asc, count, desc, explode, expr, round, row_number, sum}
+    val plain = Pipeline.wordsOf(spark, sfTiny)
+      .select(explode(col("words")).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("n"))
+      .withColumn("r", row_number().over(Window.orderBy(desc("n"), asc("word"))).cast("long"))
+      .groupBy(lit("corpus").as("scope")).agg(
+        count(lit(1)).as("n_types"),
+        sum(col("n")).as("total_tokens"),
+        round(expr("regr_slope(ln(n), ln(r))"), 4).as("zipf_slope"),
+        round(expr("regr_r2(ln(n), ln(r))"), 4).as("r2"))
+      .collect().map(_.toSeq)
+    val sliced = SparkEntry.queries("d33_zipf")(spark, sfTiny).collect().map(_.toSeq)
+    assert(plain.nonEmpty)
     assert(sliced.toSeq == plain.toSeq,
       s"slice-decomposed rank diverged from the plain window:\n" +
         s"sliced=${sliced.toSeq}\nplain=${plain.toSeq}")

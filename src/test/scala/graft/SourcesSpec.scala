@@ -16,10 +16,8 @@ class SourcesSpec extends SparkSpecBase {
   test("a1: HdfsConf normalizes namenodes and sets HA client keys") {
     assert(HdfsConf.normalizeNamenode("nn1:9000") == "hdfs://nn1:9000")
     assert(HdfsConf.normalizeNamenode("hdfs://nn1:9000") == "hdfs://nn1:9000")
-    val local = org.apache.spark.sql.SparkSession.builder()
-      .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
-    HdfsConf.configure(local, haNameservice = Some(("svc", Seq("a:9000", "b:9000"))))
-    val conf = local.sparkContext.hadoopConfiguration
+    HdfsConf.configure(spark, haNameservice = Some(("svc", Seq("a:9000", "b:9000"))))
+    val conf = spark.sparkContext.hadoopConfiguration
     assert(conf.get("dfs.nameservices") == "svc")
     assert(conf.get("dfs.ha.namenodes.svc") == "nn0,nn1")
     assert(conf.get("dfs.namenode.rpc-address.svc.nn1") == "b:9000")

@@ -4,32 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (Test / fork := true →
-  * single JVM). Mirrors the Verify/Bench session config. */
+  * single JVM), built by the same factory as every graft main. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       // static conf — must be set when the SparkContext is created; this
       // is the `--conf spark.sql.extensions=...` cluster path under test
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Round 16: InferFiltersFromGenerate (SPARK-32295) copies the
-      // generator's WHOLE input expression into an inferred
-      // size(e)>0 filter, which predicate pushdown then moves below
-      // exchanges — the engine's expensive generators (shingle, gram,
-      // band, lane-unpack arrays) were being computed twice per row,
-      // once serially below the repartition. Every generated array
-      // here is non-empty by construction, so the inferred filter
-      // never prunes a row: excluding the rule is result-identical
-      // and deletes the duplicated kernel pass (plan evidence in
-      // OPTIMIZATION_r16.md).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // mirror Verify/Bench's 256 KB scan-split floor (round 12)
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -13,5 +13,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS -Xmx"${JMEM:-8g}" ${JFLAGS:-} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLS:/opt/spark/jars/*" "$@"
