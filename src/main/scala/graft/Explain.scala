@@ -4,6 +4,10 @@ package graft
   * each query's formatted physical plan plus the files an actual scan
   * touches — used to audit pushdown / pruning / broadcast / codegen
   * decisions (SURVEY §4) without modifying queries.
+  *
+  * Each entry is planned through `GraftSession.runEntry`, as Verify runs
+  * it, so every plan starts from a cleared cache and cleared scalar
+  * memos and does not depend on which entries were planned before it.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -12,19 +16,18 @@ object Explain {
     val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
-      val raw = SparkEntry.queries(name)(spark, sfDir)
-      // honor the stress-contract env the way Verify does, so contract-
-      // mode probe plans can be audited without a full probe run
-      val df =
-        if (sys.env.getOrElse("SPARK_GRAFT_STRESS_CONTRACT", "") == "clusters"
-            && Verify.pairContractSim.contains(name))
-          Verify.pairClusterContract(raw, Verify.pairContractSim(name))
-        else raw
-      println(s"\n========== $name ==========")
-      df.explain("formatted")
-      val files = df.inputFiles
-      println(s"-- inputFiles (${files.length}):")
-      files.sorted.take(20).foreach(f => println(s"   $f"))
+      val outcome = GraftSession.runEntry(spark, name, Verify.PerQueryTimeoutSec) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        println(s"\n========== $name ==========")
+        df.explain("formatted")
+        val files = df.inputFiles
+        println(s"-- inputFiles (${files.length}):")
+        files.sorted.take(20).foreach(f => println(s"   $f"))
+      }
+      outcome match {
+        case GraftSession.Outcome.Done(_) =>
+        case o => System.err.println(s"[explain] $name ${o.describe}")
+      }
     }
     spark.stop()
   }

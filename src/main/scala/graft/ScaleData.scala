@@ -40,18 +40,6 @@ object ScaleData {
     val only: Set[String] = args.lift(3)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    // optional 5th arg: skew=<frac> (round 14, verdict task 4) — plant
-    // OCCUPANCY SKEW in the replicated embeddings: in copies i > 0 a
-    // deterministic `frac` of vectors is replaced by a small jitter
-    // around one of 8 shared cluster directions, so sign-LSH buckets
-    // concentrate (real near-dup clusters, not uniform hash spread)
-    // and the d13 capacity pre-gate's predicted pair mass genuinely
-    // crosses a lowered graft.lsh.pairBudget — the corpus that
-    // exercises the escalation path at probe scale, which the uniform
-    // re-randomized copies never do.
-    val skewFrac: Double = args.lift(4)
-      .filter(_.startsWith("skew="))
-      .map(_.stripPrefix("skew=").toDouble).getOrElse(0.0)
     def wanted(name: String): Boolean = only.isEmpty || only(name)
     val stride = 100000000L
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -151,23 +139,8 @@ object ScaleData {
       val shifted = shift("vec_id")(df, i)
       if (i == 0) shifted
       else {
-        val rerolled = shifted.withColumn("embedding", expr(
+        shifted.withColumn("embedding", expr(
           s"transform(embedding, (x, j) -> cast(sin(x * ${i + 2} * 7.3 + j * 0.37) as float))"))
-        if (skewFrac <= 0.0) rerolled
-        else rerolled.withColumn("embedding", expr(
-          // cluster membership and jitter are pure functions of vec_id
-          // (deterministic re-runs); centroid c(k, j) = sin(k·3.7 + j),
-          // jitter ±0.2 puts members at high-but-not-identical cosine,
-          // so narrow widths concentrate whole clusters into shared
-          // buckets (the occupancy skew the pre-gate exists to catch)
-          // while WIDER signatures genuinely split them — pair mass
-          // falls with escalation, the property the gate relies on
-          s"""CASE WHEN pmod(xxhash64(vec_id, 17L), 1000000) < ${(skewFrac * 1e6).toLong}
-                THEN transform(embedding, (x, j) -> cast(
-                       sin(pmod(xxhash64(vec_id, 31L), 8) * 3.7 + j) +
-                       (pmod(xxhash64(vec_id, CAST(j AS BIGINT)), 1000) - 500) / 2500.0
-                     as float))
-                ELSE embedding END"""))
       }
     }
     spark.stop()

@@ -17,8 +17,8 @@ package graft
   * SPARK_GRAFT_SWEEP_THREADS=N runs N entries AT ONCE on the one
   * shared session — the environment the sequential gates never
   * exercise. What it proves: the session-conf windows that remain on
-  * the shared session (the streaming entries' shuffle-partition and
-  * state-provider pins — both documented result-neutral), the helper
+  * the shared session (the streaming entries' shuffle-partition pins,
+  * documented result-neutral), the helper
   * registries, and the catalog all stay CORRECT under interleaved
   * planning/execution; d55/d147's windows moved to child sessions
   * this round so their flags cannot be observed at all. Per-entry

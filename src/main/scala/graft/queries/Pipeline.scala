@@ -308,29 +308,21 @@ object Pipeline {
   private val planeBits16: String =
     graft.expressions.HyperplaneBuckets.planeBitString(48, 16, 64)
 
-  /** The LSH occupancy the ORACLE replays. Env-resolved at render time
-    * so a `GRAFT_LSH_OCCUPANCY=1` one-off certification run through
-    * Verify has BOTH engines select the same signature width (r7's
-    * oracle hardcoded 80, so the documented certification path
-    * false-FAILed — ADVICE r7). The session-conf knob
-    * (graft.lsh.occupancy) remains SPEC-only: specs exercise the Spark
-    * side directly and never render this oracle. */
-  private lazy val oracleOccupancy: Long =
-    sys.env.getOrElse("GRAFT_LSH_OCCUPANCY", "80").toLong
+  /** The expected per-bucket row count the sign-LSH signature width
+    * targets ([[adaptiveBits]]). The replay oracle renders it into its
+    * width derivation; the session conf `graft.lsh.occupancy` overrides
+    * it on the Spark side only, for specs that never render an oracle. */
+  private[graft] val LshOccupancy: Long = 80L
 
   /** The d13/d54/d55 oracle replay core: CTE chain (nb..sc) that
     * re-derives [[lshScoredPairs]] bit-for-bit in DuckDB — adaptive
     * width from its own count(*), integer dot-product signs against
     * the rendered plane matrix, distinct unordered candidate pairs,
     * exact cosine at 4dp. Each consumer appends its own tail CTEs. */
-  // Assembled from LEVEL segments so the CTE cache (check.py
-  // GRAFT_CTE_CACHE=1, r15 verdict task 3) can stage keys and the
-  // scored pair stream once per sweep; the assembled text is
-  // byte-identical to the pre-split spelling.
   private lazy val lshNbSql: String = s"""
       nb AS (SELECT COALESCE(MIN(b), 16) AS b
                   FROM range(6, 17) r(b)
-                  WHERE ($oracleOccupancy::BIGINT << b) >= (SELECT count(*) FROM embeddings))"""
+                  WHERE ($LshOccupancy::BIGINT << b) >= (SELECT count(*) FROM embeddings))"""
 
   private lazy val lshKeysSql: String = s"""iv AS (SELECT vec_id,
                     list_transform(CAST(embedding AS DOUBLE[]),
@@ -377,10 +369,11 @@ object Pipeline {
     * re-rendering the prefix table at the wider stride — the
     * Expression itself takes arbitrary bits.
     *
-    * `occupancy` (default 80) is the expected per-bucket row count the
-    * width targets; specs shrink it (session conf graft.lsh.occupancy)
-    * to exercise wide signatures on small planted corpora. */
-  def adaptiveBits(n: Long, occupancy: Long = 80L): Int = {
+    * `occupancy` (default [[LshOccupancy]]) is the expected per-bucket
+    * row count the width targets; specs shrink it (session conf
+    * graft.lsh.occupancy) to exercise wide signatures on small planted
+    * corpora. */
+  def adaptiveBits(n: Long, occupancy: Long = LshOccupancy): Int = {
     var b = 6
     while (b < 16 && (occupancy << b) < n) b += 1
     b
@@ -522,12 +515,10 @@ object Pipeline {
     GraftExtensions.install(s)
     val emb = T(s, dir, "embeddings")
       .withColumn("vec", col("embedding").cast("array<double>"))
-    // occupancy knob: session conf (specs), env (one-off oracle
-    // certification runs through Verify), default 80 (the contract)
+    // occupancy knob: session conf (specs), else the oracle's constant
     val nVec = cachedCount(s, dir, "nEmbeddings")(T(s, dir, "embeddings").count())
     val bits0 = adaptiveBits(nVec,
-      s.conf.get("graft.lsh.occupancy",
-        sys.env.getOrElse("GRAFT_LSH_OCCUPANCY", "80")).toLong)
+      s.conf.get("graft.lsh.occupancy", LshOccupancy.toString).toLong)
     // CAPACITY PRE-GATE (round 13, verdict task 3 — d146 productized):
     // before the quadratic pair join runs, predict its exact candidate
     // mass Σ c(c−1)/2 over the occupancy distribution at the chosen
@@ -546,8 +537,7 @@ object Pipeline {
     // trades recall for capacity by explicit opt-in. 16 is the replay
     // prefix-table cap (see [[adaptiveBits]]); past it the gate stops
     // and the salted chunking below remains the backstop.
-    val pairBudget = s.conf.get("graft.lsh.pairBudget",
-      sys.env.getOrElse("GRAFT_LSH_PAIR_BUDGET", "2000000000")).toLong
+    val pairBudget = s.conf.get("graft.lsh.pairBudget", "2000000000").toLong
     // Per-row product in decimal(38,0), clamped to Long.MaxValue on
     // read-back (advisor r13): a mega-bucket with bkt_n ≳ 3e9 — the
     // 100 TB pathology this gate exists for — would silently WRAP the
@@ -589,8 +579,7 @@ object Pipeline {
       if (s.conf.get("graft.lsh.oracleGated", "false").toBoolean)
         throw new IllegalStateException(msg + "; the replay oracle derives " +
           "width from count(*) alone and would hash-mismatch at the " +
-          "escalated width — raise graft.lsh.pairBudget or certify with a " +
-          "matching-width oracle (GRAFT_LSH_OCCUPANCY)")
+          "escalated width — raise graft.lsh.pairBudget")
       else System.err.println(s"[graft] $msg")
     }
     // The SLIM scored-pair stream goes through the registry (keyed by
@@ -610,8 +599,7 @@ object Pipeline {
     // where pair counts are small and the one-eval-per-pair saving is
     // the whole cost (the bench SFs), and leaves every probed scale on
     // the sf10-certified in-join shape.
-    val vecCap = s.conf.get("graft.lsh.vecBroadcastCap",
-      sys.env.getOrElse("GRAFT_VEC_BCAST_CAP", "10000")).toLong
+    val vecCap = s.conf.get("graft.lsh.vecBroadcastCap", "10000").toLong
     cachedHelper(s, dir, s"lshScoredPairs:$bits:$saltCap:${nVec <= vecCap}") {
       val bktSizes = lshBktSizes(s, dir, bits) // registry-cached by the pre-gate
       def withNsalt(banded: DataFrame): DataFrame =
@@ -7646,8 +7634,7 @@ object Pipeline {
       GraftExtensions.install(s)
       val bits = adaptiveBits(cachedCount(s, dir, "nEmbeddings")(
           T(s, dir, "embeddings").count()),
-        s.conf.get("graft.lsh.occupancy",
-          sys.env.getOrElse("GRAFT_LSH_OCCUPANCY", "80")).toLong)
+        s.conf.get("graft.lsh.occupancy", LshOccupancy.toString).toLong)
       // the audit reads the SAME registry-persisted occupancy table
       // the engine's pre-gate and salting broadcast consume (round 13)
       // — the "measure what the job will actually see" contract, now
@@ -7681,13 +7668,9 @@ object Pipeline {
     "d147_bucketed_snapshot_diff" -> { (s, dir) =>
       val base = T(s, dir, "documents")
       val wh = s.conf.get("spark.sql.warehouse.dir")
-      // dir-hashed table names: parallel spec suites run on distinct
+      // dir-tagged table names: parallel spec suites run on distinct
       // scratch corpora and must not clobber each other's catalogs.
-      // Full md5 hex, not dir.hashCode (advisor r13): a 32-bit tag
-      // collides across scratch dirs at birthday rates, and a collision
-      // DROPs the other suite's snapshot tables mid-query.
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val tag = Sources.dirTag(dir)
       val (tOld, tNew) = (s"graft_b_snap_old_$tag", s"graft_b_snap_new_$tag")
       Seq(tOld, tNew).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
@@ -8247,47 +8230,6 @@ object Pipeline {
         UNION ALL
         SELECT kind, rank, piece, cnt FROM syr WHERE rank <= 15)
       ORDER BY kind, rank"""
-
-  /** Stress-sweep oracle acceleration (r9 verdict task 1): the two
-    * RECURSIVE prefixes shared across composition audits, as
-    * standalone one-shot materialization statements. At sf1 the
-    * DuckDB side re-ran d20's closure inside d104 AND d117 and d59's
-    * packing recursion inside d116, busting the per-oracle budget
-    * while the Spark sides (which read their own persisted frames)
-    * finished in seconds. check.py (GRAFT_CTE_CACHE=1) COPYs each
-    * prep result to parquet ONCE per sweep and swaps the dependent
-    * oracles to the cached spelling ([[oracleCachedSwaps]]); the
-    * driver's official gate keeps the self-contained `oracles` map
-    * untouched. */
-  val oraclePrep: Seq[(String, String)] = Seq(
-    "graft_cte_d20_comp" -> s"WITH RECURSIVE $d20Ctes SELECT * FROM comp",
-    "graft_cte_d59_out"  -> s"WITH RECURSIVE $d59Ctes SELECT * FROM d59out",
-    // r15 (verdict task 3): the sign-LSH replay staged in two levels —
-    // keys once, then the scored pair stream once — so d13/d54/d55/
-    // d97/d99/d146's cached oracles share ONE signature derivation and
-    // ONE candidate-kernel pass per sweep instead of re-running both
-    // per entry (the sf1 budget-buster).
-    "graft_cte_lsh_keys" -> s"WITH $lshNbSql,\n      $lshKeysSql SELECT * FROM keys",
-    "graft_cte_lsh_sc" ->
-      s"WITH keys AS (SELECT * FROM graft_cte_lsh_keys),\n      $lshScSql SELECT * FROM sc") ++
-    // ...and the 128-hash MinHash family (d15/d23/d85) staged level by
-    // level (ReplaySql.mhPrep: g → reps → mins → keys → candrep).
-    ReplaySql.mhPrep
-
-  /** Textual (fragment → replacement) swaps deriving the cached oracle
-    * spelling: the recursive CTE chain collapses to a read of the
-    * materialized table. Applied verbatim — the oracle strings
-    * interpolate the SAME lazy vals, so the match is exact. */
-  val oracleCachedSwaps: Seq[(String, String)] = Seq(
-    ("RECURSIVE " + d20Ctes) -> "comp AS (SELECT * FROM graft_cte_d20_comp)",
-    ("RECURSIVE " + d59Ctes) -> "d59out AS (SELECT * FROM graft_cte_d59_out)",
-    // the cached spelling keeps nb verbatim (one count(*) — d146 reads
-    // it) and swaps keys + sc to their staged tables; cand/iv/e go
-    // unreferenced downstream of the swap in every consumer.
-    lshScoredSql -> s"""$lshNbSql,
-      keys AS (SELECT * FROM graft_cte_lsh_keys),
-      sc AS (SELECT * FROM graft_cte_lsh_sc)""",
-    ReplaySql.mhCachedSwap, ReplaySql.mhMmSwap)
 
   val oracles: Map[String, String] = Map(
     // Full hash-family replay oracles (ReplaySql): DuckDB re-derives

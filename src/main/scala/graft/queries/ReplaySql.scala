@@ -229,11 +229,6 @@ private[queries] object ReplaySql {
     * divergence (r14 advisor). d85's `keys` consumers keep their
     * deliberate any-band semantics (its engine side measures the
     * any-band shared-key rate; the band column is simply unused). */
-  // The prefix is assembled from LEVEL segments so the CTE cache
-  // (check.py GRAFT_CTE_CACHE=1, r15 verdict task 3) can materialize
-  // each level ONCE per sweep and chain the next level off the staged
-  // parquet — the assembled text below is byte-identical to the
-  // pre-split spelling.
   private val mhG: String =
     s"""$wordsCte,
        |ws AS (SELECT doc_id, list_sort(list_distinct(words)) AS wset FROM docs),
@@ -279,65 +274,6 @@ private[queries] object ReplaySql {
        |$mhKeys,
        |$mhCandrep,
        |$mhM""".stripMargin
-
-  /** CTE-cache staging chain for the 128-hash MinHash family (r15
-    * verdict task 3 — the sf1 certification of d15/d23 previously
-    * re-derived every signature inside ONE monolithic query and blew
-    * the oracle-side budget): each level materializes once per sweep
-    * and the next level reads the staged parquet. `smin` stages as
-    * BIGINT (toSigned maps every minimum into int64; HUGEINT has no
-    * parquet lane — downstream `smin + 2^64` re-promotes, value-equal).
-    * `bkey` stays HUGEINT → parquet DECIMAL(38,0); it is only ever
-    * compared for equality, never folded further. */
-  val mhPrep: Seq[(String, String)] = Seq(
-    "graft_cte_mh_g" -> s"WITH $mhG SELECT * FROM g",
-    "graft_cte_mh_reps" ->
-      s"WITH g AS (SELECT * FROM graft_cte_mh_g),\n$mhReps SELECT * FROM reps",
-    "graft_cte_mh_mins" ->
-      (s"WITH reps AS (SELECT * FROM graft_cte_mh_reps),\n$mhMins " +
-        "SELECT rep_id, k, CAST(smin AS BIGINT) AS smin FROM mins"),
-    "graft_cte_mh_keys" ->
-      s"WITH mins AS (SELECT * FROM graft_cte_mh_mins),\n$mhKeys SELECT * FROM keys",
-    "graft_cte_mh_candrep" ->
-      s"WITH keys AS (SELECT * FROM graft_cte_mh_keys),\n$mhCandrep SELECT * FROM candrep",
-    // Per-rep 16-bit-folded signature LISTS (k-ordered) for d23's
-    // cached tail: the self-contained mm joins mins to BOTH pair sides
-    // per k — |candrep| × 128 intermediate rows, which at sf1's 24.9M
-    // pairs is a ~3.2B-row join that spilled DuckDB past the disk. The
-    // list form makes the pair pass two small-table hash lookups plus a
-    // 128-lane compare per pair, no blowup.
-    "graft_cte_mh_sigl" ->
-      ("WITH mins AS (SELECT * FROM graft_cte_mh_mins) " +
-        "SELECT rep_id, list((smin % 65536 + 65536) % 65536 ORDER BY k) AS sig " +
-        "FROM mins GROUP BY rep_id"))
-
-  /** The cached re-spelling of [[repsPrefix]]: every CTE name the
-    * downstream d15/d23/d85 text references (g, reps, mins, keys,
-    * candrep, m) reads its staged table; m re-derives from the staged
-    * g ⋈ reps (metadata-cheap). */
-  val mhCachedSwap: (String, String) = repsPrefix ->
-    """WITH g AS (SELECT * FROM graft_cte_mh_g),
-      |reps AS (SELECT * FROM graft_cte_mh_reps),
-      |mins AS (SELECT * FROM graft_cte_mh_mins),
-      |keys AS (SELECT * FROM graft_cte_mh_keys),
-      |candrep AS (SELECT * FROM graft_cte_mh_candrep),
-      |m AS (SELECT g.doc_id, reps.rep_id FROM g JOIN reps USING (gid))""".stripMargin
-
-  /** The cached re-spelling of d23's per-k match count: value-identical
-    * arithmetic (count over k of low-16-bit equality, /128, 4dp) read
-    * from the staged signature lists — two hash lookups into the
-    * rep-count-sized sigl table and one 128-lane compare per pair,
-    * replacing the per-k double join whose |candrep|×128 intermediate
-    * blew DuckDB's spill at sf1. */
-  val mhMmSwap: (String, String) = mhMm ->
-    """mm AS (SELECT c.r_a, c.r_b,
-      |              round(CAST(length(list_filter(range(1, 129),
-      |                       i -> sa.sig[CAST(i AS INTEGER)]
-      |                          = sb.sig[CAST(i AS INTEGER)])) AS DOUBLE)
-      |                    / 128.0, 4) AS est_jaccard
-      |       FROM candrep c
-      |       JOIN (SELECT * FROM graft_cte_mh_sigl) sa ON sa.rep_id = c.r_a
-      |       JOIN (SELECT * FROM graft_cte_mh_sigl) sb ON sb.rep_id = c.r_b)""".stripMargin
 
   /** d15: exact Jaccard (d4's rounding contract) over candidate rep
     * pairs ≥ 0.8, expanded through group membership, plus within-group
@@ -426,8 +362,7 @@ private[queries] object ReplaySql {
     * low 16-bit word (two minima agree on their low 16 bits iff these
     * normalized values are equal; Spark's packed-field equality tests
     * the same bits). */
-  // lazy: referenced by mhMmSwap, which is declared earlier in the file
-  private lazy val mhMm: String =
+  private val mhMm: String =
     s"""mm AS (SELECT c.r_a, c.r_b,
        |              round(sum(CASE WHEN (a.smin % 65536 + 65536) % 65536
        |                              = (b.smin % 65536 + 65536) % 65536

@@ -28,6 +28,14 @@ object Sources {
   def scratchDir: String = sys.env.getOrElse("GRAFT_SCRATCH_DIR",
     new java.io.File(sys.props("java.io.tmpdir"), "graft-scratch").getAbsolutePath)
 
+  /** The tag that keys a corpus's scratch dirs and tables: the md5 hex of
+    * its path. A 32-bit `String.hashCode` tag collides (".../Aa" and
+    * ".../BB" hash equal), and two corpora sharing a tag share one
+    * staging dir, so each restages over the other. */
+  def dirTag(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   /** a15's merge plan, shared with PlanAuditSpec so the audited plan IS
     * the production path: matched keys take the upsert row, unmatched
     * upserts insert, untouched base rows pass through. The upsert side
@@ -275,7 +283,7 @@ object Sources {
     // broadcast when the upsert batch is small, which it is here and
     // in most daily-merge pipelines.
     "a15_upsert_merge" -> { (s, dir) =>
-      val base = s"$scratchDir/a15_${Integer.toHexString(dir.hashCode)}"
+      val base = s"$scratchDir/a15_${dirTag(dir)}"
       val orders = T(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           round(col("o_totalprice"), 2).as("o_totalprice"))

@@ -89,7 +89,7 @@ object StreamingOps {
     */
   private def stagedTableDir(s: SparkSession, dir: String, table: String,
       nFiles: Int, tag: String): String = {
-    val base = s"${graft.queries.Sources.scratchDir}/${tag}_${Integer.toHexString(dir.hashCode)}"
+    val base = s"${graft.queries.Sources.scratchDir}/${tag}_${graft.queries.Sources.dirTag(dir)}"
     val in = s"$base/in"
     val stamp = s"${sourceStamp(s, dir, table)}:$nFiles"
     if (!stagingCurrent(s, base, stamp, nFiles)) {
@@ -129,51 +129,6 @@ object StreamingOps {
     s.table(name)
   }
 
-  /** Run `body` with the session's streaming state store pinned to
-    * RocksDB, restoring the previous provider after (VERDICT r9 #5).
-    * Every STATEFUL entry (s3/s5/s13/s14/s16 — join buffers, GroupState
-    * maps) runs under this: the default HDFSBackedStateStoreProvider
-    * holds all state as JVM-heap HashMaps, which is fine on a bounded
-    * replay but the wrong default at 100 TB where join/session state
-    * must be disk-resident per executor with bounded memory. The swap
-    * is pure configuration — the state encoding contract is
-    * provider-independent, so results are byte-equal (StreamingSpec
-    * pins provider parity on the join and GroupState shapes).
-    */
-  def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key,
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** State-store chooser for the stateful entries (round 15): the s13
-    * long-lived-replay matrix (BENCH_NOTES, "s13 state-store matrix on
-    * a LONG-LIVED replay" — partitions x {HDFSBacked, RocksDB} at sf1
-    * and sf10, 26 micro-batches) REFUTED
-    * the r9 assumption that RocksDB is the right default here: with
-    * watermark-BOUNDED state (every stateful entry in this block
-    * guarantees eviction structurally) the per-batch per-store fixed
-    * cost dominates and RocksDB is strictly slower at every probed
-    * scale (s13 family sf10: 63.3 s vs 36.6 s; official-entry family
-    * at sf0.1: RocksDB {36.5, 47.3} vs heap {28.9, 25.3} s). The
-    * results are provider-independent byte-for-byte (StreamingSpec
-    * pins parity on the join and GroupState shapes), so the provider
-    * is pure configuration: default = the session's provider (heap-
-    * backed HDFSBackedStateStoreProvider), and `graft.stream.rocksdb
-    * = true` pins RocksDB for deployments whose per-partition state
-    * approaches executor heap — the regime (state >> 1 GB/partition)
-    * where disk-resident stores earn their fixed cost, which bounded
-    * interval joins and session windows structurally never reach.
-    */
-  def withBoundedStateStore[T](s: SparkSession)(body: => T): T =
-    if (s.conf.get("graft.stream.rocksdb",
-        sys.env.getOrElse("GRAFT_STREAM_ROCKSDB", "false")).toBoolean)
-      withRocksDb(s)(body)
-    else body
-
   /** Shared by s13/s14: the events table staged as a SENTINEL-CLOSED
     * landing zone — the data file plus two far-future sentinel files
     * (user_id −1, one row per event type so every side's watermark
@@ -189,7 +144,7 @@ object StreamingOps {
     */
   def sentinelClosedEventsDir(s: SparkSession, dir: String): String = {
     import org.apache.hadoop.fs.Path
-    val base = s"${graft.queries.Sources.scratchDir}/sclose_${Integer.toHexString(dir.hashCode)}"
+    val base = s"${graft.queries.Sources.scratchDir}/sclose_${graft.queries.Sources.dirTag(dir)}"
     val conf = s.sparkContext.hadoopConfiguration
     val fs = new Path(base).getFileSystem(conf)
     val inDir = s"$base/in"
@@ -547,9 +502,8 @@ object StreamingOps {
       // restore the session default
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", 8)
-      val sunk = try withBoundedStateStore(s) {
-          runToTable(s, joined, "graft_s5", OutputMode.Append())
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val sunk = try runToTable(s, joined, "graft_s5", OutputMode.Append())
+        finally s.conf.set("spark.sql.shuffle.partitions", prev)
       sunk
         .select(col("purchase_id"), col("view_id"), col("p_user").as("user_id"),
           (col("p_ts").cast("long") - col("v_ts").cast("long")).as("lag_sec"))
@@ -723,7 +677,7 @@ object StreamingOps {
     // split). Integer cents as in s11.
     "s12_stream_checkpoint_recovery" -> { (s, dir) =>
       import org.apache.hadoop.fs.{FileUtil, Path}
-      val base = s"${graft.queries.Sources.scratchDir}/s12_${Integer.toHexString(dir.hashCode)}"
+      val base = s"${graft.queries.Sources.scratchDir}/s12_${graft.queries.Sources.dirTag(dir)}"
       val conf = s.sparkContext.hadoopConfiguration
       val fs = new Path(base).getFileSystem(conf)
       // stage a stable 2-file split once per source fingerprint (one
@@ -804,11 +758,10 @@ object StreamingOps {
       // s5's recipe: join state stores per shuffle partition — tiny
       // state, so run at few partitions and restore the default.
       // s13 is the stateful-heaviest entry (both join sides buffer a
-      // watermark-bounded hour of events), so it runs on the RocksDB
-      // state store (VERDICT r5 #5): at 100 TB the join state is
-      // disk-resident per executor instead of JVM-heap HashMaps —
-      // the provider swap is pure configuration, results byte-equal
-      // (StreamingSpec pins provider parity on the shared join shape).
+      // watermark-bounded hour of events). It runs on the session's
+      // state store; a deployment whose state outgrows the heap picks
+      // RocksDB with spark.sql.streaming.stateStore.providerClass, and
+      // results are byte-equal (StreamingSpec pins provider parity).
       // Partition count stays the fixed 8 — MEASURED, not assumed
       // (round 13): scaling it with input volume (32-way at sf10's
       // 10 M events) probed WORSE, 70.8 s vs 46.4 s — per-batch
@@ -819,9 +772,8 @@ object StreamingOps {
       // decision, not this entry's.
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", 8)
-      val sunk = try withBoundedStateStore(s) {
-          runToTable(s, joined, "graft_s13", OutputMode.Append())
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val sunk = try runToTable(s, joined, "graft_s13", OutputMode.Append())
+        finally s.conf.set("spark.sql.shuffle.partitions", prev)
       sunk.filter(col("p_user") >= 0)
         .select(col("purchase_id"), col("view_id"),
           col("p_user").as("user_id"),
@@ -855,9 +807,8 @@ object StreamingOps {
           GroupStateTimeout.EventTimeTimeout())(timeoutSessionize)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", 8)
-      val sunk = try withBoundedStateStore(s) {
-          runToTable(s, sessions.toDF(), "graft_s14", OutputMode.Append())
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val sunk = try runToTable(s, sessions.toDF(), "graft_s14", OutputMode.Append())
+        finally s.conf.set("spark.sql.shuffle.partitions", prev)
       sunk.filter(col("user_id") >= 0)
         .orderBy("user_id", "session_id")
     },
@@ -873,9 +824,8 @@ object StreamingOps {
         .as[Ev]
       val sessions = evs.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(sessionize)
-      withBoundedStateStore(s) {
-        runToTable(s, sessions.toDF(), "graft_s3", OutputMode.Append())
-      }.orderBy("user_id", "session_id")
+      runToTable(s, sessions.toDF(), "graft_s3", OutputMode.Append())
+        .orderBy("user_id", "session_id")
     },
 
     // ---- s15: STREAMING MANIFEST MAINTENANCE — the live half of the
@@ -950,9 +900,8 @@ object StreamingOps {
           GroupStateTimeout.NoTimeout())(mgFold)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", 8)
-      val sunk = try withBoundedStateStore(s) {
-          runToTable(s, summaries.toDF(), "graft_s16", OutputMode.Append())
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val sunk = try runToTable(s, summaries.toDF(), "graft_s16", OutputMode.Append())
+        finally s.conf.set("spark.sql.shuffle.partitions", prev)
       val cand = sunk.groupBy("bucket")
         .agg(expr("max_by(toks, seq)").as("toks"))
         .select(explode(col("toks")).as("tok")).distinct()

@@ -15,6 +15,17 @@ class StreamingSpec extends SparkSpecBase {
 
   private def ts(min: Int): Timestamp = new Timestamp(3600_000L * 24 * 100 + min * 60_000L)
 
+  /** Runs `body` with the session's streaming state store pinned to
+    * RocksDB, restoring the previous provider after. */
+  private def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.get(key,
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally spark.conf.set(key, prev)
+  }
+
   test("s1: watermarked tumbling window emits closed windows in append mode") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -173,9 +184,10 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("s3/s14/s16: RocksDB state store yields identical GroupState results") {
-    // VERDICT r9 #5 widened the RocksDB pin from s13 alone to every
-    // stateful entry. The join shape is covered above; this pins
-    // provider parity on the OTHER stateful shape those entries use —
+    // A deployment may run every stateful entry on RocksDB through
+    // spark.sql.streaming.stateStore.providerClass. The join shape is
+    // covered above; this pins provider parity on the OTHER stateful
+    // shape those entries use —
     // flatMapGroupsWithState (s3/s14's sessionizers, s16's Misra-Gries
     // fold all hold a per-key GroupState map) — and confirms RocksDB
     // actually served the operator via its custom metrics.
@@ -205,7 +217,7 @@ class StreamingSpec extends SparkSpecBase {
           (rows, usedRocks)
         } finally q.stop()
       }
-      if (rocks) StreamingOps.withRocksDb(spark)(body) else body
+      if (rocks) withRocksDb(body) else body
     }
     val (defRows, defRocks) = run(rocks = false, "spec_gs_hdfs")
     val (rocksRows, rocksUsed) = run(rocks = true, "spec_gs_rocks")
@@ -501,6 +513,23 @@ class StreamingSpec extends SparkSpecBase {
     assert(spark.read.parquet(s"$dir/events.parquet").count() == raw.count())
     assert(batchAgg() != before, "the rewrite must change the aggregate")
     check()
+  }
+
+  test("corpora whose paths share a String.hashCode stage to different landing zones") {
+    // ".../tag-Aa" and ".../tag-BB" hash equal; a hash-keyed staging dir
+    // would let the second corpus restage over the first one's stream
+    val (dirAa, dirBB) = (scratch("tag-Aa"), scratch("tag-BB"))
+    assert(dirAa.hashCode == dirBB.hashCode)
+    val events = graft.Tables.load(spark, sfTiny, "events")
+    events.write.parquet(s"$dirAa/events.parquet")
+    events.filter(col("event_id") % 2 === 0).write.parquet(s"$dirBB/events.parquet")
+    val (nAa, nBB) = (graft.Tables.load(spark, dirAa, "events").count(),
+      graft.Tables.load(spark, dirBB, "events").count())
+    assert(nAa != nBB)
+    val aa = StreamingOps.streamEvents(spark, dirAa)
+    val bb = StreamingOps.streamEvents(spark, dirBB)
+    assert(StreamingOps.runToTable(spark, aa, "spec_tag_aa", OutputMode.Append()).count() == nAa)
+    assert(StreamingOps.runToTable(spark, bb, "spec_tag_bb", OutputMode.Append()).count() == nBB)
   }
 
   test("s16: MG state survives adversarial batch cuts; counters stay bounded") {

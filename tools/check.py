@@ -86,23 +86,6 @@ def type_skew(spark_schema, ora_cols, ora_types):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    # GRAFT_CTE_CACHE=1: materialize the shared recursive oracle
-    # prefixes (oracle_prep.json) ONCE as parquet and swap the
-    # dependent oracles to the cached spelling (oracle_sql_cached.json)
-    # that reads the materialized table — the sf1 fix for d104/d116/
-    # d117, whose DuckDB sides otherwise re-run d20's closure / d59's
-    # packing recursion per audit and bust the per-oracle budget. The
-    # driver's gate never sets the env, so the official comparison
-    # always runs the self-contained SQL.
-    cte_cache = os.environ.get("GRAFT_CTE_CACHE", "") == "1"
-    prep_files = {}
-    if cte_cache:
-        try:
-            preps = json.load(open(os.path.join(out_dir, "oracle_prep.json")))
-        except FileNotFoundError:
-            preps = {}
-        for tname, psql in preps.items():
-            prep_files[tname] = os.path.join(out_dir, f"_cte_{tname}.parquet")
     def connect():
         c = duckdb.connect()
         for t in ["region","nation","customer","supplier","part","orders",
@@ -112,31 +95,9 @@ def main():
             p = f"{sf_dir}/{t}.parquet"
             src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
             c.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
-        for tname, f in prep_files.items():
-            if os.path.exists(f):
-                c.sql(f"CREATE VIEW {tname} AS SELECT * FROM '{f}'")
         return c
     con = connect()
-    if cte_cache and prep_files:
-        import time
-        for tname, psql in preps.items():
-            f = prep_files[tname]
-            if os.path.exists(f):
-                print(f"[cte-cache] {tname}: reusing {f}")
-                continue
-            t0 = time.time()
-            con.sql(f"COPY ({psql}) TO '{f}' (FORMAT parquet)")
-            con.sql(f"CREATE VIEW {tname} AS SELECT * FROM '{f}'")
-            print(f"[cte-cache] {tname}: materialized in {time.time()-t0:.1f}s")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    if cte_cache:
-        try:
-            cached = json.load(open(os.path.join(out_dir, "oracle_sql_cached.json")))
-            oracles = {**oracles, **cached}
-            if cached:
-                print(f"[cte-cache] cached oracle spellings: {sorted(cached)}")
-        except FileNotFoundError:
-            pass
 
     def run_with_timeout(c, sql):
         """Run sql on c under GRAFT_ORACLE_TIMEOUT_SEC. Returns "timeout",
