@@ -6,8 +6,9 @@ package graft
   * decisions (SURVEY §4) without modifying queries.
   *
   * Each entry is planned through `GraftSession.runEntry`, as Verify runs
-  * it, so every plan starts from a cleared cache and cleared scalar
-  * memos and does not depend on which entries were planned before it.
+  * it, so every plan starts from a cleared cache, an empty helper
+  * registry and cleared scalar memos, and does not depend on which
+  * entries were planned before it.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

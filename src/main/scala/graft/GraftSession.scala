@@ -64,6 +64,13 @@ object GraftSession {
   private val cancelledGroups = ConcurrentHashMap.newKeySet[String]()
   private var listenedTo: SparkContext = _
 
+  /** Whether a job started with these local properties belongs to a
+    * cancelled group. A job started outside any group carries no group
+    * id, and no properties at all when none were ever set. */
+  private[graft] def inCancelledGroup(props: java.util.Properties): Boolean =
+    Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .exists(cancelledGroups.contains)
+
   /** Cancels every job that starts in a cancelled group. AQE submits
     * shuffle map stages from its own threads, so a timed-out entry can
     * start one after its body has stopped, and a cancelled group
@@ -72,8 +79,7 @@ object GraftSession {
     if (listenedTo ne sc) {
       sc.addSparkListener(new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(p => cancelledGroups.contains(p.getProperty("spark.jobGroup.id"))))
-            sc.cancelJob(e.jobId)
+          if (inCancelledGroup(e.properties)) sc.cancelJob(e.jobId)
       })
       listenedTo = sc
     }
@@ -85,10 +91,13 @@ object GraftSession {
     * lock and then each cached frame's, while a body building a cached
     * frame holds that frame's lock and waits for the manager's, so
     * running both at once deadlocks. The cleanup is the same for every
-    * outcome: release the entry's persisted frames, drop the memoized
-    * scalars, and re-pin the one-partition-per-core shuffle width (a
-    * local session's default parallelism is its core count) that an
-    * entry may have changed and not restored.
+    * outcome: release the entry's persisted frames (`clearCache`), empty
+    * the helper registry and the memoized scalars
+    * (`Pipeline.resetScalarCaches`), so the next entry builds and plans
+    * its helpers as if it ran alone, and re-pin the
+    * one-partition-per-core shuffle width (a local session's default
+    * parallelism is its core count) that an entry may have changed and
+    * not restored.
     */
   def runEntry(spark: SparkSession, name: String, timeoutSec: Long)(body: => Unit): Outcome = {
     val sc = spark.sparkContext

@@ -1,30 +1,23 @@
 package graft
 
-/** Randomized-order full-suite sweep in ONE JVM (round 13, verdict
-  * task 5): the r12 "Recursive update" registry crash was
-  * ORDER-DEPENDENT — it only fired when d97/d99 ran before any other
-  * lshScoredPairs consumer had seeded the inner registry entry — and
-  * stayed masked for a full round because the per-query dev loop runs
-  * entries SOLO in fresh JVMs and Verify/Bench always run the map in
-  * its fixed iteration order. This main runs every SparkEntry entry in
-  * a seeded random order inside one session (shared registries, shared
-  * catalog, per-query clearCache like Verify), so any hidden
-  * inter-query order dependence — registry seeding, catalog/table
-  * clobbering, leaked session conf — fails the sweep instead of
-  * shipping.
+/** Every SparkEntry entry in a seeded random order inside ONE session,
+  * each through `GraftSession.runEntry` as Verify runs it, so a hidden
+  * order dependence between entries — catalog/table clobbering, leaked
+  * session conf — fails the sweep instead of shipping: the per-entry
+  * dev loop runs entries alone in fresh JVMs, and Verify and Bench
+  * always run them in one fixed order. The runner empties the helper
+  * registry with the cache after every entry, so no entry plans against
+  * frames an earlier one built.
   *
-  * CONCURRENT mode (round 14, verdict task 5):
-  * SPARK_GRAFT_SWEEP_THREADS=N runs N entries AT ONCE on the one
-  * shared session — the environment the sequential gates never
-  * exercise. What it proves: the session-conf windows that remain on
-  * the shared session (the streaming entries' shuffle-partition pins,
-  * documented result-neutral), the helper
-  * registries, and the catalog all stay CORRECT under interleaved
-  * planning/execution; d55/d147's windows moved to child sessions
-  * this round so their flags cannot be observed at all. Per-entry
-  * cache hygiene is deliberately kept in this mode — a concurrent
-  * clearCache yanking a frame another entry is mid-way through
-  * reading must only cost recompute, never correctness.
+  * SPARK_GRAFT_SWEEP_THREADS=N runs N entries AT ONCE on the one shared
+  * session — the environment the sequential gates never exercise. It
+  * checks that the session-conf windows left on the shared session (the
+  * streaming entries' shuffle-partition pins, documented
+  * result-neutral), the helper registry and the catalog stay CORRECT
+  * under interleaved planning and execution. Each entry's cleanup runs
+  * while other entries run: a clearCache or registry reset that drops a
+  * frame another entry is mid-way through reading must only cost
+  * recompute, never correctness.
   *
   * Usage: graft.Sweep <sfDir> [seed]. Prints one JSON line
   * {"seed":…,"n":…,"threads":…,"failed":…} on stdout; per-query
@@ -51,8 +44,8 @@ object Sweep {
     // Every attempt gets its own job group from the runner, so two
     // concurrent entries never share a cancellation scope; a timed-out
     // entry is waited for before the next one starts on this thread.
-    // The runner's cleanup (released caches, reset scalars, re-pinned
-    // shuffle width) is part of the environment the order-independence
+    // The runner's cleanup (released caches, emptied helper registry and
+    // scalar memos, re-pinned shuffle width) is part of the environment the order-independence
     // claim is made under; in concurrent mode it runs concurrently too
     // (see the scaladoc).
     def runOne(name: String): Unit = {

@@ -407,13 +407,10 @@ object Pipeline {
       .withColumn("domain", expr("split_part(path, '/', 1)"))
 
   /** One tokenize + sort + dedup + group-hash pass per doc, PERSISTED
-    * through the session registry (round 12: a per-call persist() of
-    * this identical plan was the spec suite's "already cached"
-    * CacheManager warning — specs call d15/d23 twice on one dir; now
-    * d15/d23/d85 share ONE cached token pass per corpus) — every
-    * consumer (rep aggregation, banding, membership expansion) reads it
-    * without re-scanning the corpus. gid is injective for
-    * whitespace-split words (no token contains a space).
+    * through the helper registry, so d15/d23/d85 and every consumer
+    * within an entry (rep aggregation, banding, membership expansion)
+    * read one cached token pass without re-scanning the corpus. gid is
+    * injective for whitespace-split words (no token contains a space).
     */
   private def collapsedWordSets(s: SparkSession, dir: String): DataFrame =
     cachedHelper(s, dir, "collapsedWordSets") {
@@ -446,6 +443,20 @@ object Pipeline {
                xxhash64(n.fp)) AS dup
       FROM graft_d47_new n""")
   }
+
+  /** Per-width sign-LSH bucket occupancy table `(bkt, bkt_n)`,
+    * registry-PERSISTED: ONE corpus×48 explode+count pass per
+    * (corpus, width) serves three consumers — the capacity
+    * pre-gate's pair-mass aggregate (which materializes it), the
+    * salted band join's occupancy broadcast, and d146's capacity
+    * audit. Bucket-count-sized (≤ 48·2^bits rows), cheap to pin. */
+  private def lshBktSizes(s: SparkSession, dir: String, bits: Int): DataFrame =
+    cachedHelper(s, dir, s"lshBktSizes:$bits") {
+      T(s, dir, "embeddings")
+        .withColumn("vec", col("embedding").cast("array<double>"))
+        .select(explode(expr(s"hyperplane_buckets(vec, 48, $bits)")).as("bkt"))
+        .groupBy("bkt").agg(count(lit(1)).as("bkt_n"))
+    }
 
   /** Undirected sign-LSH candidate pairs over the whole embedding
     * corpus, scored with the exact cosine kernel — the shared engine
@@ -497,20 +508,6 @@ object Pipeline {
     * equality is spec-verified (DedupSpec) via the graft.lsh.saltCap
     * session knob.
     */
-  /** Per-width sign-LSH bucket occupancy table `(bkt, bkt_n)`,
-    * registry-PERSISTED (round 13): ONE corpus×48 explode+count pass
-    * per (corpus, width) serves three consumers — the capacity
-    * pre-gate's pair-mass aggregate (which materializes it), the
-    * salted band join's occupancy broadcast, and d146's capacity
-    * audit. Bucket-count-sized (≤ 48·2^bits rows), cheap to pin. */
-  private def lshBktSizes(s: SparkSession, dir: String, bits: Int): DataFrame =
-    cachedHelper(s, dir, s"lshBktSizes:$bits") {
-      T(s, dir, "embeddings")
-        .withColumn("vec", col("embedding").cast("array<double>"))
-        .select(explode(expr(s"hyperplane_buckets(vec, 48, $bits)")).as("bkt"))
-        .groupBy("bkt").agg(count(lit(1)).as("bkt_n"))
-    }
-
   private def lshScoredPairs(s: SparkSession, dir: String): DataFrame = {
     GraftExtensions.install(s)
     val emb = T(s, dir, "embeddings")
@@ -588,7 +585,7 @@ object Pipeline {
     // heavy (bucket, id, vec) frame is deliberately NOT persisted —
     // the two join sides re-run the explode once per corpus (one extra
     // plane-dot pass), which beats pinning corpus × 48 × vec rows in
-    // storage for the JVM lifetime (review finding).
+    // storage.
     val saltCap = s.conf.get("graft.lsh.saltCap", "2000").toInt
     // Cap default 10 k, set by measurement not by broadcast-size limits
     // (a 250 k cap would broadcast fine): the r12 sf10 probe measured
@@ -609,13 +606,13 @@ object Pipeline {
         // broadcast-dim path: ids-only banded self-join → distinct
         // pairs → map-side vector lookups → one kernel eval per pair.
         // The keyed frame is SLIM (ids + bucket + salt width — vec is
-        // only the hyperplane input, never carried) and PINNED (round
-        // 15): both self-join sides read it, and unpinned the 48-plane
-        // pass ran once per side. Bounded by the vecCap guard
-        // (≤ 48·vecCap rows), so the pin is dimension-sized by
-        // construction — the in-join path below keeps its deliberate
-        // no-pin trade (r13 review: corpus×48×vec rows is too heavy).
-        val sized = pinInner(withNsalt(emb.select(col("vec_id"),
+        // only the hyperplane input, never carried) and PINNED: both
+        // self-join sides read it, so the 48-plane pass runs once, not
+        // once per side. Bounded by the vecCap guard (≤ 48·vecCap rows),
+        // so the pin is dimension-sized by construction — the in-join
+        // path below deliberately does not pin (corpus×48×vec rows is
+        // too heavy).
+        val sized = pinOnce(withNsalt(emb.select(col("vec_id"),
           explode(expr(s"hyperplane_buckets(vec, 48, $bits)")).as("bkt"))))
         val a = sized.select(col("bkt"),
           pmod(col("vec_id"), col("nsalt")).cast("int").as("salt"),
@@ -700,10 +697,9 @@ object Pipeline {
     * symmetric [[lshScoredPairs]] stream; d54's graph contract as a
     * shared registry-persisted helper. d97's propagation rounds and
     * d99's pagerank rounds read the SAME edge list the d54 entry
-    * certifies (composition discipline), and the registry replaces the
-    * two per-call persists of byte-identical plans that logged the
-    * spec suite's last CacheManager "already cached" warning (round
-    * 12). Ids and one double only — vectors never enter the frame. */
+    * certifies (composition discipline), persisted once per entry by
+    * the registry. Ids and one double only — vectors never enter the
+    * frame. */
   private def lshKnnEdges(s: SparkSession, dir: String): DataFrame =
     cachedHelper(s, dir, "lshKnnEdges") {
       val sc0 = lshScoredPairs(s, dir)
@@ -793,170 +789,55 @@ object Pipeline {
     keys.iterator.map(d => (d, minOfRoot(find(d))))
   }
 
-  /** d4's pair generation WITHOUT the presentation sort — shared by d4
-    * (which adds the deterministic output ordering) and d20 (whose
-    * groupByKey would discard it; feeding it the unsorted pair stream
-    * saves a pointless global sort of the full edge set).
-    *
-    * Blocking key (lang, n_chars bucket) bounds the self-join; a cheap
-    * size-ratio prefilter (J ≥ 0.5 ⇒ 2·min(|A|,|B|) ≥ max(|A|,|B|), so
-    * it never drops a qualifying pair) prunes before the exact kernel;
-    * jaccard_sim_sorted is one compiled merge pass per surviving pair.
-    *
-    * Mega-bucket guard: on a homogeneous corpus one block can hold most
-    * of the corpus, collapsing the self-join into a single quadratic
-    * task. Blocks over saltCap docs are chunk-salted — side A carries
-    * salt = doc_id mod nsalt, side B explodes every salt value — so
-    * each pair is still met EXACTLY once (results unchanged, oracle
-    * stays exact, unlike minhash-band salting which drops pairs) while
-    * the block's pair scan splits across nsalt tasks. nsalt is derived
-    * per-block from a broadcast block-size aggregate; normal blocks get
-    * nsalt = 1 and zero explosion overhead. Homogeneous-corpus bounded
-    * completion is spec-verified (DedupSpec).
+  /** Per-entry registry of shared PERSISTED helper frames, keyed by
+    * (session, corpus dir, helper). Within one entry every consumer of a
+    * helper reads the one frame its first call built and persisted, so a
+    * labeling or pair set is computed once per entry rather than once per
+    * consumer, and no identical plan is persisted twice (CacheManager's
+    * "already cached" warning). [[resetScalarCaches]] empties it at the
+    * point callers `clearCache`, so every entry builds and plans its
+    * helpers the same way whatever ran before it. A corpus dir must not
+    * change while one entry runs.
     */
-  /** d20's cluster labeling — salted per-chunk union-find over d4Pairs
-    * edges, merged per block via cogroup — extracted (round 10) so the
-    * d142 purity audit provably reads the SAME components the d20
-    * entry certifies. Returns the PERSISTED (doc_id, root) frame;
-    * every consumer (size aggregate, final join, lang join) reads the
-    * cache — without it the cogroup and the d4 pair generation
-    * upstream execute twice (caught by Explain audit). */
-  /** Session-scoped registry for shared PERSISTED helper frames
-    * (round 11, unpersist-discipline task): repeated calls for the
-    * same (session, dir, helper) return the ONE already-persisted
-    * frame instead of persisting a fresh identical plan per consumer —
-    * previously every d20/d104/d116/d117/d142 invocation left its own
-    * cached (doc_id, root) labeling (plus the upstream d4 pair scan)
-    * alive for the JVM lifetime, accreting memory and logging
-    * CacheManager "already cached" warnings across a 256-entry bench
-    * run. Bounded by construction: one entry per distinct corpus dir,
-    * and reuse is also the right cost model — the labeling is computed
-    * once per corpus, not once per consuming query.
-    */
-  private final case class HelperEntry(df: DataFrame,
-      touched: java.util.concurrent.atomic.AtomicLong,
-      innerPins: Seq[DataFrame] = Nil)
-
-  /** Stack of per-build collectors for [[pinInner]] — one frame pushed
-    * per in-flight cachedHelper build on this thread (builds NEST:
-    * lshKnnEdges builds by calling lshScoredPairs). */
-  private val innerPinStack =
-    new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[DataFrame]]] {
-      override def initialValue: List[scala.collection.mutable.ArrayBuffer[DataFrame]] = Nil
-    }
-
-  /** pinOnce for frames persisted INSIDE a cachedHelper build (advisor
-    * r15): the pin is registered with the enclosing helper entry so
-    * eviction unpersists it together with the entry frame — an
-    * untracked inner pin strands its blocks in the CacheManager for the
-    * JVM lifetime on every evict/rebuild cycle. A racing double-build
-    * pins the identical plan, which the CacheManager dedupes to one
-    * cache entry, so the winner's eviction releases the loser's pin
-    * too. Outside a build this degrades to plain pinOnce. */
-  private def pinInner(df: DataFrame): DataFrame = {
-    val pinned = pinOnce(df)
-    innerPinStack.get() match {
-      case head :: _ => head += pinned
-      case Nil => ()
-    }
-    pinned
-  }
   private val helperCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), HelperEntry]()
-  private val helperClock = new java.util.concurrent.atomic.AtomicLong()
-  // CONTRACT: corpus dirs are immutable for the JVM lifetime (true for
-  // Verify/Bench/the spec suite — every spec writes a fresh scratch
-  // dir); a dir rewritten in-place would be served the stale frame.
-  // Bounded: entries accrete per distinct (session, dir, helper); the
-  // spec suite is the only caller that generates many dirs, so past 64
-  // entries the LEAST-RECENTLY-TOUCHED half is dropped (advisor r12:
-  // the earlier wholesale clear() also unpersisted frames captured by
-  // an in-flight nested build in ANOTHER suite thread, silently
-  // recomputing the upstream pair scans the registry exists to share —
-  // LRU-half eviction spares every recently-returned frame).
-  // Correctness is unaffected either way (the next call rebuilds).
-  // Eviction UNPERSISTS each dropped frame first (advisor r11):
-  // removing only the map entry would leave the evicted frames' blocks
-  // pinned in their sessions' CacheManagers for the JVM lifetime — the
-  // exact accretion the registry exists to prevent.
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+
+  // get-then-putIfAbsent, not computeIfAbsent: builds nest (lshKnnEdges
+  // → lshScoredPairs → lshBktSizes), and a nested computeIfAbsent on one
+  // ConcurrentHashMap throws IllegalStateException("Recursive update").
+  // A racing double build yields the identical plan, whose persist the
+  // CacheManager dedupes; the winner is putIfAbsent's return value.
   private def cachedHelper(s: SparkSession, dir: String, helper: String)(
       build: => DataFrame): DataFrame = {
-    if (helperCache.size > 64) {
-      import scala.jdk.CollectionConverters._
-      val oldestHalf = helperCache.entrySet().asScala.toSeq
-        .sortBy(_.getValue.touched.get()).take(helperCache.size / 2)
-      oldestHalf.foreach { e =>
-        // remove(k, v) — never unpersist an entry another thread just
-        // replaced or re-touched past our snapshot's eviction line.
-        // Inner pins (advisor r15) release with their entry.
-        if (helperCache.remove(e.getKey, e.getValue)) {
-          (e.getValue.df +: e.getValue.innerPins).foreach { f =>
-            try f.unpersist(blocking = false)
-            catch { case _: Throwable => () }
-          }
-        }
-      }
-    }
-    // get-then-putIfAbsent, NOT computeIfAbsent: helper builds NEST
-    // (lshKnnEdges builds by calling lshScoredPairs, itself registered
-    // here), and a nested computeIfAbsent on one ConcurrentHashMap
-    // throws IllegalStateException("Recursive update") — found by the
-    // r12 sf10 probe running d97/d99 as the FIRST family queries in a
-    // JVM (every earlier run had d13/d54/d55 seed the inner entry
-    // first). The non-atomic swap is safe here: builds are
-    // deterministic plans, so a racing double-build yields identical
-    // frames and the CacheManager dedupes the persist by plan. The
-    // winner is taken from putIfAbsent's atomic RETURN value (advisor
-    // r12: a re-read get() could observe another thread's eviction
-    // between the two calls and hand pinOnce a null).
     val key = (s, dir, helper)
-    val entry = {
-      val cur = helperCache.get(key)
-      if (cur != null) cur
-      else {
-        // run the build under a fresh inner-pin collector so pinInner
-        // calls inside it register with THIS entry (and only this one —
-        // nested builds push their own frame)
-        val collector = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        innerPinStack.set(collector :: innerPinStack.get())
-        val built = try build finally innerPinStack.set(innerPinStack.get().tail)
-        val fresh = HelperEntry(built,
-          new java.util.concurrent.atomic.AtomicLong(helperClock.incrementAndGet()),
-          collector.toSeq)
-        Option(helperCache.putIfAbsent(key, fresh)).getOrElse(fresh)
-      }
+    val cur = helperCache.get(key)
+    if (cur != null) cur
+    else {
+      val built = pinOnce(build)
+      Option(helperCache.putIfAbsent(key, built)).getOrElse(built)
     }
-    entry.touched.set(helperClock.incrementAndGet())
-    // Verify/Bench clearCache() between queries: re-pin a frame whose
-    // cache entry was dropped, so every consuming query still reads ONE
-    // persisted labeling (persist is skipped when already live — that
-    // skip is exactly what kills the "already cached" warnings).
-    pinOnce(entry.df)
   }
 
-  /** Session-scoped registry for adaptive-path SCALARS (round 13,
-    * verdict task 8): the corpus row counts and capacity estimates that
-    * pick between broadcast/in-join/banding shapes were re-running a
-    * driver-side count() action on every invocation even when the
-    * frame itself was registry-cached — distributed and metadata-cheap,
-    * but at 100 TB an extra full-scan count per cold consumer is real.
-    * Same immutable-dir contract as [[helperCache]]; values are plain
-    * longs, so eviction needs no unpersist and a wholesale reset is
-    * safe at any time.
+  /** Per-entry memo for the adaptive-path SCALARS: the corpus row counts
+    * and capacity estimates that pick between broadcast/in-join/banding
+    * shapes run one driver-side count() per entry however many helpers
+    * read them. Same lifetime as [[helperCache]].
     */
   private val countCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
 
-  /** Bench purity hook (round 16, verdict #7): Bench's per-query
-    * cleanup calls this next to clearCache() so NO memoized scalar
-    * survives the per-query boundary — the first family query and every
-    * later one pay the same count() actions inside their timed window.
-    * (clearCache() already drops the data blocks; this drops the longs.)
+  /** Drops every per-entry memo: the helper registry's frames and the
+    * memoized scalars. Callers pair it with `spark.catalog.clearCache()`,
+    * which releases the frames' blocks, so the next entry builds,
+    * persists and counts everything it reads itself.
     */
-  def resetScalarCaches(): Unit = countCache.clear()
+  def resetScalarCaches(): Unit = {
+    helperCache.clear()
+    countCache.clear()
+  }
+
   private[graft] def cachedCount(s: SparkSession, dir: String, key: String)(
       compute: => Long): Long = {
-    if (countCache.size > 512) countCache.clear()
     val k = (s, dir, key)
     val cur = countCache.get(k)
     if (cur != null) cur.longValue
@@ -967,14 +848,6 @@ object Pipeline {
     }
   }
 
-  /** persist() that first consults the CacheManager BY PLAN (round 12:
-    * Dataset.storageLevel does a cacheManager lookup on the logical
-    * plan, not an object-identity check) — a second invocation of the
-    * same query on the same dir builds an identical plan, and a bare
-    * persist() there logs CacheManager's "already cached" warning once
-    * per call site while reusing the cache anyway. Skipping the
-    * redundant call is behavior-identical and keeps spec-suite runs
-    * warning-free, the same discipline bench earned in round 11. */
   /** Slice fan-out for d33's decomposed vocabulary rank: tracks the
    *  session's shuffle parallelism (32 here; a 1000-executor run widens
    *  it via spark.sql.shuffle.partitions — the d58 shard-widening note),
@@ -982,11 +855,23 @@ object Pipeline {
   private def zipfSlices(s: SparkSession): Int =
     math.max(8, s.sessionState.conf.numShufflePartitions)
 
+  /** persist() that first consults the CacheManager BY PLAN
+    * (Dataset.storageLevel looks the logical plan up in the
+    * CacheManager; it is not an object-identity check): a second call
+    * with an identical plan reuses the cache either way, but a bare
+    * persist() there logs CacheManager's "already cached" warning.
+    * Skipping the redundant call changes no behaviour. */
   private def pinOnce(df: DataFrame): DataFrame = {
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
     df
   }
 
+  /** d20's cluster labeling — salted per-chunk union-find over d4Pairs
+    * edges, merged per block via cogroup — shared so the d142 purity
+    * audit provably reads the SAME components the d20 entry certifies.
+    * Returns the registry-PERSISTED (doc_id, root) frame; every consumer
+    * (size aggregate, final join, lang join) reads the cache, so the
+    * cogroup and the d4 pair generation upstream execute once. */
   private[graft] def d20Components(s: SparkSession, dir: String): DataFrame =
     cachedHelper(s, dir, "d20Components")(d20ComponentsPlan(s, dir))
 
@@ -1098,6 +983,27 @@ object Pipeline {
     d112Rank(cand.join(names, "gkey"))
   }
 
+  /** d4's pair generation WITHOUT the presentation sort — shared by d4
+    * (which adds the deterministic output ordering) and d20 (whose
+    * groupByKey would discard it; feeding it the unsorted pair stream
+    * saves a pointless global sort of the full edge set).
+    *
+    * Blocking key (lang, n_chars bucket) bounds the self-join; a cheap
+    * size-ratio prefilter (J ≥ 0.5 ⇒ 2·min(|A|,|B|) ≥ max(|A|,|B|), so
+    * it never drops a qualifying pair) prunes before the exact kernel;
+    * jaccard_sim_sorted is one compiled merge pass per surviving pair.
+    *
+    * Mega-bucket guard: on a homogeneous corpus one block can hold most
+    * of the corpus, collapsing the self-join into a single quadratic
+    * task. Blocks over saltCap docs are chunk-salted — side A carries
+    * salt = doc_id mod nsalt, side B explodes every salt value — so
+    * each pair is still met EXACTLY once (results unchanged, oracle
+    * stays exact, unlike minhash-band salting which drops pairs) while
+    * the block's pair scan splits across nsalt tasks. nsalt is derived
+    * per-block from a broadcast block-size aggregate; normal blocks get
+    * nsalt = 1 and zero explosion overhead. Homogeneous-corpus bounded
+    * completion is spec-verified (DedupSpec).
+    */
   private def d4Pairs(s: SparkSession, dir: String): DataFrame = {
     GraftExtensions.install(s)
     val saltCap = 2000 // docs per block chunk before the scan splits

@@ -219,6 +219,43 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
+  test("d20: a corpus dir rewritten between entries is read afresh") {
+    // Run as Verify runs entries: through runEntry, whose cleanup
+    // empties the helper registry, so the d20 labeling built over the
+    // first corpus is not served for the second.
+    import spark.implicits._
+    def corpus(tag: String, n: Int, nDup: Int): DataFrame = {
+      def text(i: Int): String = (0 until 60).map { j =>
+        val h = scala.util.hashing.MurmurHash3.stringHash(s"$tag:$i:$j")
+        f"tok${math.abs(h) % 100000}%05d"
+      }.mkString(" ")
+      ((0 until n).map(i => (i.toLong, text(i))) ++
+        (0 until nDup).map(i => (1000L + i, text(i))))
+        .toDF("doc_id", "text")
+        .withColumn("lang", lit("en"))
+        .withColumn("source", lit("spec"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+    }
+    def d20(dir: String): Seq[(Long, Long, Long, Boolean)] = {
+      var out = Seq.empty[(Long, Long, Long, Boolean)]
+      val outcome = GraftSession.runEntry(spark, "d20_dedup_clusters", 120) {
+        out = Pipeline.queries("d20_dedup_clusters")(spark, dir).collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      }
+      assert(outcome.isInstanceOf[GraftSession.Outcome.Done], s"d20 on $dir: $outcome")
+      out
+    }
+    val rewritten = scratch("d20-rewritten")
+    GraftWriter.write(corpus("a", 20, 3), s"$rewritten/documents.parquet")
+    assert(d20(rewritten).length == 23)
+    GraftWriter.write(corpus("b", 12, 5), s"$rewritten/documents.parquet")
+    val fresh = scratch("d20-fresh")
+    GraftWriter.write(corpus("b", 12, 5), s"$fresh/documents.parquet")
+    val want = d20(fresh)
+    assert(want.length == 17 && want.count(!_._4) == 5, s"$want")
+    assert(d20(rewritten) == want)
+  }
+
   test("d28: heavy-hitters sketch + rerank is exact on a 1000-word corpus with evictions") {
     // 1000 distinct words >> k = 64 counters, so the sketch evicts
     // constantly in update() AND merges partial summaries across

@@ -2,6 +2,7 @@ package graft
 
 import graft.GraftSession.Outcome
 import graft.queries.Pipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.storage.StorageLevel
 
@@ -85,16 +86,32 @@ class EntryRunnerSpec extends SparkSpecBase {
     var computed = 0
     def memoCount(): Long = Pipeline.cachedCount(spark, dir, "n") { computed += 1; 7L }
     val df = spark.range(100).selectExpr("id % 7 as k")
+    var helpers = Seq.empty[DataFrame]
     val outcome = GraftSession.runEntry(spark, "conf_leak", 30) {
       spark.conf.set(shufflePartitions, "1")
       df.persist().count()
       memoCount()
+      helpers = Seq.fill(2)(Pipeline.d20Components(spark, sfTiny))
     }
     assert(outcome.isInstanceOf[Outcome.Done])
     assert(spark.conf.get(shufflePartitions) == "4")
     assert(df.storageLevel == StorageLevel.NONE)
     memoCount()
     assert(computed == 2, "a count memoized inside the entry survived its cleanup")
+    assert(helpers(0) eq helpers(1), "one entry built the d20 labeling twice")
+    assert(!(Pipeline.d20Components(spark, sfTiny) eq helpers(0)),
+      "a helper frame built inside the entry survived its cleanup")
+  }
+
+  test("the late-job listener skips jobs started outside any job group") {
+    // Jobs started outside a group carry no group id, or no local
+    // properties at all; neither may reach the cancelled-group set,
+    // whose lookup throws on a null key.
+    assert(!GraftSession.inCancelledGroup(null))
+    assert(!GraftSession.inCancelledGroup(new java.util.Properties()))
+    val grouped = new java.util.Properties()
+    grouped.setProperty("spark.jobGroup.id", "never-cancelled#0")
+    assert(!GraftSession.inCancelledGroup(grouped))
   }
 }
 

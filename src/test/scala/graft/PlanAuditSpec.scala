@@ -1833,4 +1833,38 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(benchStyleInvocation() == 42L && computePaid == 2,
       "after the per-query reset the next invocation must re-pay the count")
   }
+
+  test("registry-backed plans do not depend on the entry planned before them") {
+    // Each entry is planned through runEntry, whose cleanup runs between
+    // entries as in Verify and Explain. Each pair gets a fresh corpus
+    // dir, so the first plan of `entry` is one with nothing before it.
+    import spark.implicits._
+    def corpus(name: String): String = {
+      val dir = scratch(name)
+      val rnd = new scala.util.Random(31)
+      val rows = (0 until 200).map(i =>
+        (i.toLong, Array.fill(64)(rnd.nextGaussian().toFloat), i % 5))
+      graft.sources.GraftWriter.write(rows.toDF("vec_id", "embedding", "label"),
+        s"$dir/embeddings.parquet")
+      dir
+    }
+    def relations(name: String, dir: String): Int = {
+      var n = -1
+      val outcome = GraftSession.runEntry(spark, name, 120) {
+        val p = Pipeline.queries(name)(spark, dir).queryExecution.executedPlan.toString
+        n = "InMemoryRelation".r.findAllIn(p).length
+      }
+      assert(outcome.isInstanceOf[GraftSession.Outcome.Done], s"$name: $outcome")
+      n
+    }
+    for ((before, entry) <- Seq("d13_embed_neardup" -> "d54_knn_graph",
+        "d54_knn_graph" -> "d97_label_propagation")) {
+      val dir = corpus(s"plan-order-$entry")
+      val alone = relations(entry, dir)
+      relations(before, dir)
+      val after = relations(entry, dir)
+      assert(after == alone,
+        s"$entry planned after $before shows $after InMemoryRelations, alone $alone")
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (Test / fork := true →
@@ -17,8 +18,17 @@ object TestSpark {
   }
 }
 
-trait SparkSpecBase extends AnyFunSuite {
+trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Every test ends the way `GraftSession.runEntry` ends an entry, so
+    * no test sees persisted frames, helper frames or memoized counts an
+    * earlier test left behind. */
+  override def afterEach(): Unit =
+    try {
+      spark.catalog.clearCache()
+      graft.queries.Pipeline.resetScalarCaches()
+    } finally super.afterEach()
   /** Smallest driver-generated scale factor — specs stay sub-second. */
   val sfTiny = "/root/testdata/sf0.001"
   val sfSmall = "/root/testdata/sf0.01"
