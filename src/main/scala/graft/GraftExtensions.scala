@@ -247,11 +247,16 @@ object GraftExtensions {
   /** Idempotently register all graft functions AND the optimizer rule on
     * an existing session (the programmatic twin of the
     * spark.sql.extensions config path, which must be set at SparkContext
-    * creation and can't be added to a live session). */
+    * creation and can't be added to a live session). A function is
+    * registered only when the registry does not already hold its exact
+    * builder: `functions` is one `val`, so a builder is compared by
+    * identity, and a session that has them (through either path) is
+    * left untouched. */
   def install(spark: SparkSession): Unit = {
-    functions.foreach { case (name, inf, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, _, builder) =>
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
     if (!spark.experimental.extraOptimizations.contains(graft.plans.JaccardPrefilter))
       spark.experimental.extraOptimizations =

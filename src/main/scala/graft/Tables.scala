@@ -19,6 +19,13 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalizeTs(graft.sources.GraftReader.parquet(spark, s"$sfDir/$name.parquet"))
 
+  /** Rows of table `name` from its parquet footers, with no Spark job:
+    * exact up to `upTo`, above `upTo` otherwise, None where the footers
+    * cannot answer ([[graft.sources.GraftReader.rowCount]]). */
+  def rowCount(spark: SparkSession, sfDir: String, name: String,
+      upTo: Long = Long.MaxValue): Option[Long] =
+    graft.sources.GraftReader.rowCount(spark, s"$sfDir/$name.parquet", upTo)
+
   /** events.ts arrives in whatever physical form the driver's generator
     * used this round; normalize every variant to session-tz TimestampType
     * so downstream epoch arithmetic and streaming event-time both work:

@@ -445,11 +445,11 @@ object Pipeline {
   }
 
   /** Per-width sign-LSH bucket occupancy table `(bkt, bkt_n)`,
-    * registry-PERSISTED: ONE corpus×48 explode+count pass per
-    * (corpus, width) serves three consumers — the capacity
-    * pre-gate's pair-mass aggregate (which materializes it), the
-    * salted band join's occupancy broadcast, and d146's capacity
-    * audit. Bucket-count-sized (≤ 48·2^bits rows), cheap to pin. */
+    * registry-PERSISTED: one corpus×48 explode+count pass per
+    * (corpus, width) serves the capacity pre-gate's pair-mass
+    * aggregate, the salted band join's occupancy broadcast (built only
+    * for a corpus over saltCap rows) and d146's capacity audit.
+    * Bucket-count-sized (≤ 48·2^bits rows), cheap to pin. */
   private def lshBktSizes(s: SparkSession, dir: String, bits: Int): DataFrame =
     cachedHelper(s, dir, s"lshBktSizes:$bits") {
       T(s, dir, "embeddings")
@@ -459,61 +459,41 @@ object Pipeline {
     }
 
   /** Undirected sign-LSH candidate pairs over the whole embedding
-    * corpus, scored with the exact cosine kernel — the shared engine
-    * behind d13 (threshold near-dup pairs) and d54 (corpus-wide kNN
-    * graph). Shape (the 100 TB contract, re-measured round 11): bucket
-    * keys are 48 hyperplane tables at [[adaptiveBits]] width; vectors
-    * ride ONLY the linear (bucket, id, vec) shuffle — corpus × tables
-    * rows — and the kernel runs INSIDE the bucket join's codegen, so
-    * what leaves the join is (id_a, id_b, cos): the quadratic
-    * candidate stream never carries arrays. Multi-table duplicate
-    * collisions EMIT ONCE at the pair's first shared table (round 14:
-    * first_shared_lane16 over hyperplane_packed16's quarter-width
-    * signature transport — no post-score dedup exchange; history
-    * below). The r11 shape (ids-only distinct FIRST, vectors joined
-    * back per side) measured ~5× fewer kernel evals at sf0.1 — but
-    * its second vector join shuffled vec_a on every candidate row: at
-    * the sf10 probe (200k vectors, 351M candidate rows) that exchange
-    * alone was ~180 GB and spilled the host's disk dry. The r12-r13
-    * shape scored every collision and deduped after on slim rows —
-    * but a pair's collisions land in different table partitions by
-    * construction, so that exchange's partials could not combine (the
-    * d23 lesson); the emit-once transplant probed PAIRED at sf10
-    * {71.0, 135.1 s} vs {178.4, 257.8 s} same-day (~2×, BENCH_NOTES
-    * r14), output bit-identical, zero spill, one 32-task stage.
+    * corpus, scored with the exact cosine kernel: the shared engine
+    * behind d13 (threshold near-dup pairs), d54 (kNN graph) and d55.
     * Returns one row per unordered candidate pair: (id_a < id_b,
     * cos_sim 4dp).
-    * Hybrid kernel placement (round 12, the r11 verdict's optional
-    * task 7): while the corpus is small (rows ≤
-    * graft.lsh.vecBroadcastCap — see the measured-default note at the
-    * knob), the self-join moves IDS ONLY, distincts the candidate
-    * pairs, and joins both vectors back from ONE broadcast dim —
-    * map-side, so the r11 cliff (a candidate-mass vector SHUFFLE)
-    * cannot reopen, and the kernel runs once per unique pair. Past
-    * the cap — the probe and 100 TB regimes — vectors ride the banded
-    * join with the packed signatures. Both paths score identical
-    * pairs with the identical kernel, so results are bit-equal
-    * (spec-pinned both ways via the cap knob).
-    * Degenerate-bucket guard (round 12, closing the r11 residual): a
-    * pathological bucket (mass-duplicate vectors after a bad upstream
-    * join — occupancy ≫ the [[adaptiveBits]] target) would concentrate
-    * its whole quadratic pair scan in ONE task. Buckets over saltCap
-    * rows chunk-salt the self-join with the d4Pairs idiom — side a
-    * carries salt = id mod nsalt, side b explodes every salt value —
-    * so each pair is still met EXACTLY once (results unchanged) while
-    * the scan splits across nsalt tasks. nsalt derives per-bucket from
-    * a broadcast bucket-size aggregate (key + count rows — dim-sized
-    * at any bits ≤ 16); normal buckets get nsalt = 1 and zero
-    * explosion overhead. Planted mega-bucket completion + result
-    * equality is spec-verified (DedupSpec) via the graft.lsh.saltCap
-    * session knob.
+    *
+    * Bucket keys are 48 hyperplane tables at [[adaptiveBits]] width.
+    * The quadratic candidate stream never carries vectors:
+    *  - up to graft.lsh.vecBroadcastCap vectors, the self-join moves
+    *    ids only, distincts the candidate pairs and scores each pair
+    *    once against one broadcast (vec_id, vec) dim;
+    *  - past the cap, vectors ride the linear (bucket, id, vec)
+    *    shuffle, the kernel runs inside the bucket join, and each pair
+    *    leaves the join once, at its first shared table
+    *    (first_shared_lane16 over hyperplane_packed16 signatures), so
+    *    no post-score dedup exchange runs.
+    * Both paths score identical pairs with the identical kernel, so
+    * results are bit-equal (spec-pinned via the cap knob).
+    *
+    * Degenerate buckets: a bucket over graft.lsh.saltCap rows
+    * chunk-salts the self-join ([[withSaltWidth]]): side a carries
+    * salt = id mod nsalt, side b explodes every salt value, so each
+    * pair is still met exactly once while the bucket's scan splits
+    * across nsalt tasks (spec-pinned on a planted mega-bucket). Keys
+    * are table-tagged (`(t << 48) | sig`), so a vector lands in a key
+    * at most once and bkt_n ≤ n, the embeddings row count: at
+    * n ≤ saltCap every bucket has nsalt = 1 and the bucket-size
+    * aggregate is never built. n is read from the parquet footers
+    * ([[tableRows]]).
     */
   private def lshScoredPairs(s: SparkSession, dir: String): DataFrame = {
     GraftExtensions.install(s)
     val emb = T(s, dir, "embeddings")
       .withColumn("vec", col("embedding").cast("array<double>"))
     // occupancy knob: session conf (specs), else the oracle's constant
-    val nVec = cachedCount(s, dir, "nEmbeddings")(T(s, dir, "embeddings").count())
+    val nVec = tableRows(s, dir, "embeddings")
     val bits0 = adaptiveBits(nVec,
       s.conf.get("graft.lsh.occupancy", LshOccupancy.toString).toLong)
     // CAPACITY PRE-GATE (round 13, verdict task 3 — d146 productized):
@@ -598,10 +578,8 @@ object Pipeline {
     // the sf10-certified in-join shape.
     val vecCap = s.conf.get("graft.lsh.vecBroadcastCap", "10000").toLong
     cachedHelper(s, dir, s"lshScoredPairs:$bits:$saltCap:${nVec <= vecCap}") {
-      val bktSizes = lshBktSizes(s, dir, bits) // registry-cached by the pre-gate
       def withNsalt(banded: DataFrame): DataFrame =
-        banded.join(broadcast(bktSizes), "bkt")
-          .withColumn("nsalt", ceil(col("bkt_n") / lit(saltCap.toDouble)).cast("int"))
+        withSaltWidth(banded, Seq("bkt"), saltCap, Some(nVec))(lshBktSizes(s, dir, bits))
       if (nVec <= vecCap) {
         // broadcast-dim path: ids-only banded self-join → distinct
         // pairs → map-side vector lookups → one kernel eval per pair.
@@ -848,6 +826,31 @@ object Pipeline {
     }
   }
 
+  /** Exact rows of raw table `name`: from its parquet footers when they
+    * answer ([[Tables.rowCount]]), else one `count()` job. Memoized for
+    * the entry like [[cachedCount]]. */
+  private def tableRows(s: SparkSession, dir: String, name: String): Long =
+    cachedCount(s, dir, s"rows:$name")(
+      Tables.rowCount(s, dir, name).getOrElse(T(s, dir, name).count()))
+
+  /** `df` with `nsalt`, the number of chunks a salted self-join splits
+    * each key's rows into: ceil(n_key / saltCap), where `sizes` holds
+    * `keys` plus one row-count column and joins as a broadcast dim. A
+    * key never holds more rows than its table, so when `rows` (the
+    * table's row count, or a count above saltCap) proves the table has
+    * at most saltCap rows, nsalt is 1 for every key and `sizes` is never
+    * built: no aggregate, shuffle, broadcast or pin. A table of unknown
+    * size takes the `sizes` path. */
+  private def withSaltWidth(df: DataFrame, keys: Seq[String], saltCap: Int,
+      rows: Option[Long])(sizes: => DataFrame): DataFrame =
+    if (rows.exists(_ <= saltCap)) df.withColumn("nsalt", lit(1))
+    else {
+      val sz = sizes
+      val n = sz.columns.filterNot(keys.contains).head
+      df.join(broadcast(sz), keys)
+        .withColumn("nsalt", ceil(col(n) / lit(saltCap.toDouble)).cast("int"))
+    }
+
   /** Slice fan-out for d33's decomposed vocabulary rank: tracks the
    *  session's shuffle parallelism (32 here; a 1000-executor run widens
    *  it via spark.sql.shuffle.partitions — the d58 shard-widening note),
@@ -875,15 +878,22 @@ object Pipeline {
   private[graft] def d20Components(s: SparkSession, dir: String): DataFrame =
     cachedHelper(s, dir, "d20Components")(d20ComponentsPlan(s, dir))
 
+  /** Two-level union-find over [[d4Pairs]] edges: level 1 salts each
+    * block's edges by (blk, doc_a mod nsalt) and contracts every chunk
+    * to (node, local root) links; level 2 cogroups each block's links
+    * with its full member list. nsalt comes from [[withSaltWidth]] with
+    * d4's saltCap: blocks partition the documents, so block_n ≤ n, the
+    * documents row count, and at n ≤ saltCap no block-size aggregate
+    * is built and every block is one chunk. */
   private def d20ComponentsPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     GraftExtensions.install(s)
     val saltCap = 2000 // same chunk cap as d4's pair scan
     val blocked = T(s, dir, "documents")
       .select(col("doc_id"), concat_ws(" ", col("lang"), lenBucket).as("blk"))
-    val blockSizes = blocked.groupBy(col("blk")).agg(count(lit(1)).as("block_n"))
-    val salted = blocked.join(broadcast(blockSizes), "blk")
-      .withColumn("nsalt", ceil(col("block_n") / lit(saltCap.toDouble)).cast("int"))
+    val salted = withSaltWidth(blocked, Seq("blk"), saltCap,
+        Tables.rowCount(s, dir, "documents", saltCap))(
+      blocked.groupBy(col("blk")).agg(count(lit(1)).as("block_n")))
     // level 1: contracted (node → local root) links per edge chunk
     // (d4Pairs, not the d4 query: the presentation sort would be paid
     // on the full edge set and immediately discarded by groupByKey)
@@ -999,10 +1009,12 @@ object Pipeline {
     * salt = doc_id mod nsalt, side B explodes every salt value — so
     * each pair is still met EXACTLY once (results unchanged, oracle
     * stays exact, unlike minhash-band salting which drops pairs) while
-    * the block's pair scan splits across nsalt tasks. nsalt is derived
-    * per-block from a broadcast block-size aggregate; normal blocks get
-    * nsalt = 1 and zero explosion overhead. Homogeneous-corpus bounded
-    * completion is spec-verified (DedupSpec).
+    * the block's pair scan splits across nsalt tasks. nsalt comes from
+    * [[withSaltWidth]]: blocks partition the documents, so block_n ≤ n,
+    * the documents row count, and at n ≤ saltCap (read from the parquet
+    * footers) no block-size aggregate is built and every block is one
+    * chunk. Homogeneous-corpus bounded completion is spec-verified
+    * (DedupSpec).
     */
   private def d4Pairs(s: SparkSession, dir: String): DataFrame = {
     GraftExtensions.install(s)
@@ -1010,7 +1022,7 @@ object Pipeline {
     // sorted+distinct sets → the merge-kernel jaccard variant (no
     // per-pair hash-set allocation); the one-time per-doc sort is
     // O(n log n) on 1/1000th the rows the kernel touches
-    // wideWordsOf (round 16): the per-doc tokenize + array_sort
+    // wideWordsOf: the per-doc tokenize + array_sort
     // (array_distinct) prep — the map side of the block join — ran as
     // one task on the single-row-group corpus; measured winner for the
     // whole d4/d20/d104/d117/d124/d142 family (−0.7..−1.5 s each)
@@ -1018,10 +1030,9 @@ object Pipeline {
       .select(col("doc_id"), col("lang"), lenBucket.as("len_bucket"),
         array_sort(array_distinct(col("words"))).as("wset"))
       .withColumn("wn", size(col("wset")))
-    val sizes = w.groupBy(col("lang"), col("len_bucket"))
-      .agg(count(lit(1)).as("block_n"))
-    val sized = w.join(broadcast(sizes), Seq("lang", "len_bucket"))
-      .withColumn("nsalt", ceil(col("block_n") / lit(saltCap.toDouble)).cast("int"))
+    val sized = withSaltWidth(w, Seq("lang", "len_bucket"), saltCap,
+        Tables.rowCount(s, dir, "documents", saltCap))(
+      w.groupBy(col("lang"), col("len_bucket")).agg(count(lit(1)).as("block_n")))
     val a = sized.select(col("doc_id").as("doc_a"), col("lang"), col("len_bucket"),
       pmod(col("doc_id"), col("nsalt")).cast("int").as("salt"),
       col("wset").as("set_a"), col("wn").as("wn_a"))
@@ -1034,7 +1045,7 @@ object Pipeline {
     // the cheap predicates (observed via Explain), making the kernel
     // run for every hash-matched pair; conjunct order is preserved, so
     // doc_a<doc_b and the size-ratio test short-circuit first.
-    // The condition's kernel is the BAIL variant (round 13): it aborts
+    // The condition's kernel is the BAIL variant: it aborts
     // the merge with -1.0 once J provably cannot reach 0.49995 (the
     // exact pre-rounding boundary of round(J,4) >= 0.5), so
     // non-qualifying block pairs stop scanning early; qualifying pairs
@@ -1261,22 +1272,9 @@ object Pipeline {
         .orderBy("doc_a", "doc_b")
     },
 
-    // ---- d4: exact word-set Jaccard over blocked candidate pairs.
-    // Blocking key (lang, n_chars bucket) bounds the self-join; a cheap
-    // size-ratio prefilter (J ≥ 0.5 ⇒ 2·min(|A|,|B|) ≥ max(|A|,|B|), so
-    // it never drops a qualifying pair) prunes before the exact kernel;
-    // jaccard_sim is one compiled hash-set pass per surviving pair.
-    //
-    // Mega-bucket guard: on a homogeneous corpus one block can hold most
-    // of the corpus, collapsing the self-join into a single quadratic
-    // task. Blocks over SaltCap docs are chunk-salted — side A carries
-    // salt = doc_id mod nsalt, side B explodes every salt value — so
-    // each pair is still met EXACTLY once (results unchanged, oracle
-    // stays exact, unlike minhash-band salting which drops pairs) while
-    // the block's pair scan splits across nsalt tasks. nsalt is derived
-    // per-block from a broadcast block-size aggregate; normal blocks get
-    // nsalt = 1 and zero explosion overhead. Homogeneous-corpus bounded
-    // completion is spec-verified (DedupSpec).
+    // ---- d4: exact word-set Jaccard over blocked candidate pairs: the
+    // [[d4Pairs]] pair set (blocking, size-ratio prefilter, merge kernel,
+    // mega-block chunk-salting) in a deterministic order.
     "d4_ngram_jaccard" -> { (s, dir) =>
       d4Pairs(s, dir).orderBy("doc_a", "doc_b")
     },
@@ -1447,13 +1445,12 @@ object Pipeline {
         .join(reps.select(col("gid"), col("rep_id")), "gid")
         .select(col("doc_id"), col("rep_id"))
       // membership is DOC-count-sized (one 16 B id pair per doc).
-      // Gate short-circuit (round 16): collapsed rows ≤ raw documents
-      // rows, so when the RAW count (a plain parquet count, no
-      // tokenize/collapse pass) already fits the broadcast cap the
-      // collapsed count provably does too — same branch decision at
-      // every scale, one fewer per-query aggregate job at bench grain.
-      val nDocsRaw = cachedCount(s, dir, "nDocsRaw")(
-        T(s, dir, "documents").count())
+      // Gate short-circuit: collapsed rows ≤ raw documents rows, so
+      // when the RAW count (footer-read, no tokenize/collapse pass)
+      // already fits the broadcast cap the collapsed count provably
+      // does too: the same branch decision at every scale, with no
+      // collapsed count job.
+      val nDocsRaw = tableRows(s, dir, "documents")
       val m = if (nDocsRaw <= 10000000L ||
           cachedCount(s, dir, "nDocsCollapsed")(w.count()) <= 10000000L)
         broadcast(mFrame) else mFrame
@@ -2943,9 +2940,9 @@ object Pipeline {
         .select(col("doc_id"), col("lang"),
           array_sort(array_distinct(col("words"))).as("wset"))
         .withColumn("wn", size(col("wset")))
-      val sizes = w.groupBy(col("lang")).agg(count(lit(1)).as("block_n"))
-      val sized = w.join(broadcast(sizes), Seq("lang"))
-        .withColumn("nsalt", ceil(col("block_n") / lit(saltCap.toDouble)).cast("int"))
+      val sized = withSaltWidth(w, Seq("lang"), saltCap,
+          Tables.rowCount(s, dir, "documents", saltCap))(
+        w.groupBy(col("lang")).agg(count(lit(1)).as("block_n")))
       val a = sized.filter(col("wn") <= snippetCap)
         .select(col("doc_id").as("doc_a"), col("lang"),
           pmod(col("doc_id"), col("nsalt")).cast("int").as("salt"),
@@ -5945,8 +5942,7 @@ object Pipeline {
       // (5 k docs at sf0.1) with margin while every probed scale
       // (50 k/500 k docs at sf1/sf10) keeps the md5-keyed shape the
       // sf10 probe certified.
-      val nDocs = cachedCount(s, dir, "nDocuments")(
-        T(s, dir, "documents").count())
+      val nDocs = tableRows(s, dir, "documents")
       val smallCap = s.conf.get("graft.d112.smallCap", "20000").toLong
       if (nDocs <= smallCap) {
         val st = wordsOf(s, dir)
@@ -7538,8 +7534,7 @@ object Pipeline {
     // no join anywhere; strictly cheaper than the job it plans.
     "d146_lsh_capacity" -> { (s, dir) =>
       GraftExtensions.install(s)
-      val bits = adaptiveBits(cachedCount(s, dir, "nEmbeddings")(
-          T(s, dir, "embeddings").count()),
+      val bits = adaptiveBits(tableRows(s, dir, "embeddings"),
         s.conf.get("graft.lsh.occupancy", LshOccupancy.toString).toLong)
       // the audit reads the SAME registry-persisted occupancy table
       // the engine's pre-gate and salting broadcast consume (round 13)

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Unified multi-format reader over any Hadoop FileSystem scheme —
@@ -92,27 +93,68 @@ object GraftReader {
     * read.
     */
   private[graft] def footerSchema(spark: SparkSession, url: String,
-      options: Map[String, String]): Option[StructType] = {
-    val sqlConf = spark.sessionState.conf
-    if (url.exists("{}[]*?\\".contains(_)) || sqlConf.isParquetSchemaMergingEnabled ||
-        options.keys.exists(k => listingOptions(k.toLowerCase))) return None
-    try {
-      val conf = spark.sessionState.newHadoopConfWithOptions(options)
-      val files = leafFiles(conf, url)
-      if (files.isEmpty || files.exists(_.getPath.getName.startsWith("_"))) None
-      else {
+      options: Map[String, String]): Option[StructType] =
+    dataFiles(spark, url, options).flatMap { case (conf, files) =>
+      try {
         val first = files.head
         val footer = ParquetFooterReader.readFooter(
           HadoopInputFile.fromStatus(first, conf), SKIP_ROW_GROUPS)
         val schema = ParquetFileFormat.readSchemaFromFooter(
-          new Footer(first.getPath, footer), new ParquetToSparkSchemaConverter(sqlConf))
+          new Footer(first.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
         val root = new Path(url)
         val rootDir = root.getFileSystem(conf).makeQualified(root).toUri.getPath
         val partKeys = files.flatMap(f => partitionKeys(rootDir, f.getPath)).toSet
         if (schema.fieldNames.exists(n => partKeys(n.toLowerCase))) None else Some(schema)
-      }
+      } catch { case NonFatal(_) => None }
+    }
+
+  /** Most footers [[rowCount]] reads for one answer. */
+  private[graft] val MaxCountFooters = 64
+
+  /** Rows of the parquet table at `url`, summed over the row groups in
+    * its data files' footers, with no Spark job. Reading stops as soon
+    * as the sum passes `upTo`: the answer is exact when it is at most
+    * `upTo`, and otherwise only some count above `upTo`. At most
+    * [[MaxCountFooters]] footers are read, so an exact count (the
+    * default `upTo`) answers only for a listing of at most that many
+    * files. None where the footers cannot answer: the cases where
+    * [[footerSchema]] lets Spark list (a glob, schema merging, listing
+    * options, a summary or other `_` file, no data file), a listing
+    * past the footer bound before the sum passes `upTo`, or any
+    * failure to list or read. Partition directories are counted like
+    * any other data files: a row's partition values never change the
+    * row count.
+    */
+  def rowCount(spark: SparkSession, url: String,
+      upTo: Long = Long.MaxValue): Option[Long] =
+    dataFiles(spark, url, Map.empty).flatMap { case (conf, files) =>
+      if (upTo == Long.MaxValue && files.size > MaxCountFooters) None
+      else try {
+        var n = 0L
+        val it = files.iterator.take(MaxCountFooters)
+        while (n <= upTo && it.hasNext)
+          n += ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(it.next(), conf),
+            NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+        if (n > upTo || files.size <= MaxCountFooters) Some(n) else None
+      } catch { case NonFatal(_) => None }
+    }
+
+  /** The data files under `url` as Spark would read them when no
+    * footer-level check can differ from Spark's: None for a glob,
+    * schema merging, listing options, a summary or other `_` file, no
+    * data file, or any failure to list. */
+  private def dataFiles(spark: SparkSession, url: String,
+      options: Map[String, String]): Option[(Configuration, Seq[FileStatus])] =
+    if (url.exists("{}[]*?\\".contains(_)) ||
+        spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        options.keys.exists(k => listingOptions(k.toLowerCase))) None
+    else try {
+      val conf = spark.sessionState.newHadoopConfWithOptions(options)
+      val files = leafFiles(conf, url)
+      if (files.isEmpty || files.exists(_.getPath.getName.startsWith("_"))) None
+      else Some((conf, files))
     } catch { case NonFatal(_) => None }
-  }
 
   /** Lower-cased `k` of every `k=v` directory between `rootDir` and `file`. */
   private def partitionKeys(rootDir: String, file: Path): Seq[String] = {

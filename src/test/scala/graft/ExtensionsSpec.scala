@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import graft.expressions._
 
@@ -46,6 +47,26 @@ class ExtensionsSpec extends SparkSpecBase {
     // spark.sql.extensions=graft.GraftExtensions (a STATIC conf); a fresh
     // session derived from it must resolve quack with no install() call.
     val fresh = spark.newSession()
+    assert(fresh.sql("SELECT quack('q')").head().getString(0).startsWith("Quack q"))
+  }
+
+  test("e1: install registers a function only where the registry lacks its exact builder") {
+    // a fresh session holds the builders the extensions conf injected,
+    // each with its own ExpressionInfo; install must leave them as they are
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    def usages = GraftExtensions.functions.map { case (n, _, _) =>
+      registry.lookupFunction(FunctionIdentifier(n)).map(_.getUsage) }
+    val before = usages
+    GraftExtensions.install(fresh)
+    assert(usages == before)
+    GraftExtensions.functions.foreach { case (n, _, b) =>
+      assert(registry.lookupFunctionBuilder(FunctionIdentifier(n)).exists(_ eq b), n)
+    }
+    // a missing function is registered
+    assert(registry.dropFunction(FunctionIdentifier("quack")))
+    assert(registry.lookupFunctionBuilder(FunctionIdentifier("quack")).isEmpty)
+    GraftExtensions.install(fresh)
     assert(fresh.sql("SELECT quack('q')").head().getString(0).startsWith("Quack q"))
   }
 

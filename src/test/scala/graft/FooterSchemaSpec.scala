@@ -3,20 +3,21 @@ package graft
 import graft.sources.GraftReader
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.types.StructType
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** `GraftReader.parquet` resolves a parquet schema from one footer read
   * on the driver. It must give exactly Spark's schema, or fall back to
-  * Spark wherever the two could differ, and start no Spark job. */
+  * Spark wherever the two could differ, and start no Spark job.
+  * `GraftReader.rowCount` sums the footers' row-group counts: exact
+  * wherever it answers, None wherever the footers cannot answer. */
 class FooterSchemaSpec extends SparkSpecBase {
 
   private type Outcome = Either[String, StructType]
@@ -85,35 +86,12 @@ class FooterSchemaSpec extends SparkSpecBase {
   }
 
   test("Tables.load and GraftReader.read of a parquet path start zero Spark jobs") {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("footer-spark", "Spark's own inference")
-      spark.read.parquet(s"$sfTiny/events.parquet").schema
-      sc.setJobGroup("footer-graft", "footer-resolved reads")
+    assert(jobsStarted(spark.read.parquet(s"$sfTiny/events.parquet").schema) == 1,
+      "the listener sees Spark's inference job")
+    assert(jobsStarted {
       Tables.load(spark, sfTiny, "events").schema
       GraftReader.read(spark, s"$sfTiny/nation.parquet").schema
-      sc.setJobGroup("footer-end", "sentinel")
-      spark.range(1).count()
-      // the listener bus delivers in order: once the sentinel job is
-      // seen, every earlier job start has been delivered too
-      val deadline = System.currentTimeMillis() + 30000
-      while (!groups.contains("footer-end") && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      val seen = groups.asScala.toSeq
-      assert(seen.contains("footer-end"))
-      assert(seen.count(_ == "footer-spark") == 1, "the listener sees Spark's inference job")
-      assert(seen.count(_ == "footer-graft") == 0)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    } == 0)
   }
 
   test("globs, schema merging, summary files, partition-key columns, empty and missing paths fall back to Spark") {
@@ -150,5 +128,68 @@ class FooterSchemaSpec extends SparkSpecBase {
     assert(graftOutcome(s"$base/summary").exists(_.fieldNames.contains("b")))
     assert(graftOutcome(s"$base/empty").isLeft)
     assert(graftOutcome(s"$base/missing").isLeft)
+  }
+
+  /** One file of `n` int64 rows split into several row groups. */
+  private def multiRowGroupFile(n: Int): String = {
+    val file = s"${scratch("footer_rowgroups")}/groups.parquet"
+    val schema = MessageTypeParser.parseMessageType("message m { required int64 id; }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(file), conf))
+      .withType(schema).withConf(conf).withRowGroupSize(4096L).build()
+    val rows = new SimpleGroupFactory(schema)
+    try (0 until n).foreach(i => w.write(rows.newGroup().append("id", i.toLong)))
+    finally w.close()
+    file
+  }
+
+  test("the footer row count equals count() on testdata, multi-file, partitioned and multi-row-group tables") {
+    val testdata = Seq(sfTiny, sfSmall).flatMap { d =>
+      new File(d).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).sorted
+    }
+    assert(testdata.size >= 20)
+    testdata.foreach { url =>
+      assert(GraftReader.rowCount(spark, url) == Some(spark.read.parquet(url).count()), url)
+    }
+    assert(jobsStarted(assert(Tables.rowCount(spark, sfTiny, "events").isDefined)) == 0)
+    val hive = scratch("rowcount_hive")
+    spark.range(40).selectExpr("id", "cast(id % 3 as int) as k")
+      .write.mode("overwrite").partitionBy("k").parquet(hive)
+    val multi = scratch("rowcount_multi")
+    Tables.load(spark, sfTiny, "orders").repartition(3)
+      .write.mode("overwrite").parquet(multi)
+    val groups = multiRowGroupFile(20000)
+    val nGroups = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(new Path(groups),
+      spark.sparkContext.hadoopConfiguration), NO_FILTER).getBlocks.size
+    assert(nGroups > 1, s"$nGroups row group(s)")
+    assert(new File(multi).listFiles().count(_.getName.startsWith("part-")) == 3)
+    Seq(hive -> 40L, multi -> spark.read.parquet(multi).count(), groups -> 20000L).foreach {
+      case (url, n) => assert(GraftReader.rowCount(spark, url) == Some(n), url)
+    }
+    // a bound: exact at or under it, some count above it past it
+    val n = spark.read.parquet(multi).count()
+    assert(GraftReader.rowCount(spark, multi, upTo = n) == Some(n))
+    assert(GraftReader.rowCount(spark, multi, upTo = 1).exists(_ > 1))
+    assert(GraftReader.rowCount(spark, multi, upTo = n - 1).exists(_ > n - 1))
+    // more files than the footer bound: no exact count, but a bound
+    // the first footers already pass still answers
+    val wide = scratch("rowcount_wide")
+    val files = GraftReader.MaxCountFooters + 1
+    spark.range(0, files, 1, files).write.mode("overwrite").parquet(wide)
+    assert(new File(wide).listFiles().count(_.getName.startsWith("part-")) == files)
+    assert(GraftReader.rowCount(spark, wide).isEmpty)
+    assert(GraftReader.rowCount(spark, wide, upTo = 10).exists(_ > 10))
+  }
+
+  test("globs, summary files, empty and missing paths have no footer row count") {
+    val base = scratch("rowcount_fallback")
+    spark.range(6).write.parquet(s"$base/summary")
+    Files.copy(partFile(s"$base/summary").toPath, new File(s"$base/summary/_metadata").toPath)
+    new File(s"$base/empty").mkdirs()
+    Seq(s"$sfTiny/nat*.parquet", s"$base/summary", s"$base/summary/_metadata",
+        s"$base/empty", s"$base/missing").foreach { url =>
+      assert(GraftReader.rowCount(spark, url).isEmpty, url)
+      assert(GraftReader.rowCount(spark, url, upTo = 0).isEmpty, url)
+    }
   }
 }
