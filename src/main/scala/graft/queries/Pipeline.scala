@@ -579,7 +579,8 @@ object Pipeline {
     val vecCap = s.conf.get("graft.lsh.vecBroadcastCap", "10000").toLong
     cachedHelper(s, dir, s"lshScoredPairs:$bits:$saltCap:${nVec <= vecCap}") {
       def withNsalt(banded: DataFrame): DataFrame =
-        withSaltWidth(banded, Seq("bkt"), saltCap, Some(nVec))(lshBktSizes(s, dir, bits))
+        withSaltWidth(banded, Seq("bkt"), "vec_id", saltCap, Some(nVec))(
+          lshBktSizes(s, dir, bits))
       if (nVec <= vecCap) {
         // broadcast-dim path: ids-only banded self-join → distinct
         // pairs → map-side vector lookups → one kernel eval per pair.
@@ -592,9 +593,7 @@ object Pipeline {
         // too heavy).
         val sized = pinOnce(withNsalt(emb.select(col("vec_id"),
           explode(expr(s"hyperplane_buckets(vec, 48, $bits)")).as("bkt"))))
-        val a = sized.select(col("bkt"),
-          pmod(col("vec_id"), col("nsalt")).cast("int").as("salt"),
-          col("vec_id").as("id_a"))
+        val a = sized.select(col("bkt"), col("salt"), col("vec_id").as("id_a"))
         val b = sized.select(col("bkt").as("bkt2"),
           explode(expr("sequence(0, nsalt - 1)")).as("salt2"),
           col("vec_id").as("id_b"))
@@ -640,8 +639,7 @@ object Pipeline {
             expr(s"hyperplane_packed16(vec, 48, $bits)").as("psig"))
           .select(col("vec_id"), col("vec"), col("psig"),
             posexplode(expr("unpack_keys16(psig, 48)")).as(Seq("bpos", "bkt"))))
-        val a = sized.select(col("bkt"),
-          pmod(col("vec_id"), col("nsalt")).cast("int").as("salt"),
+        val a = sized.select(col("bkt"), col("salt"),
           col("vec_id").as("id_a"), col("vec").as("vec_a"),
           col("psig").as("psig_a"), col("bpos"))
         val b = sized.select(col("bkt").as("bkt2"),
@@ -833,22 +831,28 @@ object Pipeline {
     cachedCount(s, dir, s"rows:$name")(
       Tables.rowCount(s, dir, name).getOrElse(T(s, dir, name).count()))
 
-  /** `df` with `nsalt`, the number of chunks a salted self-join splits
-    * each key's rows into: ceil(n_key / saltCap), where `sizes` holds
-    * `keys` plus one row-count column and joins as a broadcast dim. A
-    * key never holds more rows than its table, so when `rows` (the
-    * table's row count, or a count above saltCap) proves the table has
-    * at most saltCap rows, nsalt is 1 for every key and `sizes` is never
-    * built: no aggregate, shuffle, broadcast or pin. A table of unknown
+  /** `df` with the chunk-salting columns of a salted self-join over
+    * `keys`: `nsalt`, the number of chunks each key's rows split into,
+    * ceil(n_key / saltCap), and `salt` = `id` mod nsalt, the chunk of
+    * this row. Side a joins on `salt`; side b explodes
+    * sequence(0, nsalt - 1), so each pair is met exactly once. n_key
+    * comes from `sizes` (`keys` plus one row-count column), joined as a
+    * broadcast dim. A key never holds more rows than its table, so when
+    * `rows` (the table's row count, or a count above saltCap) proves
+    * the table has at most saltCap rows, every key is one chunk and
+    * `sizes` is never built: no aggregate, shuffle, broadcast or pin.
+    * Both salt columns are then literals, so the two join sides keep
+    * identical inputs and can share one exchange. A table of unknown
     * size takes the `sizes` path. */
-  private def withSaltWidth(df: DataFrame, keys: Seq[String], saltCap: Int,
-      rows: Option[Long])(sizes: => DataFrame): DataFrame =
-    if (rows.exists(_ <= saltCap)) df.withColumn("nsalt", lit(1))
+  private def withSaltWidth(df: DataFrame, keys: Seq[String], id: String,
+      saltCap: Int, rows: Option[Long])(sizes: => DataFrame): DataFrame =
+    if (rows.exists(_ <= saltCap)) df.withColumn("nsalt", lit(1)).withColumn("salt", lit(0))
     else {
       val sz = sizes
       val n = sz.columns.filterNot(keys.contains).head
       df.join(broadcast(sz), keys)
         .withColumn("nsalt", ceil(col(n) / lit(saltCap.toDouble)).cast("int"))
+        .withColumn("salt", pmod(col(id), col("nsalt")).cast("int"))
     }
 
   /** Slice fan-out for d33's decomposed vocabulary rank: tracks the
@@ -891,7 +895,7 @@ object Pipeline {
     val saltCap = 2000 // same chunk cap as d4's pair scan
     val blocked = T(s, dir, "documents")
       .select(col("doc_id"), concat_ws(" ", col("lang"), lenBucket).as("blk"))
-    val salted = withSaltWidth(blocked, Seq("blk"), saltCap,
+    val salted = withSaltWidth(blocked, Seq("blk"), "doc_id", saltCap,
         Tables.rowCount(s, dir, "documents", saltCap))(
       blocked.groupBy(col("blk")).agg(count(lit(1)).as("block_n")))
     // level 1: contracted (node → local root) links per edge chunk
@@ -899,8 +903,8 @@ object Pipeline {
     // on the full edge set and immediately discarded by groupByKey)
     val links = d4Pairs(s, dir)
       .select("doc_a", "doc_b")
-      .join(salted.select(col("doc_id").as("doc_a"), col("blk"), col("nsalt")), "doc_a")
-      .select(col("blk"), pmod(col("doc_a"), col("nsalt")).cast("int").as("salt"),
+      .join(salted.select(col("doc_id").as("doc_a"), col("blk"), col("salt")), "doc_a")
+      .select(col("blk"), col("salt"),
         col("doc_a"), col("doc_b"))
       .as[(String, Int, Long, Long)]
       .groupByKey(t => (t._1, t._2))
@@ -1030,11 +1034,11 @@ object Pipeline {
       .select(col("doc_id"), col("lang"), lenBucket.as("len_bucket"),
         array_sort(array_distinct(col("words"))).as("wset"))
       .withColumn("wn", size(col("wset")))
-    val sized = withSaltWidth(w, Seq("lang", "len_bucket"), saltCap,
+    val sized = withSaltWidth(w, Seq("lang", "len_bucket"), "doc_id", saltCap,
         Tables.rowCount(s, dir, "documents", saltCap))(
       w.groupBy(col("lang"), col("len_bucket")).agg(count(lit(1)).as("block_n")))
     val a = sized.select(col("doc_id").as("doc_a"), col("lang"), col("len_bucket"),
-      pmod(col("doc_id"), col("nsalt")).cast("int").as("salt"),
+      col("salt"),
       col("wset").as("set_a"), col("wn").as("wn_a"))
     val b = sized.select(col("doc_id").as("doc_b"), col("lang").as("lang2"),
       col("len_bucket").as("len_bucket2"),
@@ -2940,12 +2944,11 @@ object Pipeline {
         .select(col("doc_id"), col("lang"),
           array_sort(array_distinct(col("words"))).as("wset"))
         .withColumn("wn", size(col("wset")))
-      val sized = withSaltWidth(w, Seq("lang"), saltCap,
+      val sized = withSaltWidth(w, Seq("lang"), "doc_id", saltCap,
           Tables.rowCount(s, dir, "documents", saltCap))(
         w.groupBy(col("lang")).agg(count(lit(1)).as("block_n")))
       val a = sized.filter(col("wn") <= snippetCap)
-        .select(col("doc_id").as("doc_a"), col("lang"),
-          pmod(col("doc_id"), col("nsalt")).cast("int").as("salt"),
+        .select(col("doc_id").as("doc_a"), col("lang"), col("salt"),
           col("wset").as("set_a"), col("wn").as("wn_a"))
       val b = sized.select(col("doc_id").as("doc_b"), col("lang").as("lang2"),
         explode(expr("sequence(0, nsalt - 1)")).as("salt2"),

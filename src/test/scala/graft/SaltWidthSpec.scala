@@ -67,6 +67,10 @@ class SaltWidthSpec extends SparkSpecBase {
         "d13_embed_neardup", "d54_knn_graph")) {
       val p = executedPlan(name, sfTiny)
       assert(!p.contains("block_n") && !p.contains("bkt_n"), s"$name:\n$p")
+      // with literal salt columns both sides of d4's pair join read one
+      // repartition exchange
+      if (name == "d4_ngram_jaccard")
+        assert(p.contains("ReusedExchange"), s"$name: the pair join sides do not share an exchange:\n$p")
     }
   }
 
