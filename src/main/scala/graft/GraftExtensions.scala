@@ -11,8 +11,8 @@ import graft.expressions._
   *
   * Two entry points:
   *  - cluster-config path: `--conf spark.sql.extensions=graft.GraftExtensions`
-  *  - programmatic path: `GraftExtensions.install(spark)` on a live session
-  *    (used by Verify/Bench whose sessions the driver builds).
+  *  - programmatic path: `GraftExtensions.install(spark)` on a live session;
+  *    every `SparkEntry.queries` entry calls it on the session it is given.
   *
   * Registers the reference's two demo scalar functions (quack /
   * quack_spark_version, the openssl-version analogue) plus the engine's
@@ -244,14 +244,15 @@ object GraftExtensions {
       })
   )
 
-  /** Idempotently register all graft functions AND the optimizer rule on
-    * an existing session (the programmatic twin of the
+  /** Idempotently register all graft functions, optimizer rules and the
+    * planner strategy on a live session: the programmatic twin of the
     * spark.sql.extensions config path, which must be set at SparkContext
-    * creation and can't be added to a live session). A function is
-    * registered only when the registry does not already hold its exact
-    * builder: `functions` is one `val`, so a builder is compared by
-    * identity, and a session that has them (through either path) is
-    * left untouched. */
+    * creation. `SparkEntry.queries` runs it for every entry it hands
+    * out, so a session built without the extensions conf (the mains',
+    * an external caller's) works too. A function is registered only
+    * when the registry does not already hold its exact builder:
+    * `functions` is one `val`, so a builder is compared by identity, and
+    * a session that has them (through either path) is left untouched. */
   def install(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, _, builder) =>

@@ -11,10 +11,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q5_star_join")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. An entry
+    * installs the graft extensions on the session it is given
+    * ([[GraftExtensions.install]]) before it builds its frame, so the
+    * bodies can rely on the graft functions and optimizer rules. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Events.queries ++ Pipeline.queries ++
-      Sources.queries ++ StreamingOps.queries
+    (Relational.queries ++ Events.queries ++ Pipeline.queries ++
+      Sources.queries ++ StreamingOps.queries).map { case (name, q) =>
+      name -> { (s: SparkSession, dir: String) => GraftExtensions.install(s); q(s, dir) }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. The hash-dependent entries (d2, d3, d6,

@@ -118,7 +118,6 @@ object Events {
     // the operator q38 emulates with union + window, now reusable from
     // any query as `join(right, expr("asof_on(..)"), "left")`.
     "e3_asof_native" -> { (s, dir) =>
-      graft.GraftExtensions.install(s)
       val e = T(s, dir, "events")
       val views = e.filter(col("event_type") === "view")
         .groupBy(col("user_id"), col("ts"))

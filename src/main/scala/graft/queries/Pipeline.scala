@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{GraftExtensions, Tables}
+import graft.Tables
 
 /** Training-data pipeline block (SURVEY.md §2 D): dedup family, similarity
   * search, text analysis, multimodal plumbing — the operators a 100 TB
@@ -389,14 +389,13 @@ object Pipeline {
     s"""pmod(ascii(word) * 31 + length(word) * 7 +
          ascii(substring(word, length(word), 1)), $b)""")
 
-  /** d64/d69's shared URL canonicalization: lowercase, strip
-    * http(s):// and www., strip trailing slashes, sort query params;
-    * `domain` = the authority segment of the canonical key. One
-    * spelling in Scala, one in each consumer's oracle — the split and
-    * the cap must agree on what "same domain" means or the leakage
-    * guard is fiction. */
-  private def withCanonDomain(df: DataFrame): DataFrame =
-    df.withColumn("c1", regexp_replace(lower(trim(col("source"))),
+  /** The URL canonicalization d64, d69, d126, d132 and d140 share:
+    * lowercase, strip http(s):// and www., strip trailing slashes, sort
+    * query params. Adds `canon_url` and `domain`, the authority segment
+    * of the canonical key, for the URL column `url`. Each consumer's
+    * oracle spells the same rule ([[canonCtes]] for d64/d126). */
+  private def withCanonDomain(df: DataFrame, url: String): DataFrame =
+    df.withColumn("c1", regexp_replace(lower(trim(col(url))),
         "^(https?://)?(www\\.)?", ""))
       .withColumn("c2", regexp_replace(col("c1"), "/+$", ""))
       .withColumn("path", expr("split_part(c2, '?', 1)"))
@@ -405,6 +404,19 @@ object Pipeline {
         .otherwise(concat(col("path"), lit("?"),
           array_join(array_sort(split(col("qs"), "&")), "&"))))
       .withColumn("domain", expr("split_part(path, '/', 1)"))
+
+  /** d132/d140's synthetic crawl URL per doc: `url` = source + '/page' +
+    * doc_id % 50 under one of four cosmetic variants (scheme, www.,
+    * trailing slash, query-param order) picked by doc_id % 4. */
+  private def withSynthUrl(df: DataFrame): DataFrame =
+    df.withColumn("url0", concat(col("source"), lit("/page"),
+        (col("doc_id") % 50).cast("string")))
+      .withColumn("url", expr(
+        """CASE CAST(doc_id % 4 AS INT)
+           WHEN 0 THEN concat('https://www.', url0)
+           WHEN 1 THEN concat('http://', url0, '/')
+           WHEN 2 THEN concat(url0, '?b=2&a=1')
+           ELSE url0 END"""))
 
   /** One tokenize + sort + dedup + group-hash pass per doc, PERSISTED
     * through the helper registry, so d15/d23/d85 and every consumer
@@ -419,6 +431,40 @@ object Pipeline {
         .withColumn("gid", md5(concat_ws(" ", col("wset"))))
     }
 
+  /** One row per distinct word set of `w` ([[collapsedWordSets]]):
+    * (gid, rep_id = the smallest doc_id holding it, wset). Unpinned;
+    * each caller pins it as its consumers need. */
+  private def repsOf(w: DataFrame): DataFrame =
+    w.groupBy(col("gid"))
+      .agg(min(col("doc_id")).as("rep_id"), first(col("wset")).as("wset"))
+
+  /** Doc pairs `(doc_a < doc_b, score)` of the rep pairs
+    * `(r_a, r_b, score)` over [[repsOf]]`(w)`: every cross pair of two
+    * reps' members carries the reps' score, and every pair within one
+    * rep's members scores 1.0 (identical word sets). `reps` maps gid to
+    * rep_id. The doc → rep membership has one row per document, so it
+    * is broadcast up to 10 M rows; the documents footer count bounds it
+    * without a count job. */
+  private def expandRepPairs(s: SparkSession, dir: String, w: DataFrame,
+      reps: DataFrame, repPairs: DataFrame, score: String): DataFrame = {
+    val mFrame = w.select(col("gid"), col("doc_id"))
+      .join(reps.select(col("gid"), col("rep_id")), "gid")
+      .select(col("doc_id"), col("rep_id"))
+    val m = if (tableRows(s, dir, "documents") <= 10000000L ||
+        cachedCount(s, dir, "nDocsCollapsed")(w.count()) <= 10000000L)
+      broadcast(mFrame) else mFrame
+    val cross = repPairs
+      .join(m.select(col("rep_id").as("r_a"), col("doc_id").as("da")), "r_a")
+      .join(m.select(col("rep_id").as("r_b"), col("doc_id").as("db")), "r_b")
+      .select(least(col("da"), col("db")).as("doc_a"),
+        greatest(col("da"), col("db")).as("doc_b"), col(score))
+    val within = m.select(col("rep_id"), col("doc_id").as("doc_a"))
+      .join(m.select(col("rep_id").as("rep_id2"), col("doc_id").as("doc_b")),
+        col("rep_id") === col("rep_id2") && col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"), lit(1.0).as(score))
+    cross.union(within)
+  }
+
   /** d47's operating path: screen the new batch (doc_id % 5 == 0)
     * against a Bloom sketch of the existing corpus' word-set
     * fingerprints. Returns (fp, doc_id, lang, dup) with the RAW sketch
@@ -427,7 +473,6 @@ object Pipeline {
     * directly (the verdict column is sketch-hash-dependent, so it
     * stays out of the hash-checked output). */
   private[graft] def d47Screen(s: SparkSession, dir: String): DataFrame = {
-    GraftExtensions.install(s)
     val docs = T(s, dir, "documents")
       .withColumn("words", split(trim(col("text")), "\\s+"))
       .withColumn("fp", concat_ws(" ", array_sort(array_distinct(col("words")))))
@@ -489,7 +534,6 @@ object Pipeline {
     * ([[tableRows]]).
     */
   private def lshScoredPairs(s: SparkSession, dir: String): DataFrame = {
-    GraftExtensions.install(s)
     val emb = T(s, dir, "embeddings")
       .withColumn("vec", col("embedding").cast("array<double>"))
     // occupancy knob: session conf (specs), else the oracle's constant
@@ -891,12 +935,10 @@ object Pipeline {
     * is built and every block is one chunk. */
   private def d20ComponentsPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExtensions.install(s)
-    val saltCap = 2000 // same chunk cap as d4's pair scan
     val blocked = T(s, dir, "documents")
       .select(col("doc_id"), concat_ws(" ", col("lang"), lenBucket).as("blk"))
-    val salted = withSaltWidth(blocked, Seq("blk"), "doc_id", saltCap,
-        Tables.rowCount(s, dir, "documents", saltCap))(
+    val salted = withSaltWidth(blocked, Seq("blk"), "doc_id", blockSaltCap,
+        Tables.rowCount(s, dir, "documents", blockSaltCap))(
       blocked.groupBy(col("blk")).agg(count(lit(1)).as("block_n")))
     // level 1: contracted (node → local root) links per edge chunk
     // (d4Pairs, not the d4 query: the presentation sort would be paid
@@ -997,69 +1039,57 @@ object Pipeline {
     d112Rank(cand.join(names, "gkey"))
   }
 
-  /** d4's pair generation WITHOUT the presentation sort — shared by d4
-    * (which adds the deterministic output ordering) and d20 (whose
-    * groupByKey would discard it; feeding it the unsorted pair stream
-    * saves a pointless global sort of the full edge set).
+  /** Rows per (lang, [[lenBucket]]) block chunk before d4's and d20's
+    * salted scans split a block. */
+  private val blockSaltCap = 2000
+
+  /** d4's pair set without the presentation sort: d4 adds the order,
+    * d20's groupByKey would discard it. */
+  private def d4Pairs(s: SparkSession, dir: String): DataFrame =
+    blockedJaccardPairs(s, dir, wideWordsOf(s, dir), 0.5)
+
+  /** Exact word-set Jaccard pairs `(doc_a < doc_b, jaccard)` with
+    * `round(J, 4) >= thr` among the rows of `words` (doc_id, lang,
+    * n_chars, words) that share the (lang, [[lenBucket]]) block.
     *
-    * Blocking key (lang, n_chars bucket) bounds the self-join; a cheap
-    * size-ratio prefilter (J ≥ 0.5 ⇒ 2·min(|A|,|B|) ≥ max(|A|,|B|), so
-    * it never drops a qualifying pair) prunes before the exact kernel;
-    * jaccard_sim_sorted is one compiled merge pass per surviving pair.
+    * The bound is `thr`'s pre-rounding boundary `b` = thr - 0.00005:
+    * round(J, 4) >= thr ⇔ J >= b. J ≤ min/max set size, so the join
+    * first tests 100000·min(wn) >= (100000·b)·max(wn) in Long
+    * arithmetic (it never drops a qualifying pair), then the bail
+    * kernel, which stops a merge once J provably cannot reach `b`. The
+    * kernel is the last conjunct so the cheap ones short-circuit it (a
+    * post-join filter would be pushed ahead of them). Survivors are
+    * projected with the plain kernel.
     *
-    * Mega-bucket guard: on a homogeneous corpus one block can hold most
-    * of the corpus, collapsing the self-join into a single quadratic
-    * task. Blocks over saltCap docs are chunk-salted — side A carries
-    * salt = doc_id mod nsalt, side B explodes every salt value — so
-    * each pair is still met EXACTLY once (results unchanged, oracle
-    * stays exact, unlike minhash-band salting which drops pairs) while
-    * the block's pair scan splits across nsalt tasks. nsalt comes from
-    * [[withSaltWidth]]: blocks partition the documents, so block_n ≤ n,
-    * the documents row count, and at n ≤ saltCap (read from the parquet
-    * footers) no block-size aggregate is built and every block is one
-    * chunk. Homogeneous-corpus bounded completion is spec-verified
-    * (DedupSpec).
+    * Blocks over saltCap rows are chunk-salted through
+    * [[withSaltWidth]], so each pair is met exactly once while a mega
+    * block's scan splits across tasks. `words` holds a subset of the
+    * documents, so the documents footer count bounds every block: at
+    * n ≤ saltCap no block-size aggregate is built and both join sides
+    * read one exchange.
     */
-  private def d4Pairs(s: SparkSession, dir: String): DataFrame = {
-    GraftExtensions.install(s)
-    val saltCap = 2000 // docs per block chunk before the scan splits
-    // sorted+distinct sets → the merge-kernel jaccard variant (no
-    // per-pair hash-set allocation); the one-time per-doc sort is
-    // O(n log n) on 1/1000th the rows the kernel touches
-    // wideWordsOf: the per-doc tokenize + array_sort
-    // (array_distinct) prep — the map side of the block join — ran as
-    // one task on the single-row-group corpus; measured winner for the
-    // whole d4/d20/d104/d117/d124/d142 family (−0.7..−1.5 s each)
-    val w = wideWordsOf(s, dir)
+  private def blockedJaccardPairs(s: SparkSession, dir: String, words: DataFrame,
+      thr: Double): DataFrame = {
+    val boundary = math.round(thr * 1e5) - 5
+    val w = words
       .select(col("doc_id"), col("lang"), lenBucket.as("len_bucket"),
         array_sort(array_distinct(col("words"))).as("wset"))
       .withColumn("wn", size(col("wset")))
-    val sized = withSaltWidth(w, Seq("lang", "len_bucket"), "doc_id", saltCap,
-        Tables.rowCount(s, dir, "documents", saltCap))(
+    val sized = withSaltWidth(w, Seq("lang", "len_bucket"), "doc_id", blockSaltCap,
+        Tables.rowCount(s, dir, "documents", blockSaltCap))(
       w.groupBy(col("lang"), col("len_bucket")).agg(count(lit(1)).as("block_n")))
     val a = sized.select(col("doc_id").as("doc_a"), col("lang"), col("len_bucket"),
-      col("salt"),
-      col("wset").as("set_a"), col("wn").as("wn_a"))
+      col("salt"), col("wset").as("set_a"), col("wn").as("wn_a"))
     val b = sized.select(col("doc_id").as("doc_b"), col("lang").as("lang2"),
       col("len_bucket").as("len_bucket2"),
       explode(expr("sequence(0, nsalt - 1)")).as("salt2"),
       col("wset").as("set_b"), col("wn").as("wn_b"))
-    // The jaccard threshold lives INSIDE the join condition, explicitly
-    // LAST: a post-join filter gets pushed into the condition ahead of
-    // the cheap predicates (observed via Explain), making the kernel
-    // run for every hash-matched pair; conjunct order is preserved, so
-    // doc_a<doc_b and the size-ratio test short-circuit first.
-    // The condition's kernel is the BAIL variant: it aborts
-    // the merge with -1.0 once J provably cannot reach 0.49995 (the
-    // exact pre-rounding boundary of round(J,4) >= 0.5), so
-    // non-qualifying block pairs stop scanning early; qualifying pairs
-    // return the bit-exact value and pass the same comparison. The
-    // output projection recomputes with the plain kernel — it only
-    // runs for survivors.
     a.join(b, col("lang") === col("lang2") && col("len_bucket") === col("len_bucket2") &&
         col("salt") === col("salt2") && col("doc_a") < col("doc_b") &&
-        col("wn_a") * 2 >= col("wn_b") && col("wn_b") * 2 >= col("wn_a") &&
-        round(expr("jaccard_sim_sorted_bail(set_a, set_b, 0.49995)"), 4) >= 0.5)
+        col("wn_a") * 100000L >= col("wn_b") * boundary &&
+        col("wn_b") * 100000L >= col("wn_a") * boundary &&
+        round(expr(s"jaccard_sim_sorted_bail(set_a, set_b, ${BigDecimal(boundary, 5)})"),
+          4) >= thr)
       .select(col("doc_a"), col("doc_b"),
         round(expr("jaccard_sim_sorted(set_a, set_b)"), 4).as("jaccard"))
   }
@@ -1233,7 +1263,6 @@ object Pipeline {
     // distinct pairs. Never materializes O(n²); buckets are the only
     // pair source, and the shuffle is keyed by the band hash → uniform.
     "d2_minhash_lsh" -> { (s, dir) =>
-      GraftExtensions.install(s)
       // persist: both self-join sides read the banded signatures, so the
       // shingle+minhash pass runs once, not twice (at 100 TB this is a
       // checkpoint of the signature table — the standard LSH build step)
@@ -1255,7 +1284,6 @@ object Pipeline {
     // chunk equal, so banding loses no qualifying pair) → bucket join →
     // exact hamming (bit_count(xor)) ≤ 3 filter.
     "d3_simhash" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val chunks = wordsOf(s, dir)
         .select(col("doc_id"), expr("simhash64(words)").as("simhash"))
         .select(col("doc_id"), col("simhash"),
@@ -1350,12 +1378,8 @@ object Pipeline {
     // band join carries its own explicit wn bound (see below) because the
     // rule can only guard predicates that contain the kernel itself.
     "d15_jaccard_lsh" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val w = collapsedWordSets(s, dir) // registry-persisted token pass
-      val reps = cachedHelper(s, dir, "d15Reps") { // banding + kernel dim
-        w.groupBy(col("gid"))                      // + membership read it
-          .agg(min(col("doc_id")).as("rep_id"), first(col("wset")).as("wset"))
-      }
+      val reps = cachedHelper(s, dir, "d15Reps")(repsOf(w)) // banding, dim, membership
       // wn (one int per row) rides the band shuffle so the J ≥ 0.8 size
       // bound prunes collisions BEFORE the kernel stages: the
       // JaccardPrefilter rule can only guard the kernel filter below, not
@@ -1445,32 +1469,10 @@ object Pipeline {
           round(expr("jaccard_sim_sorted_bail(set_a, set_b, 0.79995)"), 4).as("jaccard"))
         .filter(col("jaccard") >= 0.8)
         .repartition(col("r_a"))
-      val mFrame = w.select(col("gid"), col("doc_id"))
-        .join(reps.select(col("gid"), col("rep_id")), "gid")
-        .select(col("doc_id"), col("rep_id"))
-      // membership is DOC-count-sized (one 16 B id pair per doc).
-      // Gate short-circuit: collapsed rows ≤ raw documents rows, so
-      // when the RAW count (footer-read, no tokenize/collapse pass)
-      // already fits the broadcast cap the collapsed count provably
-      // does too: the same branch decision at every scale, with no
-      // collapsed count job.
-      val nDocsRaw = tableRows(s, dir, "documents")
-      val m = if (nDocsRaw <= 10000000L ||
-          cachedCount(s, dir, "nDocsCollapsed")(w.count()) <= 10000000L)
-        broadcast(mFrame) else mFrame
-      val cross = repPairs
-        .join(m.select(col("rep_id").as("r_a"), col("doc_id").as("da")), "r_a")
-        .join(m.select(col("rep_id").as("r_b"), col("doc_id").as("db")), "r_b")
-        .select(least(col("da"), col("db")).as("doc_a"),
-          greatest(col("da"), col("db")).as("doc_b"), col("jaccard"))
-      val within = m.select(col("rep_id"), col("doc_id").as("doc_a"))
-        .join(m.select(col("rep_id").as("rep_id2"), col("doc_id").as("doc_b")),
-          col("rep_id") === col("rep_id2") && col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
       // no final orderBy: the pair set is the result (rows-only gate; a
       // consumer ordering 2.9M+ output rows would pay that sort, not the
       // producer — at 100 TB the output is itself a table, not a report)
-      cross.union(within)
+      expandRepPairs(s, dir, w, reps, repPairs, "jaccard")
     },
 
     // ---- d23: signature-only similarity estimation — d15's candidate
@@ -1483,7 +1485,6 @@ object Pipeline {
     // spec-bounded on planted dups (DedupSpec); rows-only in the gate
     // (hash-dependent output by design).
     "d23_minhash_estimate" -> { (s, dir) =>
-      GraftExtensions.install(s)
       // d15's exact-collapse applies verbatim: identical word sets have
       // identical signatures, so estimating over group REPS and
       // expanding membership afterwards provably emits the same pairs
@@ -1494,8 +1495,7 @@ object Pipeline {
       // tokens never shuffle anywhere; how signatures reach the kernel
       // is corpus-adaptive (see below).
       val w = collapsedWordSets(s, dir) // registry-persisted token pass
-      val reps = w.groupBy(col("gid"))
-        .agg(min(col("doc_id")).as("rep_id"), first(col("wset")).as("wset"))
+      val reps = repsOf(w)
       // Signature components TRUNCATED to their low 16 bits and packed
       // four per long for the estimate path (round 13, verdict task 1
       // taken one step further after the 32-bit cut probed well): the
@@ -1527,15 +1527,17 @@ object Pipeline {
       // cluster-aggregate shuffle volume, evenly hash-partitioned) and
       // sig_match_frac scores each collision in-join; collisions dedup
       // AFTER scoring on slim (r_a, r_b, est) rows. Mega band-buckets
-      // (mass near-dup short docs) chunk-salt with the d4Pairs idiom so
+      // (mass near-dup short docs) chunk-salt like d4's blocked scan so
       // no bucket's pair scan lands in one task. Below the cap the dim
       // broadcasts and the band join moves ids only — one kernel eval
       // per distinct pair, zero redundancy (the small-corpus fast path).
       // Both paths score identical pairs with the identical kernel.
+      // reps ≤ documents, so the footer row count decides the small path
+      // without counting the reps; they are counted only past the cap.
       val sigCap = s.conf.get("graft.d23.sigBroadcastCap", "100000").toLong
       val saltCap = s.conf.get("graft.lsh.saltCap", "2000").toInt
-      val nRepsD23 = cachedCount(s, dir, "d23NReps")(base.count())
-      val repPairs = (if (nRepsD23 <= sigCap) {
+      lazy val nRepsD23 = cachedCount(s, dir, "d23NReps")(base.count())
+      val repPairs = (if (tableRows(s, dir, "documents") <= sigCap || nRepsD23 <= sigCap) {
         val banded = base.select(col("rep_id"), explode(col("keys")).as("key"))
         val a = banded.select(col("key"), col("rep_id").as("r_a"))
         val b = banded.select(col("key").as("key2"), col("rep_id").as("r_b"))
@@ -1620,23 +1622,7 @@ object Pipeline {
           .select(col("r_a"), col("r_b"),
             round(expr("sig_match_frac16(sig_a, sig_b)"), 4).as("est_jaccard"))
       }).filter(col("est_jaccard") >= 0.7)
-      // membership is DOC-count-sized (one 16 B id pair per doc) — the
-      // d15 gate verbatim
-      val mFrame = w.select(col("gid"), col("doc_id"))
-        .join(base.select(col("gid"), col("rep_id")), "gid")
-        .select(col("doc_id"), col("rep_id"))
-      val m = if (cachedCount(s, dir, "nDocsCollapsed")(w.count()) <= 10000000L)
-        broadcast(mFrame) else mFrame
-      val cross = repPairs
-        .join(m.select(col("rep_id").as("r_a"), col("doc_id").as("da")), "r_a")
-        .join(m.select(col("rep_id").as("r_b"), col("doc_id").as("db")), "r_b")
-        .select(least(col("da"), col("db")).as("doc_a"),
-          greatest(col("da"), col("db")).as("doc_b"), col("est_jaccard"))
-      val within = m.select(col("rep_id"), col("doc_id").as("doc_a"))
-        .join(m.select(col("rep_id").as("rep_id2"), col("doc_id").as("doc_b")),
-          col("rep_id") === col("rep_id2") && col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), lit(1.0).as("est_jaccard"))
-      cross.union(within)
+      expandRepPairs(s, dir, w, base, repPairs, "est_jaccard")
     },
 
     // ---- d5: brute-force cosine top-k: small query set broadcast against
@@ -1644,7 +1630,6 @@ object Pipeline {
     // expression (one fused loop per pair). Linear in corpus size — the
     // exact baseline d6's ANN is judged against.
     "d5_knn_cosine" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val emb = T(s, dir, "embeddings")
         .withColumn("vec", col("embedding").cast("array<double>"))
       val q = broadcast(emb.select(col("vec_id").as("qid"), col("vec").as("qvec"))
@@ -1670,7 +1655,6 @@ object Pipeline {
     // signs of integer nano-unit dots over the published plane matrix,
     // so DuckDB re-derives the exact candidate set (see oracle note).
     "d6_lsh_ann" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val emb = T(s, dir, "embeddings")
         .withColumn("vec", col("embedding").cast("array<double>"))
       val corpus = emb.select(col("vec_id"),
@@ -1757,19 +1741,9 @@ object Pipeline {
     // 2×log2(1e6) headroom over the paper's bound.
     "d55_semdedup_components" -> { (s, dir) =>
       val thr = 0.4 // d13's near-dup threshold: identical edge set
-      // the contraction loop runs on the EDGE set — orders of magnitude
-      // smaller than the corpus — so it gets the streaming entries'
-      // low-partition recipe: at 32 partitions the ~1-job-per-round
-      // loop is pure task-launch floor. On a real cluster this stays
-      // at the session default.
-      // EAGER checkpoint: shuffle-partition count binds at EXECUTION,
-      // not plan construction, so a lazy checkpoint here would defer
-      // the corpus-scale edge BUILD (LSH candidate join + kernel +
-      // distinct) until after the conf drops to 8 — at the sf10 probe
-      // that ran the whole candidate join in 8 tasks and spilled the
-      // host's disk dry. Materializing eagerly keeps the build at the
-      // session default; only the contraction loop over the (orders-
-      // of-magnitude smaller) materialized edge set runs low-partition.
+      // The loop runs on the caller's session at its shuffle width. The
+      // edge set is checkpointed eagerly, so the LSH candidate build
+      // runs once and every round reads the checkpoint.
       // Per-partition PRE-CONTRACTION (round 16, guide §2.2 — cut
       // rounds × shuffled edges): each distinct-output partition's
       // edges are replaced by their local union-find (node →
@@ -1784,7 +1758,7 @@ object Pipeline {
       // edge build's output partitions).
       val preContract = (it: Iterator[(Long, Long)]) =>
         unionFindLabels(Iterator.empty, it).filter { case (n, r) => n != r }
-      val cur0 = {
+      var cur = {
         import s.implicits._
         lshScoredPairs(s, dir).filter(col("cos_sim") >= thr)
           .select(col("id_b").as("u"), col("id_a").as("v")) // id_a < id_b
@@ -1792,15 +1766,6 @@ object Pipeline {
           .mapPartitions(preContract)
           .toDF("u", "v").localCheckpoint(true)
       }
-      // CHILD session for the low-partition loop (round 14, verdict
-      // task 5 — the a14/d147 precedent): the r13 set/restore window
-      // on the SHARED session could bleed 8 shuffle partitions into
-      // any query planning concurrently. The checkpointed edge RDD
-      // re-binds to s2 (shared context, isolated conf) at no
-      // recompute; each round's frames plan under s2's pinned 8.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      var cur = s2.createDataFrame(cur0.rdd, cur0.schema)
       var converged = false
       var rounds = 0
       // fixpoint via one-row edge-set signatures: (count, xor of
@@ -1828,13 +1793,10 @@ object Pipeline {
         rounds += 1
       }
       require(converged, s"star contraction did not converge in $rounds rounds")
-      // re-bind the (checkpointed, tiny) fixpoint forest to the caller's
-      // session: frames from two sessions cannot join
-      val forest = s.createDataFrame(cur.rdd, cur.schema)
       // at fixpoint the graph is a forest of stars: every non-root has
       // exactly one outgoing (node → root) edge, roots have none
       val lbl = T(s, dir, "embeddings").select(col("vec_id"))
-        .join(forest.select(col("u").as("vec_id"), col("v").as("rt")),
+        .join(cur.select(col("u").as("vec_id"), col("v").as("rt")),
           Seq("vec_id"), "left")
         .select(col("vec_id"), coalesce(col("rt"), col("vec_id")).as("root"))
       val sizes = lbl.groupBy("root").agg(count(lit(1)).as("cluster_size"))
@@ -1961,7 +1923,6 @@ object Pipeline {
     // (ReplaySql.d57) and re-ranks with an explicit window, so the
     // argmax contract is hash-checked end to end.
     "d57_cluster_rep" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val scored = withQuality(wordsOf(s, dir))
         .withColumn("sig", expr("simhash64(words)"))
       scored.groupBy("sig")
@@ -2242,7 +2203,6 @@ object Pipeline {
     // the nProbe/C recall trade is part of the checked contract rather
     // than an excuse to skip it (VERDICT r5 #6).
     "d29_ivf_ann" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val nCells = 32
       val nProbe = 4
       val emb = T(s, dir, "embeddings")
@@ -2286,7 +2246,6 @@ object Pipeline {
     // (every distinct word/n-gram) is un-groupable; the sketch pass is
     // the standard scalable answer and the rerank bound is documented.
     "d28_heavy_hitters" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val words = wordsOf(s, dir)
         .select(explode(col("words")).as("word"))
       val cands = words.agg(expr("heavy_hitters(word, 64)").as("cands"))
@@ -2729,7 +2688,6 @@ object Pipeline {
     // the ROUNDED similarity (ties by centroid id) so both engines
     // agree exactly.
     "d36_semdedup" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val kCells = 8
       val tau = 0.40
       val emb = T(s, dir, "embeddings")
@@ -2937,7 +2895,6 @@ object Pipeline {
     // Conjunct order matters as in d4: equi keys, id/size ordering,
     // O(1) range bounds, THEN the subset kernel.
     "d39_containment" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val saltCap = 2000
       val snippetCap = 12
       val w = wordsOf(s, dir)
@@ -3682,7 +3639,7 @@ object Pipeline {
     // hash-checks the normalization itself.
     "d64_domain_cap" -> { (s, dir) =>
       val K = 20L
-      val canon = withCanonDomain(T(s, dir, "documents"))
+      val canon = withCanonDomain(T(s, dir, "documents"), "source")
         .select("doc_id", "domain", "canon_url")
         .transform(pinOnce) // rank chain, domain counts, and final join share it
       val salted = canon
@@ -3869,7 +3826,7 @@ object Pipeline {
     // beyond the scan and the output sort; the hex→int arithmetic has
     // an exact DuckDB spelling (d58's strpos idiom).
     "d69_holdout_split" -> { (s, dir) =>
-      withCanonDomain(T(s, dir, "documents"))
+      withCanonDomain(T(s, dir, "documents"), "source")
         .withColumn("bucket", expr(
           """cast(conv(substring(md5(concat('graft-split-7:', domain)), 1, 2),
                16, 10) as bigint) % 100"""))
@@ -4345,7 +4302,6 @@ object Pipeline {
       // ~8 s/sf0.1 — the most expensive query on the surface; the
       // ChunkingSpec reference and the oracle pin the kernel's
       // semantics on both sides of the swap.
-      GraftExtensions.install(s)
       val docs = T(s, dir, "documents")
         .withColumn("n", length(col("text")).cast("int"))
         .withColumn("ends", expr("cdc_ends(text)"))
@@ -4643,10 +4599,8 @@ object Pipeline {
     // rep; every join is equi (pair ids, rep ids, band keys) — the
     // eval costs a constant factor of the dedup run it audits.
     "d85_lsh_recall" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val w = collapsedWordSets(s, dir) // registry-persisted token pass
-      val reps = w.groupBy(col("gid"))
-        .agg(min(col("doc_id")).as("rep_id"), first(col("wset")).as("wset"))
+      val reps = repsOf(w)
         .transform(pinOnce) // band keys + nothing else re-derives signatures
       val keys = reps.select(col("rep_id"),
           explode(expr("minhash_bands(wset, 16)")).as("bkey"))
@@ -4805,7 +4759,6 @@ object Pipeline {
     // identical neighbors. Sentinels (-1, 0) keep single-label and
     // singleton cells total.
     "d88_hard_negatives" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val emb = T(s, dir, "embeddings")
         .withColumn("vec", col("embedding").cast("array<double>"))
         .select("vec_id", "label", "vec")
@@ -5266,7 +5219,6 @@ object Pipeline {
     // map-combinable struct maxes; the scored frame persists so the
     // forward and backward elections read one kernel pass.
     "d98_bitext_margin" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val emb = T(s, dir, "embeddings")
         .withColumn("vec", col("embedding").cast("array<double>"))
       val cents = emb.filter(col("vec_id") < 8)
@@ -5670,7 +5622,6 @@ object Pipeline {
     // 4 dp BEFORE the max/threshold (d88's milli-integer election
     // discipline) so no raw double crosses an engine boundary.
     "d106_semantic_decontam" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val emb = T(s, dir, "embeddings")
         .withColumn("vec", col("embedding").cast("array<double>"))
       val bench = broadcast(emb.filter(expr("vec_id % 97 = 0"))
@@ -6531,7 +6482,7 @@ object Pipeline {
     // (map-combinable); the registry is domain-sized; the total is a
     // broadcast one-row frame.
     "d126_optout_compliance" -> { (s, dir) =>
-      val dom = withCanonDomain(wordsOf(s, dir))
+      val dom = withCanonDomain(wordsOf(s, dir), "source")
         .select(col("domain"), size(col("words")).cast("long").as("n_tok"))
         .groupBy("domain").agg(
           count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
@@ -6837,24 +6788,8 @@ object Pipeline {
     // (doc_id, canon_url, rev) at the scan; both keeper steps are
     // hash-keyed equi-joins on canon_url.
     "d132_url_dedup" -> { (s, dir) =>
-      val cr = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"))
-        .withColumn("url0", concat(col("source"), lit("/page"),
-          (col("doc_id") % 50).cast("string")))
-        .withColumn("url", expr(
-          """CASE CAST(doc_id % 4 AS INT)
-             WHEN 0 THEN concat('https://www.', url0)
-             WHEN 1 THEN concat('http://', url0, '/')
-             WHEN 2 THEN concat(url0, '?b=2&a=1')
-             ELSE url0 END"""))
-        .withColumn("c1", regexp_replace(lower(trim(col("url"))),
-          "^(https?://)?(www\\.)?", ""))
-        .withColumn("c2", regexp_replace(col("c1"), "/+$", ""))
-        .withColumn("path", expr("split_part(c2, '?', 1)"))
-        .withColumn("qs", expr("split_part(c2, '?', 2)"))
-        .withColumn("canon_url", when(col("qs") === "", col("path"))
-          .otherwise(concat(col("path"), lit("?"),
-            array_join(array_sort(split(col("qs"), "&")), "&"))))
+      val cr = withCanonDomain(withSynthUrl(T(s, dir, "documents")
+          .select(col("doc_id"), col("source"))), "url")
         .withColumn("rev", (col("doc_id") % 3).cast("long"))
         .select("doc_id", "canon_url", "rev")
       val mr = cr.groupBy("canon_url").agg(
@@ -7228,33 +7163,14 @@ object Pipeline {
     // the waterfall measures what the cheap rungs buy BEFORE it).
     // Per source: docs at entry and after each rung, final yield
     // per-mille. Scale: rungs 1-2 are hash-keyed keeper aggregates;
-    // rung 3 is the CHUNK-SALTED d4 blocked self-join (saltCap 2000,
-    // the d4Pairs idiom) over ALREADY-DEDUPED survivors — blocking
-    // bounds the candidate set and salting splits a hot block's pair
-    // scan across tasks, so no single task ever owns a block's O(n²).
+    // rung 3 is d4's chunk-salted blocked scan ([[blockedJaccardPairs]])
+    // over the already-deduped survivors.
     "d140_dedup_waterfall" -> { (s, dir) =>
-      GraftExtensions.install(s) // rung 3 runs the bail merge kernel
       val base = T(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
           col("text"))
       // rung 1: URL keeper — d132's synthesis + canonicalization rule
-      val cr = base
-        .withColumn("url0", concat(col("source"), lit("/page"),
-          (col("doc_id") % 50).cast("string")))
-        .withColumn("url", expr(
-          """CASE CAST(doc_id % 4 AS INT)
-             WHEN 0 THEN concat('https://www.', url0)
-             WHEN 1 THEN concat('http://', url0, '/')
-             WHEN 2 THEN concat(url0, '?b=2&a=1')
-             ELSE url0 END"""))
-        .withColumn("c1", regexp_replace(lower(trim(col("url"))),
-          "^(https?://)?(www\\.)?", ""))
-        .withColumn("c2", regexp_replace(col("c1"), "/+$", ""))
-        .withColumn("path", expr("split_part(c2, '?', 1)"))
-        .withColumn("qs", expr("split_part(c2, '?', 2)"))
-        .withColumn("canon_url", when(col("qs") === "", col("path"))
-          .otherwise(concat(col("path"), lit("?"),
-            array_join(array_sort(split(col("qs"), "&")), "&"))))
+      val cr = withCanonDomain(withSynthUrl(base), "url")
         .withColumn("rev", (col("doc_id") % 3).cast("long"))
       val mr = cr.groupBy("canon_url").agg(max("rev").as("mrev"))
       val kd = cr.join(mr, Seq("canon_url"))
@@ -7271,46 +7187,9 @@ object Pipeline {
         .join(k2, Seq("h")).filter(col("doc_id") === col("kdoc2"))
         .select("doc_id", "source", "lang", "n_chars", "text")
         .transform(pinOnce)
-      // rung 3: greedy near-dup drop over exact survivors (d4's
-      // blocking + 4-dp jaccard at >= 0.8; drop the larger id).
-      // Chunk-salted exactly like d4Pairs (saltCap 2000, round 11): an
-      // unsalted block self-join lands a hot (lang, len_bucket) block's
-      // whole O(n²) pair scan in ONE task — side a carries
-      // salt = doc_id mod nsalt, side b explodes every salt value, so
-      // each pair is still met EXACTLY once and the oracle hash is
-      // unchanged. The size-ratio conjuncts must match what the
-      // ROUNDED threshold admits: round(J,4) >= 0.8 ⇔ J >= 0.79995,
-      // so the bound is 100000·min(wn) >= 79995·max(wn) — the d15/d4
-      // spelling; a plain 5·min >= 4·max would drop boundary pairs
-      // (J ∈ [0.79995, 0.8)) that the oracle keeps.
-      // round 13: sort the sets once per doc and run the BAIL merge
-      // kernel in the join condition (d4's shape) instead of the
-      // interpreted array_intersect/array_union pair — same set
-      // semantics, same 4-dp rounding, but mismatching candidates exit
-      // the merge as soon as J provably cannot reach 0.79995.
-      val w = s2.select(col("doc_id"), col("lang"),
-        expr("cast(floor(n_chars / 100.0) as int)").as("len_bucket"),
-        expr("array_sort(array_distinct(split(trim(text), '\\\\s+')))").as("wset"))
-        .withColumn("wn", size(col("wset")))
-      val bsz = w.groupBy("lang", "len_bucket").agg(count(lit(1)).as("block_n"))
-      val sized = w.join(broadcast(bsz), Seq("lang", "len_bucket"))
-        .withColumn("nsalt", ceil(col("block_n") / lit(2000.0)).cast("int"))
-      val na = sized.select(col("doc_id").as("doc_a"), col("lang"),
-        col("len_bucket"),
-        pmod(col("doc_id"), col("nsalt")).cast("int").as("salt"),
-        col("wset").as("set_a"), col("wn").as("wn_a"))
-      val nb = sized.select(col("doc_id").as("doc_b"),
-        col("lang").as("lang2"), col("len_bucket").as("len_bucket2"),
-        explode(expr("sequence(0, nsalt - 1)")).as("salt2"),
-        col("wset").as("set_b"), col("wn").as("wn_b"))
-      val drops = na.join(nb,
-          col("lang") === col("lang2") &&
-          col("len_bucket") === col("len_bucket2") &&
-          col("salt") === col("salt2") &&
-          col("doc_a") < col("doc_b") &&
-          col("wn_a") * 100000L >= col("wn_b") * 79995L &&
-          col("wn_b") * 100000L >= col("wn_a") * 79995L &&
-          round(expr("jaccard_sim_sorted_bail(set_a, set_b, 0.79995)"), 4) >= 0.8)
+      // rung 3: greedy near-dup drop over exact survivors (d4's blocked
+      // scan at >= 0.8; drop the larger id)
+      val drops = blockedJaccardPairs(s, dir, withWords(s2), 0.8)
         .select(col("doc_b").as("doc_id")).distinct()
       val s3 = s2.join(drops, Seq("doc_id"), "left_anti")
       val e0 = base.groupBy("source").agg(count(lit(1)).as("n_docs"))
@@ -7409,7 +7288,6 @@ object Pipeline {
     // production scale the identical audit runs over d6's ANN
     // candidate set instead of the brute-force scan.
     "d143_mrl_truncation" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val emb = T(s, dir, "embeddings")
         .withColumn("vec", col("embedding").cast("array<double>"))
       val q = broadcast(emb.select(col("vec_id").as("qid"), col("vec").as("qvec"))
@@ -7451,7 +7329,6 @@ object Pipeline {
     // the d5 exact-baseline shape; production swaps the scan for d6's
     // ANN candidates per ranker.
     "d144_rrf_fusion" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val emb = T(s, dir, "embeddings")
         .withColumn("vec", col("embedding").cast("array<double>"))
       val q = broadcast(emb.select(col("vec_id").as("qid"), col("vec").as("qvec"))
@@ -7536,7 +7413,6 @@ object Pipeline {
     // linear (bucket, id) explode into two map-combinable aggregates —
     // no join anywhere; strictly cheaper than the job it plans.
     "d146_lsh_capacity" -> { (s, dir) =>
-      GraftExtensions.install(s)
       val bits = adaptiveBits(tableRows(s, dir, "embeddings"),
         s.conf.get("graft.lsh.occupancy", LshOccupancy.toString).toLong)
       // the audit reads the SAME registry-persisted occupancy table
@@ -7594,17 +7470,11 @@ object Pipeline {
         .mode("overwrite").saveAsTable(tNew)
       // Spark ≥ 3.0 ignores the buckets' sortBy order unless this flag
       // lists files at planning to prove one-file-per-bucket (which the
-      // pre-write repartition guarantees here). CHILD session (round
-      // 14, verdict task 5 — the a14 precedent): the flag lives on s2
-      // for the frame's whole life, so (a) nothing ever touches the
-      // shared session's conf, even for an instant — a concurrently
-      // planning query cannot observe it (the r13 set/restore window
-      // could bleed under concurrent use); and (b) DERIVED plans
-      // (df.count(), Verify's repartition(1) wrapper) re-plan under s2
-      // and KEEP the zero-sort shape, closing the advisor's
-      // derived-plan caveat. s2 shares the context, catalog, and cache;
-      // only conf and temp views are isolated — exactly the scope the
-      // flag needs.
+      // pre-write repartition guarantees here). The flag is a session
+      // conf with no reader option, so a child session scopes it for
+      // the frame's whole life: the shared session's conf is never
+      // touched, and derived plans (df.count(), Verify's repartition(1)
+      // wrapper) re-plan under s2 and keep the zero-sort shape.
       val s2 = s.newSession()
       s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       s2.table(tOld).join(s2.table(tNew), Seq("doc_id"), "full_outer")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{GraftExtensions, Tables}
+import graft.Tables
 
 /** Relational OLAP block (SURVEY.md §2 B): the DuckDB-SQL surface a user
   * of the reference extension has over hdfs:// files, re-expressed with
@@ -461,7 +461,6 @@ object Relational {
     // ---- q29: the reference's demo scalar function as a native codegen
     // Catalyst expression (graft.expressions.Quack), SQL-registered.
     "q29_quack" -> { (s, dir) =>
-      GraftExtensions.install(s)
       T(s, dir, "customer")
         .selectExpr("c_custkey", "quack(c_name) AS quacked")
         .orderBy(col("c_custkey"))

@@ -213,22 +213,22 @@ object Sources {
     // overwrite replaces ONLY the partitions present in the incoming
     // frame. Here the F partition is rewritten with discounted prices;
     // O and P must survive untouched (static mode — Spark's default —
-    // would have deleted them, the classic footgun). Runs in a child
-    // session so the mode never leaks into other entries' writers.
+    // would have deleted them, the classic footgun). The mode is a
+    // writer option, which takes precedence over the session conf, so it
+    // never leaks into other entries' writers.
     "a14_partition_overwrite" -> { (s, dir) =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       val url = s"$scratchDir/a14/orders_by_status"
-      GraftWriter.removeDirectory(s2, url)
-      val base = Tables.load(s2, dir, "orders")
+      GraftWriter.removeDirectory(s, url)
+      val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
+      val dynamic = Map("partitionOverwriteMode" -> "dynamic")
       GraftWriter.write(base.repartition(col("o_orderstatus")), url,
-        format = Some("parquet"), partitionBy = Seq("o_orderstatus"))
+        format = Some("parquet"), partitionBy = Seq("o_orderstatus"), options = dynamic)
       val patch = base.filter(col("o_orderstatus") === "F")
         .withColumn("o_totalprice", col("o_totalprice") * 0.5)
       GraftWriter.write(patch.repartition(col("o_orderstatus")), url,
-        format = Some("parquet"), partitionBy = Seq("o_orderstatus"))
-      GraftReader.read(s2, url, "parquet")
+        format = Some("parquet"), partitionBy = Seq("o_orderstatus"), options = dynamic)
+      GraftReader.read(s, url, "parquet")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("total"))
@@ -238,10 +238,10 @@ object Sources {
     // ---- e5: parquet AGGREGATE pushdown — count/min/max answered from
     // parquet footer statistics instead of scanning row data, the
     // difference between touching 100 TB and touching its metadata.
-    // Needs the V2 parquet source, so the entry runs in a child session
-    // (newSession: shared context, isolated conf — nothing leaks into
-    // later queries, the s5/d20 advisor rule). PlanAuditSpec asserts
-    // PushedAggregation on the scan node.
+    // Needs the V2 parquet source. A child session scopes the source
+    // list and the pushdown flag: both are session confs with no reader
+    // option, and nothing leaks into later queries. PlanAuditSpec
+    // asserts PushedAggregation on the scan node.
     "e5_agg_pushdown" -> { (s, dir) =>
       val s2 = s.newSession()
       s2.conf.set("spark.sql.sources.useV1SourceList", "")
@@ -325,8 +325,8 @@ object Sources {
     // ... RETURN <expr>) is the engine-native twin: the body is
     // inlined into the Catalyst plan at analysis time — codegen,
     // pushdown and vectorization all see through it, unlike a black-box
-    // lambda UDF. Declared in a child session so the temp function
-    // cannot leak into other entries' catalogs.
+    // lambda UDF. A child session scopes the temp function and view, so
+    // neither leaks into other entries' catalogs.
     "e7_sql_macro" -> { (s, dir) =>
       val s2 = s.newSession()
       s2.sql("""

@@ -219,6 +219,92 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
+  /** Two docs in one (lang, n_chars/100) block whose Jaccard sits just
+    * under the 0.5 threshold yet rounds to it: A holds 10,000 distinct
+    * words, each twice; B holds those words plus 10,001 more.
+    * J = 10000/20001 = 0.499975, round(J, 4) = 0.5. Word lengths are
+    * chosen so both texts measure 1399xx chars. */
+  private lazy val roundingEdgeDir: String = {
+    val dir = scratch("rounding-edge")
+    import spark.implicits._
+    val shared = (0 until 10000).map(i => f"w$i%05d")
+    val extra = (0 until 9990).map(i => f"x$i%05d") ++ (0 until 11).map(i => f"y$i%04d")
+    val df = Seq((1L, (shared ++ shared).mkString(" ")), (2L, (shared ++ extra).mkString(" ")))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en"))
+      .withColumn("source", lit("spec"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    GraftWriter.write(df, s"$dir/documents.parquet")
+    dir
+  }
+
+  test("d4/d20: a pair whose jaccard rounds up to the 0.5 threshold is kept and clustered") {
+    val docs = Tables.load(spark, roundingEdgeDir, "documents")
+      .select(col("doc_id"), col("lang"), floor(col("n_chars") / 100).as("blk"),
+        split(col("text"), " ").as("w"))
+    assert(docs.select("lang", "blk").distinct().count() == 1, "the plant spans two blocks")
+    val brute = docs.as("a").join(docs.as("b"), col("a.lang") === col("b.lang") &&
+        col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id"), col("b.doc_id"),
+        round(expr("jaccard_sim(a.w, b.w)"), 4).as("j"))
+      .filter(col("j") >= 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(brute == Seq((1L, 2L, 0.5)), s"brute force: $brute")
+    val d4 = Pipeline.queries("d4_ngram_jaccard")(spark, roundingEdgeDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(d4 == brute, s"d4: $d4")
+    val d20 = Pipeline.queries("d20_dedup_clusters")(spark, roundingEdgeDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
+    assert(d20 == Seq((1L, 1L, 2L, true), (2L, 1L, 2L, false)), s"d20: $d20")
+  }
+
+  test("d140: the mega-block corpus waterfall equals a brute-force greedy drop") {
+    import spark.implicits._
+    val docs = Tables.load(spark, megaBucketDir, "documents")
+      .select("doc_id", "source", "lang", "n_chars", "text")
+      .as[(Long, String, String, Long, String)].collect().toSeq
+    // rung 1: d132's synthetic URL, canonicalized; keep max rev, then max id
+    def canon(u: String): String = {
+      val c = u.trim.toLowerCase.replaceFirst("^(https?://)?(www\\.)?", "")
+        .replaceFirst("/+$", "")
+      c.split("\\?", -1) match {
+        case Array(path) => path
+        case Array(path, qs) if qs.isEmpty => path
+        case Array(path, qs) => path + "?" + qs.split("&").sorted.mkString("&")
+      }
+    }
+    def url(id: Long, source: String): String = {
+      val u0 = s"$source/page${id % 50}"
+      (id % 4).toInt match {
+        case 0 => s"https://www.$u0"
+        case 1 => s"http://$u0/"
+        case 2 => s"$u0?b=2&a=1"
+        case _ => u0
+      }
+    }
+    val s1 = docs.groupBy(d => canon(url(d._1, d._2))).values
+      .map(_.maxBy(d => (d._1 % 3, d._1))).toSeq
+    // rung 2: one doc per text, the smallest id
+    val s2 = s1.groupBy(_._5).values.map(_.minBy(_._1)).toSeq
+    // rung 3: drop the larger id of every same-block pair with
+    // round(J, 4) >= 0.8
+    def wset(t: String): Set[String] = t.trim.split("\\s+").toSet
+    val drops = (for {
+      a <- s2; b <- s2
+      if a._1 < b._1 && a._3 == b._3 && a._4 / 100 == b._4 / 100
+      inter = (wset(a._5) & wset(b._5)).size
+      j = BigDecimal(inter) / BigDecimal((wset(a._5) | wset(b._5)).size)
+      if j.setScale(4, BigDecimal.RoundingMode.HALF_UP) >= BigDecimal("0.8")
+    } yield b._1).toSet
+    val s3 = s2.filterNot(d => drops(d._1))
+    assert(s1.size < docs.size && drops.nonEmpty, "the corpus exercises rungs 1 and 3")
+    val out = Pipeline.queries("d140_dedup_waterfall")(spark, megaBucketDir)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5))).toSeq
+    assert(out == Seq(("spec", docs.size.toLong, s1.size.toLong, s2.size.toLong,
+      s3.size.toLong, s3.size * 1000L / docs.size)), s"d140: $out")
+  }
+
   test("d20: a corpus dir rewritten between entries is read afresh") {
     // Run as Verify runs entries: through runEntry, whose cleanup
     // empties the helper registry, so the d20 labeling built over the

@@ -70,6 +70,24 @@ class ExtensionsSpec extends SparkSpecBase {
     assert(fresh.sql("SELECT quack('q')").head().getString(0).startsWith("Quack q"))
   }
 
+  test("e1: SparkEntry.queries installs the functions on a session that lacks them") {
+    // a session built without the extensions conf (the mains', an
+    // external caller's) relies on the install each entry runs
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (n, _, _) =>
+      assert(registry.dropFunction(FunctionIdentifier(n)), n)
+    }
+    intercept[Exception](fresh.sql("SELECT quack('q')").head())
+    for (name <- Seq("q29_quack", "d2_minhash_lsh")) {
+      val got = SparkEntry.queries(name)(fresh, sfTiny).collect().toSeq
+      val want = SparkEntry.queries(name)(spark, sfTiny).collect().toSeq
+      assert(got.nonEmpty && got == want, name)
+      spark.catalog.clearCache()
+      graft.queries.Pipeline.resetScalarCaches()
+    }
+  }
+
   test("e6: injected parser makes FROM 'path' native Spark SQL") {
     // the reference's headline syntax, through the REAL injectParser
     // path: this session's context was built with

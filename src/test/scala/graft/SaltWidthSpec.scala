@@ -6,13 +6,14 @@ import org.apache.spark.sql.Row
 import java.io.File
 import java.nio.file.Files
 
-/** The chunk-salted self-joins of d4, d20, d39 and the LSH engine
-  * (d13/d54) size their salt from the table's footer row count: a key
-  * never holds more rows than its table, so at n ≤ saltCap every key
-  * is one chunk and no per-key size aggregate is built. Past the cap,
-  * or when the footers cannot answer, the aggregate path runs and the
-  * rows stay the same. sfTiny has 500 documents and 500 embeddings,
-  * under both saltCap defaults (2000). */
+/** The chunk-salted self-joins of d4 (and d140, through the same
+  * scan), d20, d39 and the LSH engine (d13/d54) size their salt from
+  * the table's footer row count: a key never holds more rows than its
+  * table, so at n ≤ saltCap every key is one chunk and no per-key size
+  * aggregate is built. Past the cap, or when the footers cannot answer,
+  * the aggregate path runs and the rows stay the same. d23 reads its
+  * small-path decision from the same count. sfTiny has 500 documents
+  * and 500 embeddings, under both saltCap defaults (2000). */
 class SaltWidthSpec extends SparkSpecBase {
 
   private def endEntry(): Unit = {
@@ -72,6 +73,18 @@ class SaltWidthSpec extends SparkSpecBase {
       if (name == "d4_ngram_jaccard")
         assert(p.contains("ReusedExchange"), s"$name: the pair join sides do not share an exchange:\n$p")
     }
+  }
+
+  test("d140 at n <= saltCap: the near-dup rung builds no block-size aggregate") {
+    val p = executedPlan("d140_dedup_waterfall", sfTiny)
+    assert(!p.contains("block_n"), p)
+  }
+
+  test("d23 at documents <= graft.d23.sigBroadcastCap: building it starts no Spark job") {
+    // reps ≤ documents, so the footer row count picks the broadcast path
+    // and the membership gate without counting reps or documents
+    assert(jobsStarted(Pipeline.queries("d23_minhash_estimate")(spark, sfTiny)) == 0)
+    endEntry()
   }
 
   test("graft.lsh.saltCap below n: the salted LSH plan returns the same rows") {
