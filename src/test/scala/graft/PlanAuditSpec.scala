@@ -1746,14 +1746,25 @@ class PlanAuditSpec extends SparkSpecBase {
       s"d140's rungs must read the persisted survivor frames:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"d140's near rung must stay inside the (lang, bucket) block:\n$p")
-    // the rung-3 self-join must be the SALTED d4Pairs idiom: salt is a
-    // join key (hot blocks split across tasks) — an unsalted block
-    // self-join puts a block's whole O(n²) pair scan in one task
-    assert("""salt\#\d+L? = salt2\#\d+""".r.findFirstIn(p).isDefined ||
-           (p.contains("salt") && p.contains("salt2")),
-      s"d140 rung 3 lost its salt join key:\n$p")
-    assert(p.contains("pmod"),
-      s"d140 rung 3 must derive salt = doc_id mod nsalt:\n$p")
+    // the rung-3 self-join must be d4's SALTED scan: salt is a join key
+    // (hot blocks split across tasks) — an unsalted block self-join puts
+    // a block's whole O(n²) pair scan in one task. sfTiny's 500 documents
+    // fit one chunk per block, so its salt is a literal; a corpus past the
+    // 2000-row chunk cap must derive salt = doc_id mod nsalt.
+    val dir = scratch("d140-over-salt-cap")
+    import spark.implicits._
+    graft.sources.GraftWriter.write((0L until 2100L).map(i => (i, s"t$i u${i % 7}"))
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
+      .withColumn("n_chars", org.apache.spark.sql.functions.length(col("text")).cast("long")),
+      s"$dir/documents.parquet")
+    val ps = SparkEntry.queries("d140_dedup_waterfall")(spark, dir)
+      .queryExecution.executedPlan.toString
+    assert("""salt\#\d+L? = salt2\#\d+""".r.findFirstIn(ps).isDefined ||
+           (ps.contains("salt") && ps.contains("salt2")),
+      s"d140 rung 3 lost its salt join key:\n$ps")
+    assert(ps.contains("pmod"),
+      s"d140 rung 3 must derive salt = doc_id mod nsalt:\n$ps")
   }
 
   test("d141 diversity: one partial-aggregated pass, no joins") {
