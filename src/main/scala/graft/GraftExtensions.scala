@@ -252,8 +252,10 @@ object GraftExtensions {
     * an external caller's) works too. A function is registered only
     * when the registry does not already hold its exact builder:
     * `functions` is one `val`, so a builder is compared by identity, and
-    * a session that has them (through either path) is left untouched. */
-  def install(spark: SparkSession): Unit = {
+    * a session that has them (through either path) is left untouched.
+    * Synchronized: entries running at once on one session would
+    * otherwise both register a missing function. */
+  def install(spark: SparkSession): Unit = synchronized {
     val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, _, builder) =>
       if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
