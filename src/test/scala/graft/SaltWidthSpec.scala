@@ -64,8 +64,8 @@ class SaltWidthSpec extends SparkSpecBase {
   }
 
   test("at n <= saltCap, the executed plans hold no block-size or bucket-size aggregate") {
-    for (name <- Seq("d4_ngram_jaccard", "d20_dedup_clusters", "d39_containment",
-        "d13_embed_neardup", "d54_knn_graph")) {
+    for (name <- Seq("d4_ngram_jaccard", "d20_dedup_clusters", "d140_dedup_waterfall",
+        "d39_containment", "d13_embed_neardup", "d54_knn_graph")) {
       val p = executedPlan(name, sfTiny)
       assert(!p.contains("block_n") && !p.contains("bkt_n"), s"$name:\n$p")
       // with literal salt columns both sides of d4's pair join read one
@@ -73,11 +73,6 @@ class SaltWidthSpec extends SparkSpecBase {
       if (name == "d4_ngram_jaccard")
         assert(p.contains("ReusedExchange"), s"$name: the pair join sides do not share an exchange:\n$p")
     }
-  }
-
-  test("d140 at n <= saltCap: the near-dup rung builds no block-size aggregate") {
-    val p = executedPlan("d140_dedup_waterfall", sfTiny)
-    assert(!p.contains("block_n"), p)
   }
 
   test("d23 at documents <= graft.d23.sigBroadcastCap: building it starts no Spark job") {
