@@ -146,6 +146,16 @@ object GraftExtensions {
           MisraGries(c, kk)
         case _ => throw new IllegalArgumentException("heavy_hitters(item, k) — k must be an int literal")
       }),
+    ("union_find", info("union_find",
+      "union_find(a, b) - connected-components aggregate over the edges (a, b) of a group " +
+        "(bigint node ids; (a, a) adds an isolated node): returns " +
+        "array<struct<node, root, size>> in node order, root = the component's minimum id"),
+      fixedArity("union_find", 2)(e => UnionFindAgg(e(0), e(1)))),
+    ("term_counts", info("term_counts",
+      "term_counts(words) - the distinct elements of a string array with their counts, " +
+        "as array<struct<term, cnt>> in term order: the (term, count) groups of " +
+        "explode(words) for one row, computed without a shuffle"),
+      fixedArity("term_counts", 1)(e => TermCounts(e.head))),
     ("hyperplane_buckets",
       info("hyperplane_buckets",
         "hyperplane_buckets(vec[, tables, bits]) - multi-table sign-LSH bucket keys; " +

@@ -38,6 +38,11 @@ object GraftSession {
       // single-file corpus into fewer splits than cores, which starves
       // the compute-heavy text scans; small files still pack together.
       .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
+      // Generated-code cache, JVM-wide: one sf0.01 Verify run compiles
+      // 3877 distinct classes, so the 100-entry default evicts each
+      // class before its next use and every stage recompiles its code.
+      // 4096 entries keep every class of one run.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** How one [[runEntry]] call ended. */
   sealed trait Outcome {

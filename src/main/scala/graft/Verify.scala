@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -58,11 +60,16 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
+    // Generated classes an entry compiled: code-generation cache misses,
+    // one compile each, counted JVM-wide (entries run one at a time).
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     selected.foreach { case (name, fn) =>
+      val compiled = compiles
       val outcome = GraftSession.runEntry(spark, name, PerQueryTimeoutSec) {
         fn(spark, sfDir).repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      System.err.println(s"[verify] $name ${outcome.describe}")
+      System.err.println(
+        s"[verify] $name ${outcome.describe}, ${compiles - compiled} classes compiled")
     }
     // Every result is already on disk (one parquet dir per query,
     // oracle_sql.json first) — nothing left to lose. Cap the quiesce the

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec}
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
@@ -46,9 +47,23 @@ object Pipeline {
     * keeps the assignment retry-deterministic.
     */
   private[graft] def parallelScan(s: SparkSession, df: DataFrame): DataFrame =
-    if (df.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
+    if (scanSplits(df) < s.sparkContext.defaultParallelism)
       df.repartition(s.sparkContext.defaultParallelism)
     else df
+
+  /** The partitions of `df`. A file scan under projections and filters
+    * has its scan's splits, read from the physical plan before code
+    * generation (`df.rdd` would also plan a deserializer and compile
+    * its code); any other plan asks its RDD. */
+  private def scanSplits(df: DataFrame): Int = {
+    val plan = df.queryExecution.sparkPlan
+    val narrow = !plan.exists {
+      case _: ProjectExec | _: FilterExec | _: FileSourceScanExec => false
+      case _ => true
+    }
+    plan.collectFirst { case f: FileSourceScanExec if narrow => f.inputRDD.getNumPartitions }
+      .getOrElse(df.rdd.getNumPartitions)
+  }
 
   /** The documents-with-words frame every text operator starts from. */
   private[graft] def wordsOf(s: SparkSession, dir: String): DataFrame =
@@ -63,8 +78,8 @@ object Pipeline {
     * in here; everything else keeps the exchange-free scan (also the
     * scale-right default — at 100 TB scans split naturally and
     * parallelScan is a no-op anyway). */
-  private def wideWordsOf(s: SparkSession, dir: String): DataFrame =
-    withWords(parallelScan(s, T(s, dir, "documents")))
+  private def wideWordsOf(s: SparkSession, docs: DataFrame): DataFrame =
+    withWords(parallelScan(s, docs))
 
   /** [[withShingles]] over the words frame. */
   private def shinglesOf(s: SparkSession, dir: String): DataFrame =
@@ -772,42 +787,10 @@ object Pipeline {
   }
 
   /** d4's blocking key. d20's per-block union-find is only globally
-    * exact because it decomposes along the SAME key d4 generated edges
-    * under (edges never cross blocks) — both operators MUST derive it
-    * from here. */
+    * exact because it groups by the block [[blockedJaccardPairs]]
+    * returns with each edge (edges never cross blocks). */
   private def lenBucket: org.apache.spark.sql.Column =
     floor(col("n_chars") / 100.0).cast("int")
-
-  /** Streaming union-find with path compression (memory O(distinct
-    * nodes); the edge iterator streams through): emits one
-    * (node, root) row per node, root canonicalized to the component's
-    * min node id. `nodes` seeds members that may have no edges. Shared
-    * by both levels of d20's connected-components scheme.
-    */
-  private def unionFindLabels(nodes: Iterator[Long],
-      edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    nodes.foreach(d => parent.getOrElseUpdate(d, d))
-    edges.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(if (ra < rb) rb else ra) = math.min(ra, rb)
-    }
-    val keys = parent.keys.toArray
-    val minOfRoot = scala.collection.mutable.HashMap.empty[Long, Long]
-    keys.foreach { d =>
-      val r = find(d)
-      minOfRoot.update(r, math.min(minOfRoot.getOrElse(r, Long.MaxValue), d))
-    }
-    keys.iterator.map(d => (d, minOfRoot(find(d))))
-  }
 
   /** Per-entry registry of shared PERSISTED helper frames, keyed by
     * (session, corpus dir, helper). Within one entry every consumer of a
@@ -917,50 +900,29 @@ object Pipeline {
     df
   }
 
-  /** d20's cluster labeling — salted per-chunk union-find over d4Pairs
-    * edges, merged per block via cogroup — shared so the d142 purity
-    * audit provably reads the SAME components the d20 entry certifies.
-    * Returns the registry-PERSISTED (doc_id, root) frame; every consumer
-    * (size aggregate, final join, lang join) reads the cache, so the
-    * cogroup and the d4 pair generation upstream execute once. */
+  /** d20's cluster labeling `(doc_id, root, cluster_size)`, root = the
+    * component's minimum doc_id, shared so the d142 purity audit
+    * provably reads the SAME components the d20 entry certifies.
+    * Registry-persisted, so d4's pair generation runs once per entry. */
   private[graft] def d20Components(s: SparkSession, dir: String): DataFrame =
     cachedHelper(s, dir, "d20Components")(d20ComponentsPlan(s, dir))
 
-  /** Two-level union-find over [[d4Pairs]] edges: level 1 salts each
-    * block's edges by (blk, doc_a mod nsalt) and contracts every chunk
-    * to (node, local root) links; level 2 cogroups each block's links
-    * with its full member list. nsalt comes from [[withSaltWidth]] with
-    * d4's saltCap: blocks partition the documents, so block_n ≤ n, the
-    * documents row count, and at n ≤ saltCap no block-size aggregate
-    * is built and every block is one chunk. */
+  /** Connected components of the [[d4Pairs]] edges by one `union_find`
+    * aggregate per (lang, [[lenBucket]]) block. Exact because d4's
+    * edges never cross blocks. Every document adds a (doc, doc)
+    * self-edge, so isolated documents are labeled too. The map-side
+    * partial aggregate contracts each salted pair-join task's edges to
+    * one link per node it saw; the final merge of a block holds at most
+    * the block's documents, however many edges a mega-block has. */
   private def d20ComponentsPlan(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val blocked = T(s, dir, "documents")
-      .select(col("doc_id"), concat_ws(" ", col("lang"), lenBucket).as("blk"))
-    val salted = withSaltWidth(blocked, Seq("blk"), "doc_id", blockSaltCap,
-        Tables.rowCount(s, dir, "documents", blockSaltCap))(
-      blocked.groupBy(col("blk")).agg(count(lit(1)).as("block_n")))
-    // level 1: contracted (node → local root) links per edge chunk
-    // (d4Pairs, not the d4 query: the presentation sort would be paid
-    // on the full edge set and immediately discarded by groupByKey)
-    val links = d4Pairs(s, dir)
-      .select("doc_a", "doc_b")
-      .join(salted.select(col("doc_id").as("doc_a"), col("blk"), col("salt")), "doc_a")
-      .select(col("blk"), col("salt"),
-        col("doc_a"), col("doc_b"))
-      .as[(String, Int, Long, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (key: (String, Int), it: Iterator[(String, Int, Long, Long)]) =>
-        unionFindLabels(Iterator.empty, it.map(t => (t._3, t._4)))
-          .map { case (d, r) => (key._1, d, r) }
-      }
-    // level 2: per-block merge of contracted links + isolated members
-    val docsK = blocked.as[(Long, String)]
-      .groupByKey(_._2).mapValues(_._1)
-    val linksK = links.groupByKey(_._1).mapValues(t => (t._2, t._3))
-    docsK.cogroup(linksK) { (_, docs, linkEdges) =>
-      unionFindLabels(docs, linkEdges)
-    }.toDF("doc_id", "root")
+    val docs = T(s, dir, "documents")
+    val self = docs.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
+      col("lang"), lenBucket.as("len_bucket"))
+    d4Pairs(s, dir, docs).select("doc_a", "doc_b", "lang", "len_bucket")
+      .union(self)
+      .groupBy("lang", "len_bucket")
+      .agg(expr("union_find(doc_a, doc_b)").as("comp"))
+      .selectExpr("inline(comp) AS (doc_id, root, cluster_size)")
     // persisted by the cachedHelper registry, not here
   }
 
@@ -1039,23 +1001,26 @@ object Pipeline {
     d112Rank(cand.join(names, "gkey"))
   }
 
-  /** Rows per (lang, [[lenBucket]]) block chunk before d4's and d20's
-    * salted scans split a block. */
+  /** Rows per (lang, [[lenBucket]]) block chunk before d4's salted
+    * scan splits a block. */
   private val blockSaltCap = 2000
 
-  /** d4's pair set without the presentation sort: d4 adds the order,
-    * d20's groupByKey would discard it. */
-  private def d4Pairs(s: SparkSession, dir: String): DataFrame =
-    blockedJaccardPairs(s, dir, wideWordsOf(s, dir), 0.5)
+  /** d4's pair set with each pair's block, without the presentation
+    * sort: d4 adds the order, d20's aggregate would discard it. */
+  private def d4Pairs(s: SparkSession, dir: String, docs: DataFrame): DataFrame =
+    blockedJaccardPairs(s, dir, wideWordsOf(s, docs), 0.5)
 
-  /** Exact word-set Jaccard pairs `(doc_a < doc_b, jaccard)` with
-    * `round(J, 4) >= thr` among the rows of `words` (doc_id, lang,
-    * n_chars, words) that share the (lang, [[lenBucket]]) block.
+  /** Exact word-set Jaccard pairs `(doc_a < doc_b, jaccard, lang,
+    * len_bucket)` with `round(J, 4) >= thr` among the rows of `words`
+    * (doc_id, lang, n_chars, words) that share the (lang, [[lenBucket]])
+    * block, returned with the pair's block.
     *
     * The bound is `thr`'s pre-rounding boundary `b` = thr - 0.00005:
     * round(J, 4) >= thr ⇔ J >= b. J ≤ min/max set size, so the join
-    * first tests 100000·min(wn) >= (100000·b)·max(wn) in Long
-    * arithmetic (it never drops a qualifying pair), then the bail
+    * first tests 100000·min(|set|) >= (100000·b)·max(|set|) in Long
+    * arithmetic (it never drops a qualifying pair). It probes size() of
+    * the kernel's inputs, so the JaccardPrefilter rule adds no second,
+    * double-typed bound. Then the bail
     * kernel, which stops a merge once J provably cannot reach `b`. The
     * kernel is the last conjunct so the cheap ones short-circuit it (a
     * post-join filter would be pushed ahead of them). Survivors are
@@ -1074,24 +1039,24 @@ object Pipeline {
     val w = words
       .select(col("doc_id"), col("lang"), lenBucket.as("len_bucket"),
         array_sort(array_distinct(col("words"))).as("wset"))
-      .withColumn("wn", size(col("wset")))
     val sized = withSaltWidth(w, Seq("lang", "len_bucket"), "doc_id", blockSaltCap,
         Tables.rowCount(s, dir, "documents", blockSaltCap))(
       w.groupBy(col("lang"), col("len_bucket")).agg(count(lit(1)).as("block_n")))
     val a = sized.select(col("doc_id").as("doc_a"), col("lang"), col("len_bucket"),
-      col("salt"), col("wset").as("set_a"), col("wn").as("wn_a"))
+      col("salt"), col("wset").as("set_a"))
     val b = sized.select(col("doc_id").as("doc_b"), col("lang").as("lang2"),
       col("len_bucket").as("len_bucket2"),
       explode(expr("sequence(0, nsalt - 1)")).as("salt2"),
-      col("wset").as("set_b"), col("wn").as("wn_b"))
+      col("wset").as("set_b"))
     a.join(b, col("lang") === col("lang2") && col("len_bucket") === col("len_bucket2") &&
         col("salt") === col("salt2") && col("doc_a") < col("doc_b") &&
-        col("wn_a") * 100000L >= col("wn_b") * boundary &&
-        col("wn_b") * 100000L >= col("wn_a") * boundary &&
+        size(col("set_a")) * 100000L >= size(col("set_b")) * boundary &&
+        size(col("set_b")) * 100000L >= size(col("set_a")) * boundary &&
         round(expr(s"jaccard_sim_sorted_bail(set_a, set_b, ${BigDecimal(boundary, 5)})"),
           4) >= thr)
       .select(col("doc_a"), col("doc_b"),
-        round(expr("jaccard_sim_sorted(set_a, set_b)"), 4).as("jaccard"))
+        round(expr("jaccard_sim_sorted(set_a, set_b)"), 4).as("jaccard"),
+        col("lang"), col("len_bucket"))
   }
 
   /** d7's marker-word language scorer — the ONE Spark-side definition
@@ -1308,7 +1273,8 @@ object Pipeline {
     // [[d4Pairs]] pair set (blocking, size-ratio prefilter, merge kernel,
     // mega-block chunk-salting) in a deterministic order.
     "d4_ngram_jaccard" -> { (s, dir) =>
-      d4Pairs(s, dir).orderBy("doc_a", "doc_b")
+      d4Pairs(s, dir, T(s, dir, "documents")).select("doc_a", "doc_b", "jaccard")
+        .orderBy("doc_a", "doc_b")
     },
 
     // ---- d20: connected-components dedup clustering — the step a real
@@ -1317,37 +1283,22 @@ object Pipeline {
     // canonical doc per cluster (min doc_id). d4's edges are BLOCK-LOCAL
     // by construction (both endpoints share the lang + len-bucket
     // blocking key), so global CC decomposes exactly into per-block CC.
-    // No driver-side iteration at all. The earlier iterative
-    // min-label-propagation + pointer-jumping variant (the shape
-    // cross-block graphs need) converged in 9 rounds but paid ~1 s/round
-    // of scheduling floor — 16 s at sf0.1 where this shape costs ~3 s on
-    // top of the d4 pair generation it consumes.
-    //
-    // TWO-LEVEL union-find, so a homogeneous mega-block (the case d4
-    // chunk-salts its pair scan against) cannot collapse the clustering
-    // back into one O(edges) task:
-    //  1. edges are salted by (blk, doc_a mod nsalt) — the same
-    //     per-block nsalt derivation as d4 — and each chunk runs a local
-    //     streaming union-find, emitting ONE (node, local min-root) link
-    //     per node it saw. This contracts O(edges) down to
-    //     O(nodes × chunks touched) and restores the parallelism the
-    //     salting bought upstream.
-    //  2. one cogroup per block merges the contracted links with the
-    //     full member list (isolated docs included) through the same
-    //     union-find. A node with edges in several chunks links its
-    //     local roots, so components are exactly preserved (standard
-    //     edge-partition contraction). The single per-block task is now
-    //     bounded by O(docs in block), INDEPENDENT of edge count.
-    // Both levels stream their edge iterators; memory is O(distinct
-    // nodes) per task (the legitimate mapGroups case: per-group
-    // imperative logic Spark's operators can't express).
+    // No driver-side iteration at all: [[d20ComponentsPlan]] runs one
+    // `union_find` aggregate per block, with the invariants that keep a
+    // homogeneous mega-block (the case d4 chunk-salts its pair scan
+    // against) bounded:
+    //  - a map-side partial buffer holds the nodes of one salted join
+    //    task's edges, and crosses the exchange as one (node, parent)
+    //    link per node, not per edge;
+    //  - the final merge of a block unions those links with the block's
+    //    self-edges, so it holds O(docs in block), independent of the
+    //    edge count;
+    //  - the aggregate emits each component's size with its labels, so
+    //    no size aggregate or join back follows.
     // The DuckDB oracle is an exact recursive-CTE transitive closure, so
     // the block-local = global equivalence is itself oracle-verified.
     "d20_dedup_clusters" -> { (s, dir) =>
-      val labeled = d20Components(s, dir)
-      val sizes = labeled.groupBy(col("root"))
-        .agg(count(lit(1)).as("cluster_size"))
-      labeled.join(sizes, "root")
+      d20Components(s, dir)
         .select(col("doc_id"), col("root"), col("cluster_size"),
           (col("doc_id") === col("root")).as("keep"))
         .orderBy("doc_id")
@@ -1756,8 +1707,11 @@ object Pipeline {
       // per round. Rides the same eager checkpoint materialization
       // (zero extra jobs; at 100 TB this is a map-side pass over the
       // edge build's output partitions).
-      val preContract = (it: Iterator[(Long, Long)]) =>
-        unionFindLabels(Iterator.empty, it).filter { case (n, r) => n != r }
+      val preContract = (it: Iterator[(Long, Long)]) => {
+        val uf = new graft.expressions.UnionFind
+        it.foreach { case (u, v) => uf.union(u, v) }
+        uf.labels.iterator.filter { case (n, r) => n != r }
+      }
       var cur = {
         import s.implicits._
         lshScoredPairs(s, dir).filter(col("cos_sim") >= thr)
@@ -2060,18 +2014,19 @@ object Pipeline {
     // quality filter: score each doc by the mean log-probability of its
     // tokens under the corpus unigram distribution (low score = atypical
     // /noisy text, the cheap proxy for perplexity filtering when no real
-    // LM is available). Same distributed shape as d16: explode → corpus
-    // frequency agg → join back on word → per-doc mean. The corpus
-    // token total joins as a broadcast 1-row aggregate.
+    // LM is available). A row's (word, cnt) groups come from
+    // `term_counts` inside the row, so no token or (doc, word) pair is
+    // shuffled to count it. The frequency aggregate runs once, over
+    // those rows; the corpus token total is one map-combinable global
+    // sum of the row sizes, joined as a broadcast 1-row aggregate.
     "d22_unigram_logprob" -> { (s, dir) =>
       val words = wordsOf(s, dir)
-        .select(col("doc_id"), explode(col("words")).as("word"))
-      // one explode; frequencies and the instance-weighted mean both
-      // come from the (doc, word, cnt) aggregate, so the word join moves
-      // distinct pairs, not token instances (d16's audit finding)
-      val tf = words.groupBy("doc_id", "word").agg(count(lit(1)).as("cnt")).transform(pinOnce)
+      val tf = words.select(col("doc_id"), explode(expr("term_counts(words)")).as("t"))
+        .select(col("doc_id"), col("t.term").as("word"), col("t.cnt").as("cnt"))
       val freq = tf.groupBy("word").agg(sum(col("cnt")).as("wfreq"))
-      val total = freq.agg(sum(col("wfreq")).as("n_total")).withColumn("one", lit(1))
+      val total = words.filter(col("words").isNotNull)
+        .agg(sum(size(col("words")).cast("long")).as("n_total"))
+        .withColumn("one", lit(1))
       tf.join(freq, "word")
         .withColumn("one", lit(1)).join(broadcast(total), "one")
         .groupBy(col("doc_id"))

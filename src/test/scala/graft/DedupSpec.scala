@@ -109,7 +109,7 @@ class DedupSpec extends SparkSpecBase {
 
   /** Single-block corpus: every doc shares (lang, len bucket), so with
     * saltCap = 2000 the 2400 docs force nsalt = 2 — exercising d4's
-    * chunk-salted pair scan AND d20's two-level union-find. 30 clusters
+    * chunk-salted pair scan AND d20's union-find partials and merge. 30 clusters
     * of 80 near-identical docs (18 shared + 2 own tokens, same length):
     * within-cluster J = 18/22 ≈ 0.82, cross-cluster J = 0. */
   private lazy val megaBucketDir: String = {
@@ -205,9 +205,10 @@ class DedupSpec extends SparkSpecBase {
 
   test("d20: two-level union-find clusters a single-block corpus exactly") {
     // The mega-block's edge mass (30 × C(80,2) edges in ONE block) is
-    // split across level-1 chunks; the level-2 merge must still recover
-    // the exact 30 components: root = min doc_id of the cluster
-    // (= the cluster index, docs 0..29), size 80, keep only the root.
+    // split across salted join tasks, whose union_find partials the
+    // final per-block merge must combine to recover the exact 30
+    // components: root = min doc_id of the cluster (= the cluster
+    // index, docs 0..29), size 80, keep only the root.
     val out = Pipeline.queries("d20_dedup_clusters")(spark, megaBucketDir).collect()
     assert(out.length == 2400)
     out.foreach { r =>

@@ -138,17 +138,38 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("d20: cogroup labeling is computed once, not per consumer") {
-    // the labeling feeds both the size aggregate and the final join; an
-    // unpersisted frame re-executes the whole cogroup + d4 subtree per
-    // consumer (caught once by Explain audit — pin it). With the persist
-    // in place, BOTH consumers must read the cache (the CoGroup text
-    // still appears inside each InMemoryRelation's cached-plan
-    // description, so count cache scans, not CoGroup nodes).
+  test("d20: one union_find aggregate labels the blocks, with no typed regroup") {
+    // the labeling is the registry-persisted union_find aggregate; no
+    // typed Dataset step (AppendColumns → MapGroups / CoGroup) regroups
+    // rows, and the cluster sizes come out of the aggregate, not from a
+    // size aggregate joined back
     val p = Pipeline.queries("d20_dedup_clusters")(spark, sfTiny)
       .queryExecution.executedPlan.toString
-    assert("InMemoryTableScan".r.findAllIn(p).length >= 2,
-      s"labeling consumers do not share the cache:\n$p")
+    assert(p.contains("union_find") && p.contains("InMemoryTableScan"), p)
+    for (node <- Seq("MapGroups", "CoGroup", "AppendColumns", "keys=[root"))
+      assert(!p.contains(node), s"$node in d20's plan:\n$p")
+  }
+
+  test("d4, d20 and d140: the near-dup join tests the size ratio once per side") {
+    // blockedJaccardPairs' Long bound probes size() of the kernel's
+    // inputs, so the JaccardPrefilter rule adds no double-typed copy
+    for (name <- Seq("d4_ngram_jaccard", "d20_dedup_clusters", "d140_dedup_waterfall")) {
+      val p = plan(name)
+      val join = p.linesIterator.filter(_.contains("jaccard_sim_sorted_bail")).mkString("\n")
+      assert(join.nonEmpty, s"$name: no kernel join:\n$p")
+      assert("\\* 100000\\)".r.findAllIn(join).length == 2, s"$name:\n$join")
+      assert(!join.contains("as double)"), s"$name: a double-typed size bound:\n$join")
+    }
+  }
+
+  test("d22: term counts come from the row, with no (doc_id, word) exchange and no pin") {
+    val p = Pipeline.queries("d22_unigram_logprob")(spark, sfTiny)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("term_counts"), p)
+    assert(!"hashpartitioning\\(doc_id#\\d+L?, word#".r.findFirstIn(p).isDefined, p)
+    assert(!p.contains("InMemoryTableScan"), p)
+    // the frequency aggregate runs once: one final sum(cnt) over words
+    assert("HashAggregate\\(keys=\\[word#\\d+\\], functions=\\[sum\\(".r.findAllIn(p).length == 1, p)
   }
 
   test("d25 contamination: benchmark side broadcasts as a semi-join") {
