@@ -96,13 +96,11 @@ object GraftSession {
     * lock and then each cached frame's, while a body building a cached
     * frame holds that frame's lock and waits for the manager's, so
     * running both at once deadlocks. The cleanup is the same for every
-    * outcome: release the entry's persisted frames (`clearCache`), empty
-    * the helper registry and the memoized scalars
-    * (`Pipeline.resetScalarCaches`), so the next entry builds and plans
-    * its helpers as if it ran alone, and re-pin the
-    * one-partition-per-core shuffle width (a local session's default
-    * parallelism is its core count) that an entry may have changed and
-    * not restored.
+    * outcome: release the entry's persisted frames (`clearCache`), so
+    * the next entry builds and pins its helpers as if it ran alone, and
+    * re-pin the one-partition-per-core shuffle width (a local session's
+    * default parallelism is its core count) that an entry may have
+    * changed and not restored.
     */
   def runEntry(spark: SparkSession, name: String, timeoutSec: Long)(body: => Unit): Outcome = {
     val sc = spark.sparkContext
@@ -134,7 +132,6 @@ object GraftSession {
         else Outcome.DidNotStop(timeoutSec)
       }
     spark.catalog.clearCache()
-    queries.Pipeline.resetScalarCaches()
     spark.conf.set("spark.sql.shuffle.partitions", sc.defaultParallelism.toString)
     outcome
   }

@@ -433,18 +433,16 @@ object Pipeline {
            WHEN 2 THEN concat(url0, '?b=2&a=1')
            ELSE url0 END"""))
 
-  /** One tokenize + sort + dedup + group-hash pass per doc, PERSISTED
-    * through the helper registry, so d15/d23/d85 and every consumer
-    * within an entry (rep aggregation, banding, membership expansion)
-    * read one cached token pass without re-scanning the corpus. gid is
-    * injective for whitespace-split words (no token contains a space).
+  /** One tokenize + sort + dedup + group-hash pass per doc, pinned
+    * once, so every consumer inside the entry that builds it (rep
+    * aggregation, banding, membership expansion) reads one cached token
+    * pass without re-scanning the corpus. gid is injective for
+    * whitespace-split words (no token contains a space).
     */
   private def collapsedWordSets(s: SparkSession, dir: String): DataFrame =
-    cachedHelper(s, dir, "collapsedWordSets") {
-      wordsOf(s, dir)
-        .select(col("doc_id"), array_sort(array_distinct(col("words"))).as("wset"))
-        .withColumn("gid", md5(concat_ws(" ", col("wset"))))
-    }
+    pinOnce(wordsOf(s, dir)
+      .select(col("doc_id"), array_sort(array_distinct(col("words"))).as("wset"))
+      .withColumn("gid", md5(concat_ws(" ", col("wset")))))
 
   /** One row per distinct word set of `w` ([[collapsedWordSets]]):
     * (gid, rep_id = the smallest doc_id holding it, wset). Unpinned;
@@ -466,7 +464,7 @@ object Pipeline {
       .join(reps.select(col("gid"), col("rep_id")), "gid")
       .select(col("doc_id"), col("rep_id"))
     val m = if (tableRows(s, dir, "documents") <= 10000000L ||
-        cachedCount(s, dir, "nDocsCollapsed")(w.count()) <= 10000000L)
+        w.count() <= 10000000L)
       broadcast(mFrame) else mFrame
     val cross = repPairs
       .join(m.select(col("rep_id").as("r_a"), col("doc_id").as("da")), "r_a")
@@ -504,19 +502,18 @@ object Pipeline {
       FROM graft_d47_new n""")
   }
 
-  /** Per-width sign-LSH bucket occupancy table `(bkt, bkt_n)`,
-    * registry-PERSISTED: one corpus×48 explode+count pass per
-    * (corpus, width) serves the capacity pre-gate's pair-mass
-    * aggregate, the salted band join's occupancy broadcast (built only
-    * for a corpus over saltCap rows) and d146's capacity audit.
-    * Bucket-count-sized (≤ 48·2^bits rows), cheap to pin. */
+  /** Per-width sign-LSH bucket occupancy table `(bkt, bkt_n)`, pinned
+    * once: one corpus×48 explode+count pass per width serves, within
+    * the entry that builds it, the capacity pre-gate's pair-mass
+    * aggregate and the salted band join's occupancy broadcast (built
+    * only for a corpus over saltCap rows); d146 reports it as its
+    * capacity audit. Bucket-count-sized (≤ 48·2^bits rows), cheap to
+    * pin. */
   private def lshBktSizes(s: SparkSession, dir: String, bits: Int): DataFrame =
-    cachedHelper(s, dir, s"lshBktSizes:$bits") {
-      T(s, dir, "embeddings")
-        .withColumn("vec", col("embedding").cast("array<double>"))
-        .select(explode(expr(s"hyperplane_buckets(vec, 48, $bits)")).as("bkt"))
-        .groupBy("bkt").agg(count(lit(1)).as("bkt_n"))
-    }
+    pinOnce(T(s, dir, "embeddings")
+      .withColumn("vec", col("embedding").cast("array<double>"))
+      .select(explode(expr(s"hyperplane_buckets(vec, 48, $bits)")).as("bkt"))
+      .groupBy("bkt").agg(count(lit(1)).as("bkt_n")))
 
   /** Undirected sign-LSH candidate pairs over the whole embedding
     * corpus, scored with the exact cosine kernel: the shared engine
@@ -563,8 +560,8 @@ object Pipeline {
     // quadratic stage itself, where salting only spreads it across
     // tasks. The prediction is one linear explode+aggregate (strictly
     // cheaper than the join it plans, vec column never read), runs
-    // once per (session, corpus, width) via the count registry, and
-    // adaptiveBits' occupancy formula stays the base width — the gate
+    // once per width the gate tries, and adaptiveBits' occupancy
+    // formula stays the base width — the gate
     // only ever RAISES it on occupancy-skewed corpora the formula's
     // uniform assumption misses. Default budget 2e9 pairs: above every
     // oracle-checked scale (sf10 measured 351M), so replay oracles —
@@ -579,26 +576,28 @@ object Pipeline {
     // 100 TB pathology this gate exists for — would silently WRAP the
     // BIGINT product and under-predict mass exactly when escalation
     // matters most. bkt_n·(bkt_n−1) is always even, so /2 is exact.
-    def pairMass(b: Int): Long = cachedCount(s, dir, s"lshPairMass:$b")(
+    def pairMass(b: Int): Long =
       lshBktSizes(s, dir, b)
         .agg(least(coalesce(
             sum(expr("cast(bkt_n as decimal(38,0)) * (bkt_n - 1) / 2")),
             lit(0).cast("decimal(38,0)")),
           lit(Long.MaxValue).cast("decimal(38,0)")).cast("long"))
-        .head().getLong(0))
+        .head().getLong(0)
     var bits = bits0
     // Gate short-circuit (round 16): Σ_b c_b(c_b−1)/2 ≤ n(n−1)/2 for
     // ANY bucketing, so when the WHOLE-corpus pair count already fits
     // the budget the gate provably cannot fire at any width — skip the
-    // occupancy pass (and its per-query job + pin rebuild under the
-    // bench's purity-cleared registry) entirely. Exact same escalation
+    // occupancy pass (and its job + pin) entirely. Exact same escalation
     // decisions: the skip triggers only where escalation is impossible,
     // and at 100 TB (n ≳ 64 k for the default budget) the gate still
     // runs. Overflow-safe: n ≥ 3e9 runs the gate unconditionally.
     val gateCanFire = nVec >= 3000000000L ||
       (nVec > 1 && nVec * (nVec - 1) / 2 > pairBudget)
+    // pair mass at bits0, bits0 + 1, ..., one per width the gate tried
+    var masses = Vector.empty[Long]
     if (gateCanFire)
-      while (bits < 16 && pairMass(bits) > pairBudget) bits += 1
+      while (bits < 16 && { masses :+= pairMass(bits); masses.last > pairBudget })
+        bits += 1
     // Escalation is a REAL result change (recall drops with width) that
     // the replay oracle — deriving width from count(*) alone — cannot
     // follow. In oracle-gated runs (Verify sets graft.lsh.oracleGated)
@@ -607,9 +606,11 @@ object Pipeline {
     // width so probes can record it. Default budget 2e9 is above every
     // gated SF, so the gate never fires on the official path.
     if (bits != bits0) {
+      // the loop stops at width 16 without pricing it
+      val finalMass = masses.lift(bits - bits0).getOrElse(pairMass(bits))
       val msg = s"lshScoredPairs capacity pre-gate escalated signature " +
-        s"width $bits0 -> $bits (predicted pair mass ${pairMass(bits0)} " +
-        s"at $bits0 -> ${pairMass(bits)} at $bits, budget $pairBudget; " +
+        s"width $bits0 -> $bits (predicted pair mass ${masses.head} " +
+        s"at $bits0 -> $finalMass at $bits, budget $pairBudget; " +
         s"the occupancy pass at the final width is the one the join " +
         s"broadcast reuses)"
       if (s.conf.get("graft.lsh.oracleGated", "false").toBoolean)
@@ -618,13 +619,12 @@ object Pipeline {
           "escalated width — raise graft.lsh.pairBudget")
       else System.err.println(s"[graft] $msg")
     }
-    // The SLIM scored-pair stream goes through the registry (keyed by
-    // bits — the spec occupancy knob changes the banding): d13/d54/d55
-    // share ONE computed pair set per corpus instead of three. The
-    // heavy (bucket, id, vec) frame is deliberately NOT persisted —
-    // the two join sides re-run the explode once per corpus (one extra
-    // plane-dot pass), which beats pinning corpus × 48 × vec rows in
-    // storage.
+    // The SLIM scored-pair stream is pinned once, for the readers
+    // inside the entry that builds it (d54 and lshKnnEdges read it on
+    // both sides of their union). The heavy (bucket, id, vec)
+    // frame is deliberately NOT persisted — the two join sides re-run
+    // the explode (one extra plane-dot pass), which beats pinning
+    // corpus × 48 × vec rows in storage.
     val saltCap = s.conf.get("graft.lsh.saltCap", "2000").toInt
     // Cap default 10 k, set by measurement not by broadcast-size limits
     // (a 250 k cap would broadcast fine): the r12 sf10 probe measured
@@ -636,7 +636,7 @@ object Pipeline {
     // the whole cost (the bench SFs), and leaves every probed scale on
     // the sf10-certified in-join shape.
     val vecCap = s.conf.get("graft.lsh.vecBroadcastCap", "10000").toLong
-    cachedHelper(s, dir, s"lshScoredPairs:$bits:$saltCap:${nVec <= vecCap}") {
+    pinOnce {
       def withNsalt(banded: DataFrame): DataFrame =
         withSaltWidth(banded, Seq("bkt"), "vec_id", saltCap, Some(nVec))(
           lshBktSizes(s, dir, bits))
@@ -729,21 +729,19 @@ object Pipeline {
         col("t.score").as("cos_sim"), (col("pos") + 1).as("rn"))
 
   /** Corpus kNN edge list — top-5 by (cos desc, nid) per node over the
-    * symmetric [[lshScoredPairs]] stream; d54's graph contract as a
-    * shared registry-persisted helper. d97's propagation rounds and
-    * d99's pagerank rounds read the SAME edge list the d54 entry
-    * certifies (composition discipline), persisted once per entry by
-    * the registry. Ids and one double only — vectors never enter the
-    * frame. */
-  private def lshKnnEdges(s: SparkSession, dir: String): DataFrame =
-    cachedHelper(s, dir, "lshKnnEdges") {
-      val sc0 = lshScoredPairs(s, dir)
-      val bi = sc0.select(col("id_a").as("vec_id"), col("id_b").as("nid"),
-          col("cos_sim"))
-        .union(sc0.select(col("id_b").as("vec_id"), col("id_a").as("nid"),
-          col("cos_sim")))
-      knnTop5(bi).select("vec_id", "nid")
-    }
+    * symmetric [[lshScoredPairs]] stream, spelled as d54's graph
+    * contract ([[knnTop5]]) so d97's propagation rounds and d99's
+    * pagerank rounds read the edges the d54 entry certifies. Pinned
+    * once, for every round of the entry that builds it. Ids and one
+    * double only — vectors never enter the frame. */
+  private def lshKnnEdges(s: SparkSession, dir: String): DataFrame = {
+    val sc0 = lshScoredPairs(s, dir)
+    val bi = sc0.select(col("id_a").as("vec_id"), col("id_b").as("nid"),
+        col("cos_sim"))
+      .union(sc0.select(col("id_b").as("vec_id"), col("id_a").as("nid"),
+        col("cos_sim")))
+    pinOnce(knnTop5(bi).select("vec_id", "nid"))
+  }
 
   /** One alternating round of Kiveris et al.'s star-contraction
     * connected components ("Connected Components in MapReduce and
@@ -792,71 +790,15 @@ object Pipeline {
   private def lenBucket: org.apache.spark.sql.Column =
     floor(col("n_chars") / 100.0).cast("int")
 
-  /** Per-entry registry of shared PERSISTED helper frames, keyed by
-    * (session, corpus dir, helper). Within one entry every consumer of a
-    * helper reads the one frame its first call built and persisted, so a
-    * labeling or pair set is computed once per entry rather than once per
-    * consumer, and no identical plan is persisted twice (CacheManager's
-    * "already cached" warning). [[resetScalarCaches]] empties it at the
-    * point callers `clearCache`, so every entry builds and plans its
-    * helpers the same way whatever ran before it. A corpus dir must not
-    * change while one entry runs.
-    */
-  private val helperCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  // get-then-putIfAbsent, not computeIfAbsent: builds nest (lshKnnEdges
-  // → lshScoredPairs → lshBktSizes), and a nested computeIfAbsent on one
-  // ConcurrentHashMap throws IllegalStateException("Recursive update").
-  // A racing double build yields the identical plan, whose persist the
-  // CacheManager dedupes; the winner is putIfAbsent's return value.
-  private def cachedHelper(s: SparkSession, dir: String, helper: String)(
-      build: => DataFrame): DataFrame = {
-    val key = (s, dir, helper)
-    val cur = helperCache.get(key)
-    if (cur != null) cur
-    else {
-      val built = pinOnce(build)
-      Option(helperCache.putIfAbsent(key, built)).getOrElse(built)
-    }
-  }
-
-  /** Per-entry memo for the adaptive-path SCALARS: the corpus row counts
-    * and capacity estimates that pick between broadcast/in-join/banding
-    * shapes run one driver-side count() per entry however many helpers
-    * read them. Same lifetime as [[helperCache]].
-    */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
-
-  /** Drops every per-entry memo: the helper registry's frames and the
-    * memoized scalars. Callers pair it with `spark.catalog.clearCache()`,
-    * which releases the frames' blocks, so the next entry builds,
-    * persists and counts everything it reads itself.
-    */
-  def resetScalarCaches(): Unit = {
-    helperCache.clear()
-    countCache.clear()
-  }
-
-  private[graft] def cachedCount(s: SparkSession, dir: String, key: String)(
-      compute: => Long): Long = {
-    val k = (s, dir, key)
-    val cur = countCache.get(k)
-    if (cur != null) cur.longValue
-    else {
-      val v = compute
-      Option(countCache.putIfAbsent(k, java.lang.Long.valueOf(v)))
-        .map(_.longValue).getOrElse(v)
-    }
-  }
+  /** Empty: the query modules keep no per-entry state. It stays because
+    * the perfbench harness calls it between ops, and the harness
+    * changes only with the benchmark. */
+  def resetScalarCaches(): Unit = ()
 
   /** Exact rows of raw table `name`: from its parquet footers when they
-    * answer ([[Tables.rowCount]]), else one `count()` job. Memoized for
-    * the entry like [[cachedCount]]. */
+    * answer ([[Tables.rowCount]]), else one `count()` job. */
   private def tableRows(s: SparkSession, dir: String, name: String): Long =
-    cachedCount(s, dir, s"rows:$name")(
-      Tables.rowCount(s, dir, name).getOrElse(T(s, dir, name).count()))
+    Tables.rowCount(s, dir, name).getOrElse(T(s, dir, name).count())
 
   /** `df` with the chunk-salting columns of a salted self-join over
     * `keys`: `nsalt`, the number of chunks each key's rows split into,
@@ -903,9 +845,10 @@ object Pipeline {
   /** d20's cluster labeling `(doc_id, root, cluster_size)`, root = the
     * component's minimum doc_id, shared so the d142 purity audit
     * provably reads the SAME components the d20 entry certifies.
-    * Registry-persisted, so d4's pair generation runs once per entry. */
+    * Pinned once, so every consumer inside the entry that builds it
+    * reads one run of d4's pair generation. */
   private[graft] def d20Components(s: SparkSession, dir: String): DataFrame =
-    cachedHelper(s, dir, "d20Components")(d20ComponentsPlan(s, dir))
+    pinOnce(d20ComponentsPlan(s, dir))
 
   /** Connected components of the [[d4Pairs]] edges by one `union_find`
     * aggregate per (lang, [[lenBucket]]) block. Exact because d4's
@@ -923,7 +866,6 @@ object Pipeline {
       .groupBy("lang", "len_bucket")
       .agg(expr("union_find(doc_a, doc_b)").as("comp"))
       .selectExpr("inline(comp) AS (doc_id, root, cluster_size)")
-    // persisted by the cachedHelper registry, not here
   }
 
   /** d112's shared exact two-stage top-20 rank over a
@@ -1329,8 +1271,8 @@ object Pipeline {
     // band join carries its own explicit wn bound (see below) because the
     // rule can only guard predicates that contain the kernel itself.
     "d15_jaccard_lsh" -> { (s, dir) =>
-      val w = collapsedWordSets(s, dir) // registry-persisted token pass
-      val reps = cachedHelper(s, dir, "d15Reps")(repsOf(w)) // banding, dim, membership
+      val w = collapsedWordSets(s, dir) // pinned token pass
+      val reps = pinOnce(repsOf(w)) // banding, dim, membership
       // wn (one int per row) rides the band shuffle so the J ≥ 0.8 size
       // bound prunes collisions BEFORE the kernel stages: the
       // JaccardPrefilter rule can only guard the kernel filter below, not
@@ -1359,10 +1301,8 @@ object Pipeline {
       // wset payload — and posexplode per side from the pin. Rep-count-
       // sized (≈ collapsed docs), orders lighter than the reps pin that
       // carries the full word sets.
-      val sig = cachedHelper(s, dir, "d15BandKeys") {
-        reps.select(col("rep_id"), size(col("wset")).as("wn"),
-          expr("minhash_bands(wset, 16)").as("keys"))
-      }
+      val sig = pinOnce(reps.select(col("rep_id"), size(col("wset")).as("wn"),
+        expr("minhash_bands(wset, 16)").as("keys")))
       val banded = sig.select(col("rep_id"), col("wn"), col("keys"),
           posexplode(col("keys")).as(Seq("bpos", "key")))
       val a = banded.select(col("key"), col("rep_id").as("r_a"), col("wn").as("wn_a"),
@@ -1388,10 +1328,9 @@ object Pipeline {
       // of struct overhead + token bytes; the hint flips off past
       // 256 MB. The id-only membership map is 16 B/row, so its gate
       // stays a row count.
-      val dimBytes = cachedCount(s, dir, "d15DimBytes")(
-        reps.agg(coalesce(sum(expr(
+      val dimBytes = reps.agg(coalesce(sum(expr(
           "aggregate(wset, 16L, (acc, x) -> acc + length(x) + 16L)")), lit(0L)))
-          .head().getLong(0))
+        .head().getLong(0)
       val repDim = reps.select(col("rep_id"), col("wset"))
       val dim = if (dimBytes <= (256L << 20)) broadcast(repDim) else repDim
       // Bail kernel (round 13, verdict task 2): the merge aborts with
@@ -1445,7 +1384,7 @@ object Pipeline {
       // distinct. One token pass computes signature AND band keys;
       // tokens never shuffle anywhere; how signatures reach the kernel
       // is corpus-adaptive (see below).
-      val w = collapsedWordSets(s, dir) // registry-persisted token pass
+      val w = collapsedWordSets(s, dir) // pinned token pass
       val reps = repsOf(w)
       // Signature components TRUNCATED to their low 16 bits and packed
       // four per long for the estimate path (round 13, verdict task 1
@@ -1461,11 +1400,9 @@ object Pipeline {
       // scale tail). Packing happens inside minhash_sig16 — a SQL
       // transform over minhash_sig would re-evaluate the signature per
       // packed element under CollapseProject (the round-1 lesson).
-      val base = cachedHelper(s, dir, "d23Base") {
-        reps.select(col("gid"), col("rep_id"),
-          expr("minhash_sig16(wset)").as("sig"),
-          expr("minhash_bands(wset, 16)").as("keys"))
-      }
+      val base = pinOnce(reps.select(col("gid"), col("rep_id"),
+        expr("minhash_sig16(wset)").as("sig"),
+        expr("minhash_bands(wset, 16)").as("keys")))
       // Adaptive sig strategy, round-12 SECOND cut. First cut (the d15
       // fix verbatim: broadcast the sig dim below a rep cap, id-keyed
       // equi joins past it) CRASHED the sf10 probe — flipped to shuffle
@@ -1487,7 +1424,7 @@ object Pipeline {
       // without counting the reps; they are counted only past the cap.
       val sigCap = s.conf.get("graft.d23.sigBroadcastCap", "100000").toLong
       val saltCap = s.conf.get("graft.lsh.saltCap", "2000").toInt
-      lazy val nRepsD23 = cachedCount(s, dir, "d23NReps")(base.count())
+      lazy val nRepsD23 = base.count()
       val repPairs = (if (tableRows(s, dir, "documents") <= sigCap || nRepsD23 <= sigCap) {
         val banded = base.select(col("rep_id"), explode(col("keys")).as("key"))
         val a = banded.select(col("key"), col("rep_id").as("r_a"))
@@ -1695,31 +1632,9 @@ object Pipeline {
       // The loop runs on the caller's session at its shuffle width. The
       // edge set is checkpointed eagerly, so the LSH candidate build
       // runs once and every round reads the checkpoint.
-      // Per-partition PRE-CONTRACTION (round 16, guide §2.2 — cut
-      // rounds × shuffled edges): each distinct-output partition's
-      // edges are replaced by their local union-find (node →
-      // local-min-root) spanning links before the global rounds run.
-      // Connectivity- and node-set-preserving by construction (every
-      // edge endpoint survives as a label's node or as a local root on
-      // the right-hand side), so the star-contraction fixpoint forest —
-      // and with it the labeling — is bit-identical; the rounds just
-      // start from locally-contracted stars: fewer rounds, fewer edges
-      // per round. Rides the same eager checkpoint materialization
-      // (zero extra jobs; at 100 TB this is a map-side pass over the
-      // edge build's output partitions).
-      val preContract = (it: Iterator[(Long, Long)]) => {
-        val uf = new graft.expressions.UnionFind
-        it.foreach { case (u, v) => uf.union(u, v) }
-        uf.labels.iterator.filter { case (n, r) => n != r }
-      }
-      var cur = {
-        import s.implicits._
-        lshScoredPairs(s, dir).filter(col("cos_sim") >= thr)
-          .select(col("id_b").as("u"), col("id_a").as("v")) // id_a < id_b
-          .distinct().as[(Long, Long)]
-          .mapPartitions(preContract)
-          .toDF("u", "v").localCheckpoint(true)
-      }
+      var cur = lshScoredPairs(s, dir).filter(col("cos_sim") >= thr)
+        .select(col("id_b").as("u"), col("id_a").as("v")) // id_a < id_b
+        .distinct().localCheckpoint(true)
       var converged = false
       var rounds = 0
       // fixpoint via one-row edge-set signatures: (count, xor of
@@ -4554,7 +4469,7 @@ object Pipeline {
     // rep; every join is equi (pair ids, rep ids, band keys) — the
     // eval costs a constant factor of the dedup run it audits.
     "d85_lsh_recall" -> { (s, dir) =>
-      val w = collapsedWordSets(s, dir) // registry-persisted token pass
+      val w = collapsedWordSets(s, dir) // pinned token pass
       val reps = repsOf(w)
         .transform(pinOnce) // band keys + nothing else re-derives signatures
       val keys = reps.select(col("rep_id"),
@@ -5129,7 +5044,7 @@ object Pipeline {
     // round); the kNN frame persists once; rounds are fixed at 3, so
     // the lineage stays bounded (the d55 lesson at component scale).
     "d97_label_propagation" -> { (s, dir) =>
-      // every propagation round reads the one registry-cached edge list
+      // every propagation round reads the edge list pinned once here
       val knn = lshKnnEdges(s, dir)
       var st = T(s, dir, "embeddings").select(
         col("vec_id"), col("label").as("true_label"),
@@ -5247,7 +5162,7 @@ object Pipeline {
     // the d55/d97 iteration shape; the edge list and the degree
     // spine persist once; state rows are (id, two ints).
     "d99_pagerank" -> { (s, dir) =>
-      // degrees + every round read the one registry-cached edge list
+      // degrees + every round read the edge list pinned once here
       val knn = lshKnnEdges(s, dir)
       val outd = knn.groupBy("vec_id").agg(count(lit(1)).as("outdeg"))
       val ind = knn.groupBy("nid").agg(count(lit(1)).as("in_deg"))
@@ -7370,10 +7285,10 @@ object Pipeline {
     "d146_lsh_capacity" -> { (s, dir) =>
       val bits = adaptiveBits(tableRows(s, dir, "embeddings"),
         s.conf.get("graft.lsh.occupancy", LshOccupancy.toString).toLong)
-      // the audit reads the SAME registry-persisted occupancy table
-      // the engine's pre-gate and salting broadcast consume (round 13)
-      // — the "measure what the job will actually see" contract, now
-      // literal, and near-free when a d13/d54/d55 run already seeded it
+      // the audit reads the occupancy table the engine's pre-gate and
+      // salting broadcast build (lshBktSizes, same width) — the
+      // "measure what the job will actually see" contract, literal;
+      // like every helper, this entry builds its own copy
       val occ = lshBktSizes(s, dir, bits)
       occ.withColumn("occ_b", expr("cast(length(bin(bkt_n)) - 1 as int)"))
         .groupBy("occ_b").agg(

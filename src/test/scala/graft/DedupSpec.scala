@@ -308,7 +308,7 @@ class DedupSpec extends SparkSpecBase {
 
   test("d20: a corpus dir rewritten between entries is read afresh") {
     // Run as Verify runs entries: through runEntry, whose cleanup
-    // empties the helper registry, so the d20 labeling built over the
+    // drops every pinned frame, so the d20 labeling pinned over the
     // first corpus is not served for the second.
     import spark.implicits._
     def corpus(tag: String, n: Int, nDup: Int): DataFrame = {
@@ -736,12 +736,10 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("registry: nested helper builds run (d99 as the FIRST family query on a fresh corpus)") {
-    // r12 sf10 probe regression: lshKnnEdges builds inside the session
-    // registry by calling lshScoredPairs — itself registry-cached — and
-    // a nested ConcurrentHashMap.computeIfAbsent threw "Recursive
-    // update" whenever d97/d99 ran before any other lshScoredPairs
-    // consumer had seeded the inner entry. This corpus dir is FRESH, so
-    // the nested build is exercised unseeded.
+    // d99 is the only LSH consumer here, so its helpers build nested
+    // and cold: lshKnnEdges pins its frame over lshScoredPairs, which
+    // pins its own. This corpus dir is FRESH, so nothing is cached
+    // before the nested build.
     val dir = scratch("nested-helper-emb")
     import spark.implicits._
     val rnd = new scala.util.Random(23)

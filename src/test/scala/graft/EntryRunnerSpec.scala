@@ -12,7 +12,8 @@ import scala.concurrent.duration._
 /** `GraftSession.runEntry`: the one per-entry runner Bench, Verify and
   * Sweep share. A timed-out entry is stopped before the cleanup runs,
   * a failure carries its message, and the cleanup leaves the session
-  * as the factory built it. */
+  * as the factory built it. No query module keeps state of its own
+  * that the cleanup would have to reset. */
 class EntryRunnerSpec extends SparkSpecBase {
 
   private val shufflePartitions = "spark.sql.shuffle.partitions"
@@ -81,26 +82,52 @@ class EntryRunnerSpec extends SparkSpecBase {
     assert(outcome == Outcome.Failed("entry body gave up"))
   }
 
-  test("the cleanup re-pins the shuffle width and drops persisted frames and memoized counts") {
-    val dir = "entry-runner-spec"
-    var computed = 0
-    def memoCount(): Long = Pipeline.cachedCount(spark, dir, "n") { computed += 1; 7L }
+  test("the cleanup re-pins the shuffle width and drops persisted frames") {
     val df = spark.range(100).selectExpr("id % 7 as k")
-    var helpers = Seq.empty[DataFrame]
     val outcome = GraftSession.runEntry(spark, "conf_leak", 30) {
       spark.conf.set(shufflePartitions, "1")
       df.persist().count()
-      memoCount()
-      helpers = Seq.fill(2)(Pipeline.d20Components(spark, sfTiny))
     }
     assert(outcome.isInstanceOf[Outcome.Done])
     assert(spark.conf.get(shufflePartitions) == "4")
     assert(df.storageLevel == StorageLevel.NONE)
-    memoCount()
-    assert(computed == 2, "a count memoized inside the entry survived its cleanup")
-    assert(helpers(0) eq helpers(1), "one entry built the d20 labeling twice")
-    assert(!(Pipeline.d20Components(spark, sfTiny) eq helpers(0)),
-      "a helper frame built inside the entry survived its cleanup")
+  }
+
+  test("two builds of one helper inside an entry share one cached-data entry") {
+    // Each call builds its frame anew; the CacheManager matches the
+    // second build's plan to the first one's pin.
+    val cacheManager = spark.sharedState.cacheManager
+    var helpers = Seq.empty[DataFrame]
+    val outcome = GraftSession.runEntry(spark, "d20_twice", 120) {
+      helpers = Seq.fill(2)(Pipeline.d20Components(spark, sfTiny))
+      val cached = helpers.map(h =>
+        cacheManager.lookupCachedData(h.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]))
+      assert(cached.forall(_.isDefined), "a d20 labeling build is not pinned")
+      assert(cached(0).get eq cached(1).get, "two d20 builds hold two cached-data entries")
+    }
+    assert(outcome.isInstanceOf[Outcome.Done], outcome.toString)
+    assert(helpers.forall(_.storageLevel == StorageLevel.NONE),
+      "a helper frame pinned inside the entry survived its cleanup")
+  }
+
+  test("the query modules hold no mutable collection that could outlive an entry") {
+    // An object-level map or set keyed by session or corpus is state
+    // that every runner would have to reset between entries.
+    def mutableCollection(t: Class[_]): Boolean =
+      classOf[java.util.Map[_, _]].isAssignableFrom(t) ||
+        classOf[java.util.Set[_]].isAssignableFrom(t) ||
+        t.getName.startsWith("scala.collection.mutable.")
+    val modules = Seq(graft.queries.Pipeline, graft.queries.Relational,
+      graft.queries.Events, graft.queries.Sources, graft.streaming.StreamingOps)
+    val offending = for {
+      m <- modules
+      f <- m.getClass.getDeclaredFields.toSeq
+      if mutableCollection(f.getType) || {
+        f.setAccessible(true)
+        Option(f.get(m)).exists(v => mutableCollection(v.getClass))
+      }
+    } yield s"${m.getClass.getName}.${f.getName}: ${f.getType.getName}"
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 
   test("the late-job listener skips jobs started outside any job group") {

@@ -84,7 +84,6 @@ class ExtensionsSpec extends SparkSpecBase {
       val want = SparkEntry.queries(name)(spark, sfTiny).collect().toSeq
       assert(got.nonEmpty && got == want, name)
       spark.catalog.clearCache()
-      graft.queries.Pipeline.resetScalarCaches()
     }
   }
 

@@ -139,7 +139,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("d20: one union_find aggregate labels the blocks, with no typed regroup") {
-    // the labeling is the registry-persisted union_find aggregate; no
+    // the labeling is the pinned union_find aggregate; no
     // typed Dataset step (AppendColumns → MapGroups / CoGroup) regroups
     // rows, and the cluster sizes come out of the aggregate, not from a
     // size aggregate joined back
@@ -1847,26 +1847,7 @@ class PlanAuditSpec extends SparkSpecBase {
       s"d145's keeper and source joins must stay equi:\n$p")
   }
 
-  test("bench purity: resetScalarCaches makes consecutive bench-style invocations both pay the count") {
-    // round 16, verdict #7: Bench's per-query cleanup (clearCache +
-    // resetScalarCaches) must leave NO memoized scalar behind — the
-    // count() a family's first query pays must be re-paid by the next
-    // query's timed window, not skipped via a JVM-lifetime long.
-    var computePaid = 0
-    def benchStyleInvocation(): Long =
-      Pipeline.cachedCount(spark, sfTiny, "planaudit-purity-probe") {
-        computePaid += 1; 42L
-      }
-    Pipeline.resetScalarCaches()
-    assert(benchStyleInvocation() == 42L && computePaid == 1)
-    assert(benchStyleInvocation() == 42L && computePaid == 1,
-      "within one query the scalar memoizes (that part is fine)")
-    Pipeline.resetScalarCaches() // what Bench now runs between queries
-    assert(benchStyleInvocation() == 42L && computePaid == 2,
-      "after the per-query reset the next invocation must re-pay the count")
-  }
-
-  test("registry-backed plans do not depend on the entry planned before them") {
+  test("helper plans do not depend on the entry planned before them") {
     // Each entry is planned through runEntry, whose cleanup runs between
     // entries as in Verify and Explain. Each pair gets a fresh corpus
     // dir, so the first plan of `entry` is one with nothing before it.

@@ -138,7 +138,6 @@ class RegroupFreeSpec extends SparkSpecBase {
     val pairs = Pipeline.queries("d4_ngram_jaccard")(spark, chainBlockDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     spark.catalog.clearCache()
-    Pipeline.resetScalarCaches()
     assert(pairs.length == 52 * 49, s"${pairs.length} pairs")
     val want = refLabels(0L until 2600L, pairs)
     val sizes = want.values.groupBy(identity).map { case (r, v) => r -> v.size.toLong }
@@ -156,7 +155,6 @@ class RegroupFreeSpec extends SparkSpecBase {
       val jobs = jobsStarted(Pipeline.queries(name)(spark, sfTiny).collect())
       assert(jobs <= most, s"$name: $jobs jobs")
       spark.catalog.clearCache()
-      Pipeline.resetScalarCaches()
     }
   }
 }

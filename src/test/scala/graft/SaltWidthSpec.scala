@@ -16,10 +16,7 @@ import java.nio.file.Files
   * and 500 embeddings, under both saltCap defaults (2000). */
 class SaltWidthSpec extends SparkSpecBase {
 
-  private def endEntry(): Unit = {
-    spark.catalog.clearCache()
-    Pipeline.resetScalarCaches()
-  }
+  private def endEntry(): Unit = spark.catalog.clearCache()
 
   private def rows(name: String, dir: String): Seq[Row] = {
     val out = Pipeline.queries(name)(spark, dir).collect().toSeq

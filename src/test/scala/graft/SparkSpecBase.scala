@@ -26,13 +26,10 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = TestSpark.spark
 
   /** Every test ends the way `GraftSession.runEntry` ends an entry, so
-    * no test sees persisted frames, helper frames or memoized counts an
-    * earlier test left behind. */
+    * no test sees persisted frames an earlier test left behind. */
   override def afterEach(): Unit =
-    try {
-      spark.catalog.clearCache()
-      graft.queries.Pipeline.resetScalarCaches()
-    } finally super.afterEach()
+    try spark.catalog.clearCache()
+    finally super.afterEach()
   /** Spark jobs that `body` starts on this thread, counted by job group
     * with an `onJobStart` listener. */
   def jobsStarted(body: => Unit): Int = {
